@@ -5,8 +5,7 @@ measurement) but runs them one at a time with:
 
   * per-query job descriptions (guide §1.5),
   * warm + N timed passes (same steady-state methodology as bench.py),
-  * optional .explain("formatted") capture to plans/r06/<q>_<tag>.txt,
-  * optional SPT_KNN_DEBUG pass-through for knn_join sweep timings.
+  * optional .explain("formatted") capture to plans/r06/<q>_<tag>.txt.
 
 Usage:
   python bench_extra.py --only knn_join --sf1 --passes 2 --explain before

@@ -33,7 +33,7 @@ N_CLUMP = int(os.environ.get("KNN_PROBE_CLUMP", "10000"))
 # candidate join holds one N_RESID^2-pair key REGARDLESS of probe level;
 # auto salting splits that single task into ceil(count/SALT_TARGET)
 # salt tasks (right rows hashed, left rows replicated) — the regime
-# the salt_residual auto-enable targets.
+# the auto_levels residual salting targets.
 N_RESID = int(os.environ.get("KNN_PROBE_RESID", "12000"))
 RESID_R = 1e-5       # deg half-width (~0.04 arcsec: no cell straddle)
 # 0.05-deg half-width: the whole clump fits in ~one level-7 cell, so a
@@ -86,22 +86,32 @@ def resid_sky(spark):
     return field.unionByName(resid).localCheckpoint(eager=True)
 
 
-def run(tag: str, sky_fn=None, **kw):
+def run(tag: str, sky_fn=None, consts=None, **kw):
+    """One isolated knn_join run; ``consts`` overrides knn.py module
+    constants (e.g. RESIDUAL_HOT) for this run only."""
     from spatialindex_spark.operators import knn as knn_mod
     from spatialindex_spark.operators.knn import knn_join
 
+    consts = consts or {}
+    saved = {name: getattr(knn_mod, name) for name in consts}
     spark = get_session(tag)
-    pts = (sky_fn or sky)(spark)
-    t0 = time.perf_counter()
-    out = knn_join(pts, pts, k=K, left_id="pid", right_id="pid",
-                   exclude_self=True, on_starved="exact", **kw)
-    agg = out.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.pmod(F.xxhash64(F.col("pid_l"), F.col("pid_r"),
-                                F.col("knn_rank")),
-                     F.lit(10 ** 9))).alias("chk")).collect()[0]
-    secs = time.perf_counter() - t0
-    spark.stop()
+    try:
+        for name, value in consts.items():
+            setattr(knn_mod, name, value)
+        pts = (sky_fn or sky)(spark)
+        t0 = time.perf_counter()
+        out = knn_join(pts, pts, k=K, left_id="pid", right_id="pid",
+                       exclude_self=True, on_starved="exact", **kw)
+        agg = out.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.pmod(F.xxhash64(F.col("pid_l"), F.col("pid_r"),
+                                    F.col("knn_rank")),
+                         F.lit(10 ** 9))).alias("chk")).collect()[0]
+        secs = time.perf_counter() - t0
+    finally:
+        for name, value in saved.items():
+            setattr(knn_mod, name, value)
+        spark.stop()
     return {"config": tag, "secs": round(secs, 2),
             "rows": agg["n"], "checksum": int(agg["chk"]),
             "salted_cells": knn_mod._DECISIONS.get("salted_cells")}
@@ -122,12 +132,6 @@ def main():
         results = [
             run("auto_levels", level=8, auto_levels=True),
             run("fixed_ladder", level=FIXED_LEVELS[0], levels=FIXED_LEVELS),
-            # the opt-in per-cell partial top-k: caps the hot cell's
-            # contribution to the global rank at k rows per (lid, cell) —
-            # the mitigation available when a fixed ladder must face a
-            # clump (auto_levels makes it unnecessary by probing finer)
-            run("fixed_ladder_partial_topk", level=FIXED_LEVELS[0],
-                levels=FIXED_LEVELS, partial_topk=True),
         ]
         assert all(r["rows"] == K * (N_FIELD + N_CLUMP) for r in results)
         assert len({r["checksum"] for r in results}) == 1, \
@@ -143,26 +147,16 @@ def main():
         })
 
     if mode in ("all", "resid", "resid_big"):
-        # PAST the drill-down caps: the clump fits one max_fine_level
+        # PAST the drill-down caps: the clump fits one MAX_FINE_LEVEL
         # cell, so no probe level can split its join key. A/B the auto
-        # residual salting (should self-enable) against it forced off,
-        # plus the rejected alternative (partial_topk on the unsalted
-        # plan — its zero-Exchange groupBy serializes INSIDE the hot
-        # join task, measured 150 s vs 98 s unsalted on this fixture).
+        # residual salting (should self-enable) against it switched off
+        # by a RESIDUAL_HOT no cell reaches.
         resid = [
             run("resid_salted_auto", sky_fn=resid_sky, level=8,
                 auto_levels=True),
             run("resid_unsalted", sky_fn=resid_sky, level=8,
-                auto_levels=True, salt_residual=False),
+                auto_levels=True, consts={"RESIDUAL_HOT": 10 ** 12}),
         ]
-        # the rejected alternative is expensive at large N_RESID (its
-        # collect_list serializes inside the one hot task) — opt out
-        # with KNN_PROBE_RESID_PARTIAL=0
-        if os.environ.get("KNN_PROBE_RESID_PARTIAL", "1") != "0":
-            resid.append(
-                run("resid_unsalted_partial_topk", sky_fn=resid_sky,
-                    level=8, auto_levels=True, salt_residual=False,
-                    partial_topk=True))
         assert all(r["rows"] == K * (N_FIELD + N_RESID) for r in resid)
         assert len({r["checksum"] for r in resid}) == 1, \
             "residual configs disagree on the result"

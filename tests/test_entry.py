@@ -16,7 +16,8 @@ TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
 
 SUBSET = ["cone_htm", "cone_hpx", "polygon_htm", "region_join", "knn",
-          "exact_dedup", "token_count", "events_window"]
+          "knn_join", "knn_join_auto", "exact_dedup", "token_count",
+          "events_window"]
 
 
 @pytest.fixture(scope="module")

@@ -446,6 +446,52 @@ def test_knn_join_auto_levels(spark):
                  left_id="pid", right_id="pid")
 
 
+def test_knn_join_null_coordinates(spark):
+    """A row with a null or NaN ra/dec has no position: as a left row it
+    produces no output rows, as a right row it is never a candidate. Both
+    ladder modes return the brute-force top-k over the positioned rows."""
+    import numpy as np
+    import pandas as pd
+
+    from spatialindex_spark.operators.knn import knn_join
+
+    rng = np.random.default_rng(7)
+    n_d, n_s = 500, 150
+    ra = np.concatenate([40.0 + rng.uniform(-0.25, 0.25, n_d),
+                         rng.uniform(0, 60, n_s)])
+    dec = np.concatenate([10.0 + rng.uniform(-0.25, 0.25, n_d),
+                          rng.uniform(-30, 30, n_s)])
+    pdf = pd.DataFrame({"pid": np.arange(n_d + n_s, dtype=np.int64),
+                        "ra": ra, "dec": dec})
+    null = F.lit(None).cast("double")
+    pts = (spark.createDataFrame(pdf)
+           .withColumns({
+               "ra": F.when(F.col("pid").isin(3, 520), null)
+               .when(F.col("pid") == 42, F.lit(float("nan")))
+               .otherwise(F.col("ra")),
+               "dec": F.when(F.col("pid") == 510, null)
+               .otherwise(F.col("dec"))})
+           .localCheckpoint(eager=True))
+
+    ok = np.setdiff1d(np.arange(n_d + n_s), [3, 42, 510, 520])
+    rar, decr = np.radians(ra[ok]), np.radians(dec[ok])
+    xyz = np.stack([np.cos(rar) * np.cos(decr), np.sin(rar) * np.cos(decr),
+                    np.sin(decr)], axis=1)
+    neg_dot = -(xyz @ xyz.T)
+    np.fill_diagonal(neg_dot, np.inf)
+    want = {}
+    for i in range(len(ok)):
+        for rk, j in enumerate(np.lexsort((ok, neg_dot[i]))[:3], 1):
+            want[(int(ok[i]), rk)] = int(ok[j])
+
+    for kw in ({"auto_levels": True}, {"level": 6, "levels": (6, 4, 2, 0)}):
+        got = {(r.pid_l, r.knn_rank): r.pid_r for r in
+               knn_join(pts, pts, k=3, left_id="pid", right_id="pid",
+                        exclude_self=True, on_starved="exact", **kw)
+               .collect()}
+        assert got == want, kw
+
+
 def test_knn_join_rung_folding_identical(spark, monkeypatch):
     """Sparse-rung folding (pass-count economics: a tail rung folds into
     the next outstanding pass when its bounded pair cost is cheaper than
@@ -455,6 +501,7 @@ def test_knn_join_rung_folding_identical(spark, monkeypatch):
     import numpy as np
     import pandas as pd
 
+    from spatialindex_spark.operators import knn as knn_mod
     from spatialindex_spark.operators.knn import knn_join
 
     rng = np.random.default_rng(19)
@@ -474,41 +521,11 @@ def test_knn_join_rung_folding_identical(spark, monkeypatch):
                          left_id="pid", right_id="pid",
                          exclude_self=True, on_starved="exact").collect()}
 
-    monkeypatch.setenv("SPT_KNN_MERGE_PAIR_BUDGET", "0")
-    off = run()
-    monkeypatch.delenv("SPT_KNN_MERGE_PAIR_BUDGET")
+    with monkeypatch.context() as m:
+        m.setattr(knn_mod, "MERGE_PAIR_BUDGET", 0)
+        off = run()
     on = run()
     assert on == off and len(on) == 3 * 520
-
-
-def test_knn_join_auto_levels_partial_topk_identical(spark):
-    """The sweep's partial_topk branch (per-branch _reduce_partial
-    unioned into one global rank) on the auto_levels path — previously
-    only the fixed-ladder partial path was end-to-end tested. Same
-    clumped sky, partial ON vs OFF: identical (pid_l, rank) -> pid_r."""
-    import numpy as np
-    import pandas as pd
-
-    from spatialindex_spark.operators.knn import knn_join
-
-    rng = np.random.default_rng(23)
-    ra = np.concatenate([120.0 + rng.uniform(-0.1, 0.1, 400),
-                         rng.uniform(100, 140, 120)])
-    dec = np.concatenate([-5.0 + rng.uniform(-0.1, 0.1, 400),
-                          rng.uniform(-25, 15, 120)])
-    pdf = pd.DataFrame({"pid": np.arange(520, dtype=np.int64),
-                        "ra": ra, "dec": dec})
-    pts = spark.createDataFrame(pdf).localCheckpoint(eager=True)
-
-    def run(partial):
-        return {(r.pid_l, r.knn_rank): r.pid_r for r in
-                knn_join(pts, pts, k=3, auto_levels=True,
-                         left_id="pid", right_id="pid",
-                         exclude_self=True, partial_topk=partial,
-                         on_starved="exact").collect()}
-
-    full, part = run(False), run(True)
-    assert part == full and len(part) == 3 * 520
 
 
 def test_iceberg_compaction_snapshot(spark, tmp_path):

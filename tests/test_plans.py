@@ -155,18 +155,31 @@ def test_cell_equijoin_is_sort_merge_for_large_sides(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_knn_join_plan_no_big_broadcast(spark):
+def test_knn_join_plan_no_big_broadcast(spark, monkeypatch):
     """knn_join's promise at 100 TB: the candidate join is a SHUFFLED
     equi-join (never a broadcast of either big table — with broadcast
-    disabled the plan must still be SortMergeJoin/ShuffledHashJoin, no
-    nested loop, no cartesian), and with ingest-time cell columns at a
-    JVM ring level the whole plan is free of Python evals."""
+    disabled it must still be SortMergeJoin/ShuffledHashJoin, no nested
+    loop, no cartesian), and with ingest-time cell columns at a JVM ring
+    level the whole plan is free of Python evals. Each sweep's candidate
+    join runs inside an eager localCheckpoint, so the executed plan of
+    every checkpointed frame is recorded and checked, not only the
+    final one."""
     from spatialindex_spark.operators.knn import knn_join
     from spatialindex_spark.sources.images import synth_images_indexed
 
     img = (synth_images_indexed(spark, 600, level=7, systems=("htm", "hpx"))
            .select("image_id", "ra", "dec", "hpx7")
            .localCheckpoint(eager=True))
+    plans = []
+    frame_cls = type(img)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -174,16 +187,22 @@ def test_knn_join_plan_no_big_broadcast(spark):
                        left_id="image_id", right_id="image_id",
                        cell_col="hpx7", cell_level=7,
                        exclude_self=True, on_starved="exact")
-        plan = out._jdf.queryExecution().executedPlan().toString()
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan[:1500]
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the only broadcast is the (pix -> ring) map, which is explicitly
-    # hinted; zero Python in the whole plan (cell path, lvl <= 8)
-    assert "ArrowEvalPython" not in plan, plan[:2000]
-    assert "BatchEvalPython" not in plan
+    # the candidate joins: the plans that explode the ring map's cells
+    cand = [p for p in plans if "_ring" in p]
+    assert cand, plans
+    for plan in cand:
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, \
+            plan[:1500]
+    for plan in plans:
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        # the only big-side broadcast is the (pix -> ring) map, which is
+        # explicitly hinted; zero Python anywhere (cell path, lvl <= 8)
+        assert "ArrowEvalPython" not in plan, plan[:2000]
+        assert "BatchEvalPython" not in plan
 
 
 def test_minhash_verify_stage_never_shuffles_text(spark):

@@ -1,6 +1,6 @@
 """Time-domain operators: tracklets and lightcurves vs numpy/pandas brute
-force, anti_crossmatch complement identity, and the knn_join partial
-top-k plan shape (single Exchange between candidate join and rank)."""
+force, anti_crossmatch complement identity, and knn_join's rank plan
+shape, residual salting and density drill-down."""
 
 import math
 
@@ -192,34 +192,6 @@ def test_stream_transients_matches_batch(spark, tmp_path):
     assert got == {1000 + i for i in range(60) if i % 2}
 
 
-def test_partial_topk_groupby_reuses_join_partitioning(spark):
-    """The mechanism knn_join's per-cell partial top-k relies on: a
-    groupBy(_mc, _lid) directly after an equi-join on _mc must add ZERO
-    Exchange (HashPartitioning on _mc satisfies the (_mc, _lid)
-    clustering) — the executed plan holds exactly the join's own two
-    shuffles."""
-    a = (spark.range(1000)
-         .select((F.col("id") % 97).alias("_mc"),
-                 (F.col("id") % 7).alias("_lid")))
-    b = (spark.range(5000)
-         .select((F.col("id") % 97).alias("_mc"),
-                 F.col("id").alias("_rid")))
-    # disable broadcast so the join hash-partitions both sides on _mc
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        per = (a.join(b, "_mc")
-               .groupBy("_mc", "_lid")
-               .agg(F.count(F.lit(1)).alias("n")))
-        per.collect()
-        plan = per._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    # AQE's toString appends the pre-adaptive "Initial Plan" — count
-    # shuffles in the final plan only (AQEShuffleRead reuses, not adds)
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 2, plan
-
-
 def test_rank_window_partial_group_limit(spark):
     """The mechanism that keeps knn_join's rank exchange at O(k * rows)
     whatever the candidate count (salted or not): Spark plans a
@@ -249,9 +221,9 @@ def test_rank_window_partial_group_limit(spark):
     assert "WindowGroupLimit" in tail and "Partial" in tail, plan
 
 
-def test_knn_join_partial_topk_correct(spark):
-    """End-to-end knn_join after the partial top-k restructuring: exactly
-    k rows per left row and rank-1 matches brute force."""
+def test_knn_join_fixed_ladder_cell_path_correct(spark):
+    """knn_join on a fixed (2, 0) ladder keyed by the ingest cell column:
+    exactly k rows per left row and rank-1 matches brute force."""
     from spatialindex_spark.operators.knn import knn_join
 
     rng = np.random.default_rng(5)
@@ -264,8 +236,7 @@ def test_knn_join_partial_topk_correct(spark):
     out = knn_join(df, df, k=2, level=2, levels=(2, 0),
                    left_id="pid", right_id="pid",
                    cell_col="hpx7", cell_level=7,
-                   exclude_self=True, partial_topk=True,
-                   on_starved="exact")
+                   exclude_self=True, on_starved="exact")
     assert out.count() == 2 * 4000
     sep = _sep_deg(ra[:50, None], dec[:50, None], ra[None, :], dec[None, :])
     np.fill_diagonal(sep[:, :50], np.inf)
@@ -278,24 +249,13 @@ def test_knn_join_partial_topk_correct(spark):
         assert got[i] == want_first[i]
 
 
-def test_knn_join_residual_salting(spark, monkeypatch):
-    """salt_residual=None (auto) salts ONLY for a residual extreme key:
-    a clump inside ONE max_fine_level cell that the density drill-down
-    cannot split further. A uniform sky stays unsalted, and the salted
-    result equals salt_residual=False bit-for-bit."""
+def _resid_sky(spark):
+    """3000 rows over the sphere plus 500 inside ~0.07 arcsec: ONE
+    level-16 cell (no straddle), which no probe level can split."""
     from spatialindex_spark.functions.udfs import hpx_udf
-    from spatialindex_spark.operators import knn as knn_mod
-    from spatialindex_spark.operators.knn import knn_join
 
-    # the test threshold must stay >= the drill-down's REFINE_CNT (192):
-    # a real residual key (default threshold 4000) always drills to the
-    # finest rung because its ancestor counts dominate every refine
-    # filter on the way down — the detection inspects the finest grid
-    monkeypatch.setenv("SPT_KNN_RESIDUAL_HOT", "300")
-    monkeypatch.setenv("SPT_KNN_SALT_TARGET", "100")  # -> S = 5
     rng = np.random.default_rng(7)
     ra, dec = _sky(rng, 3000)
-    # 500 rows inside ~0.07 arcsec: ONE level-16 cell (no straddle)
     n_r = 500
     ra_r = 40.0 + (rng.random(n_r) * 2 - 1) * 1e-5
     dec_r = 10.0 + (rng.random(n_r) * 2 - 1) * 1e-5
@@ -303,43 +263,89 @@ def test_knn_join_residual_salting(spark, monkeypatch):
         "pid": np.arange(3000 + n_r),
         "ra": np.concatenate([ra, ra_r]),
         "dec": np.concatenate([dec, dec_r])}))
-    df = df.withColumn("hpx7", hpx_udf(7)(F.col("ra"), F.col("dec"))) \
-           .localCheckpoint(eager=True)
+    return (df.withColumn("hpx7", hpx_udf(7)(F.col("ra"), F.col("dec")))
+            .localCheckpoint(eager=True))
 
-    # explicit salting without the drill-down has no detection source:
-    # loud raise, never a silent unsalted hot join
-    import pytest
-    with pytest.raises(ValueError, match="salt_residual"):
-        knn_mod.knn_join(df, df, k=2, levels=(2, 0), left_id="pid",
-                         right_id="pid", cell_col="hpx7", cell_level=7,
-                         salt_residual=True)
 
-    def run(sr):
-        out = knn_join(df, df, k=2, level=8, auto_levels=True,
-                       left_id="pid", right_id="pid",
-                       cell_col="hpx7", cell_level=7,
-                       exclude_self=True, salt_residual=sr,
-                       on_starved="exact")
-        rows = sorted((r.pid_l, r.pid_r, r.knn_rank) for r in out.collect())
-        return rows, knn_mod._DECISIONS["salted_cells"]
+def _knn_resid(df):
+    from spatialindex_spark.operators import knn as knn_mod
 
-    auto_rows, auto_cells = run(None)
-    assert auto_cells >= 1           # residual key detected -> salted
-    off_rows, off_cells = run(False)
-    assert off_cells == 0            # explicit False is never overridden
-    assert auto_rows == off_rows     # identical result either way
-    assert len(auto_rows) == 2 * (3000 + n_r)
+    out = knn_mod.knn_join(df, df, k=2, level=8, auto_levels=True,
+                           left_id="pid", right_id="pid",
+                           cell_col="hpx7", cell_level=7,
+                           exclude_self=True, on_starved="exact")
+    rows = sorted((r.pid_l, r.pid_r, r.knn_rank) for r in out.collect())
+    return rows, knn_mod._DECISIONS["salted_cells"]
+
+
+def test_knn_join_residual_salting(spark, monkeypatch):
+    """auto_levels salts ONLY for a residual extreme key: a clump inside
+    ONE MAX_FINE_LEVEL cell that the density drill-down cannot split
+    further. A uniform sky stays unsalted, and the salted result equals
+    the unsalted one bit-for-bit."""
+    from spatialindex_spark.operators import knn as knn_mod
+
+    # the test threshold must stay >= the drill-down's REFINE_CNT (192):
+    # a real residual key (default threshold 4000) always drills to the
+    # finest rung because its ancestor counts dominate every refine
+    # filter on the way down — the detection inspects the finest grid
+    monkeypatch.setattr(knn_mod, "RESIDUAL_HOT", 300)
+    monkeypatch.setattr(knn_mod, "SALT_TARGET", 100)  # -> S = 5
+    df = _resid_sky(spark)
+
+    salted_rows, salted_cells = _knn_resid(df)
+    assert salted_cells >= 1         # residual key detected -> salted
+    with monkeypatch.context() as m:
+        m.setattr(knn_mod, "RESIDUAL_HOT", 10 ** 9)
+        plain_rows, plain_cells = _knn_resid(df)
+    assert plain_cells == 0
+    assert salted_rows == plain_rows  # identical result either way
+    assert len(salted_rows) == 2 * 3500
 
     # uniform sky (no residual key): auto detects nothing to salt
-    df_u = spark.createDataFrame(
-        pd.DataFrame({"pid": np.arange(3000), "ra": ra, "dec": dec}))
-    df_u = df_u.withColumn("hpx7", hpx_udf(7)(F.col("ra"), F.col("dec"))) \
-               .localCheckpoint(eager=True)
-    knn_join(df_u, df_u, k=2, level=8, auto_levels=True,
-             left_id="pid", right_id="pid",
-             cell_col="hpx7", cell_level=7,
-             exclude_self=True, on_starved="exact").count()
+    df_u = df.filter(F.col("pid") < 3000)
+    knn_mod.knn_join(df_u, df_u, k=2, level=8, auto_levels=True,
+                     left_id="pid", right_id="pid",
+                     cell_col="hpx7", cell_level=7,
+                     exclude_self=True, on_starved="exact").count()
     assert knn_mod._DECISIONS["salted_cells"] == 0
+
+
+def test_knn_join_drill_loop_matches_driver_drill(spark, monkeypatch):
+    """With DRILL_COLLECT_MAX at 0 the density profile refines its hot
+    cells through the distributed Spark loop instead of the driver-side
+    numpy drill. Both give every left row the same start rung, on the
+    cell-column and the UDF keying alike, and knn_join the same top-k.
+    The 500-row clump keeps its cells above REFINE_CNT down to the
+    finest level, so every refinement step runs."""
+    from spatialindex_spark.operators import knn as knn_mod
+
+    df = _resid_sky(spark)
+    rk_base = df.select(F.col("pid").alias("_rid"), F.col("ra").alias("_rra"),
+                        F.col("dec").alias("_rdec"),
+                        F.col("hpx7").alias("_rcell"))
+    lf = rk_base.toDF("_lid", "_lra", "_ldec", "_lcell")
+
+    def profile(cell_level):
+        todo, _, finest_level = knn_mod._density_profile(
+            lf, rk_base, 2, cell_level)
+        return ({r._lid: r._albl for r in todo.collect()},
+                finest_level)
+
+    for cell_level in (7, None):
+        driver = profile(cell_level)
+        with monkeypatch.context() as m:
+            m.setattr(knn_mod, "DRILL_COLLECT_MAX", 0)
+            loop = profile(cell_level)
+        assert loop == driver, cell_level
+        assert driver[1] >= 15  # the drill reached the finest grid
+        assert max(driver[0].values()) > 8  # the clump probes finer
+
+    driver_rows, driver_cells = _knn_resid(df)
+    monkeypatch.setattr(knn_mod, "DRILL_COLLECT_MAX", 0)
+    loop_rows, loop_cells = _knn_resid(df)
+    assert loop_rows == driver_rows and len(loop_rows) == 2 * 3500
+    assert loop_cells == driver_cells
 
 
 def test_pm_crossmatch_matches_brute_force(spark):
