@@ -2531,9 +2531,9 @@ def _q_map_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _map_smooth_sql() -> str:
     import numpy as np
 
-    from spatialindex_spark.operators.joins import _hpx_neighbors
+    from spatialindex_spark.functions.healpix import neighbors
 
-    nbrs = _hpx_neighbors(1, np.arange(48, dtype=np.int64))
+    nbrs = neighbors(1, np.arange(48, dtype=np.int64))
     pairs = sorted({(int(c), int(x))
                     for c in range(48)
                     for x in set(nbrs[c].tolist()) | {c}})

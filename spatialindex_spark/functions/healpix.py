@@ -302,6 +302,47 @@ def neighbors(order: int, pix: np.ndarray) -> np.ndarray:
     return out
 
 
+def _run_starts(t: np.ndarray) -> np.ndarray:
+    """Mask of the first entry of every run of equal values in each row of
+    a row-sorted table."""
+    keep = np.ones(t.shape, dtype=bool)
+    keep[:, 1:] = t[:, 1:] != t[:, :-1]
+    return keep
+
+
+def disc(order: int, pix, rings: int) -> np.ndarray:
+    """Ring-``rings`` discs: the closure of ``neighbors`` adjacency around
+    each pixel, as an (n, w) table. Row i is sorted and holds every cell
+    within graph distance ``rings`` of ``pix[i]`` (``rings=0``: the pixel
+    itself); a row with fewer than w distinct cells repeats its largest
+    one, so take the distinct cells from ``disc_lists``. Each round
+    appends every member's 8 neighbors and compacts the rows back to the
+    widest row's distinct count, so the table stays about
+    n x (2*rings+1)^2."""
+    out = np.atleast_1d(np.asarray(pix, dtype=np.int64))[:, None]
+    for _ in range(rings):
+        n, w = out.shape
+        wide = np.sort(np.concatenate(
+            [out, neighbors(order, out.ravel()).reshape(n, 8 * w)], axis=1),
+            axis=1)
+        # repeats become the row maximum, so after a second sort each
+        # row's distinct cells lead and the widest row sets the width
+        keep = _run_starts(wide)
+        out = np.sort(np.where(keep, wide, wide[:, -1:]), axis=1)[
+            :, :keep.sum(axis=1).max(initial=0)]
+    return out
+
+
+def disc_lists(order: int, pix, rings: int) -> list:
+    """The distinct cells of each pixel's ring-``rings`` disc: one sorted
+    int64 array per pixel, and no arrays for no pixels."""
+    t = disc(order, pix, rings)
+    if not len(t):
+        return []
+    keep = _run_starts(t)
+    return np.split(t[keep], np.cumsum(keep.sum(axis=1))[:-1])
+
+
 def pix2vec(order: int, pix):
     """Pixel center as unit vector(s); uses sqrt((1-z)(1+z)) for sintheta
     (sptQueryLib.c:1436 numerical form)."""

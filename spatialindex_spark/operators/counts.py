@@ -300,10 +300,11 @@ def map_smooth(map_df: DataFrame, level: int, pix_col: str = "pix",
     standard first smoothing pass over depth/density/exposure maps.
 
     Scale shape: the complete (center -> disc cells) map at ``level`` is
-    the SAME cached broadcast crossmatch rides (joins._ring1_map_df,
-    level <= 8 per its budget); the map table joins it JVM-side on the
-    neighbor key and ONE groupBy on the center key aggregates — the map
-    never shuffles by more than its own (bounded at npix(level)) size.
+    the SAME cached broadcast ring map that joins.ring_explode joins
+    (joins._ring1_map_df, level <= JVM_RING_MAX_LEVEL per its budget);
+    the map table joins it JVM-side on the neighbor key and ONE groupBy
+    on the center key aggregates — the map never shuffles by more than
+    its own (bounded at npix(level)) size.
 
     Determinism contract: values are quantized to ``quant`` units before
     summing (int64-exact, aggregation-order-independent); the emitted

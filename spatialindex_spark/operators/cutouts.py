@@ -63,8 +63,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import max_pix_rad, pix2vec
-from .joins import _ring1_map_df, crossmatch, hpx_cell_key
+from ..functions.healpix import disc, max_pix_rad, pix2vec
+from .joins import crossmatch, hpx_cell_key, ring_explode
 
 _log = logging.getLogger(__name__)
 
@@ -132,7 +132,9 @@ def cutout_windows(targets: DataFrame, images: DataFrame,
     ``targets`` needs (target_id, ra, dec); ``images`` needs
     (image_id, ra, dec, w, h).  Pass the ingest-time nested-HPX cell
     column via ``cell_col``/``cell_level`` to keep the image side's
-    candidate keying entirely JVM (crossmatch's broadcast ring map).
+    candidate keying entirely JVM (crossmatch keys both sides by a
+    shiftright of it, and up to JVM_RING_MAX_LEVEL its ring explode is a
+    broadcast map join).
 
     ``max_dim_px`` bounds max(w, h) across the table; when omitted it
     is read with one scalar aggregate (a single-row driver read, the
@@ -234,7 +236,7 @@ def target_cell_ranges(targets: DataFrame, radius_deg: float,
     with a giant Or tree AND cover too much of the id space to prune —
     or when the radius needs more than ring-1 coverage.
     """
-    from .joins import _hpx_neighbors, pick_match_level
+    from .joins import pick_match_level
     from ..functions.healpix import safe_ring1_rad
     from ..functions.udfs import hpx_udf
 
@@ -261,8 +263,7 @@ def target_cell_ranges(targets: DataFrame, radius_deg: float,
     pix = np.array([r["_tc"] for r in rows], dtype=np.int64)
     if pix.size == 0:
         return F.lit(False)
-    cells = np.unique(np.concatenate(
-        [pix, _hpx_neighbors(lvl, pix).ravel()]))
+    cells = np.unique(disc(lvl, pix, 1))
     shift = 2 * (cell_level - lvl)
     los = cells << shift
     his = (cells + 1) << shift
@@ -513,33 +514,6 @@ _TILE_GRID_CACHE: dict = {}
 _RING_REACH_CACHE: dict = {}
 
 
-def _disc_table(lvl: int, k: int) -> np.ndarray:
-    """(npix, w) sorted ring-``k`` disc-closure table: row p holds every
-    cell within graph distance k of p (padded by duplicating members —
-    harmless for the membership/frontier set math below).  Fully
-    vectorized (iterated neighbor expansion + per-row sort/dedup);
-    cheap at level 8 (786k rows) for k <= 2, but the (npix, ~(2k+3)^2)
-    footprint reaches GBs by k ~ 5-6 — the ring-sizing loop's cheap
-    upper bound keeps doomed ring counts from ever building those."""
-    from ..functions.healpix import neighbors
-
-    npix = 12 << (2 * lvl)
-    pix = np.arange(npix, dtype=np.int64)
-    disc = pix[:, None]
-    for _ in range(k):
-        nb = neighbors(lvl, disc.ravel()).reshape(npix, -1)
-        disc = np.sort(np.concatenate([disc, nb], axis=1), axis=1)
-        keep = np.ones(disc.shape, dtype=bool)
-        keep[:, 1:] = disc[:, 1:] != disc[:, :-1]
-        w = int(keep.sum(axis=1).max())
-        rows, cols = np.nonzero(keep)
-        pos = keep.cumsum(axis=1) - 1
-        out = np.repeat(pix[:, None], w, axis=1)   # pad with self (member)
-        out[rows, pos[rows, cols]] = disc[rows, cols]
-        disc = np.sort(out, axis=1)
-    return disc
-
-
 def _ring_reach_lb(lvl: int, k: int) -> float:
     """Certified lower bound (radians) on the center-to-center distance
     from any level-``lvl`` cell to any cell OUTSIDE its ring-``k`` disc.
@@ -553,8 +527,11 @@ def _ring_reach_lb(lvl: int, k: int) -> float:
         min(outside-disc distance) >= min(frontier center distance)
                                       - max_pix_rad(lvl),
     and frontier cells themselves are at >= min(frontier center
-    distance).  Exact set math over the vectorized disc tables; cached
-    per (lvl, k)."""
+    distance).  Exact set math over the sorted healpix.disc tables (the
+    pixels in order, so the keyed tables below sort globally); cached
+    per (lvl, k).  The frontier path's (npix x disc-width) tables reach
+    GBs at level 8 by k ~ 5-6: coadd_mosaic's cheap upper bound keeps
+    doomed ring counts from ever building those."""
     key = (lvl, k)
     v = _RING_REACH_CACHE.get(key)
     if v is not None:
@@ -563,7 +540,7 @@ def _ring_reach_lb(lvl: int, k: int) -> float:
     pix = np.arange(npix, dtype=np.int64)
     x, y, z = pix2vec(lvl, pix)
     cen = np.stack([x, y, z], axis=1)
-    d1 = _disc_table(lvl, k)
+    d1 = disc(lvl, pix, k)
     if npix <= 50_000:
         # EXACT: chunked all-pairs center dots, disc members masked out —
         # covers every practical mosaic level (<= 6); one ring tighter
@@ -578,7 +555,7 @@ def _ring_reach_lb(lvl: int, k: int) -> float:
         v = math.pi if best <= -1.5 else math.acos(min(1.0, max(-1.0, best)))
         _RING_REACH_CACHE[key] = v
         return v
-    d2 = _disc_table(lvl, k + 1)
+    d2 = disc(lvl, pix, k + 1)
     base = (pix * np.int64(npix))[:, None]
     keys1 = (d1 + base).ravel()          # sorted globally by construction
     keys2 = (d2 + base).ravel()
@@ -723,13 +700,9 @@ def coadd_mosaic(images: DataFrame, level: int, tile_px: int,
                 "the mosaic candidate ring was sized for smaller images")
     own = F.when(dguard.isNull(), own)
 
-    ring = _ring1_map_df(spark, level, rings=n_rings)
     centers = _tile_center_map(spark, level)
-
-    cand = (images.withColumn("_pix", own)
-            .join(F.broadcast(ring), "_pix")
-            .select(*[F.col(c) for c in images.columns],
-                    F.explode("_ring").alias("_tile"))
+    cand = (ring_explode(images, own, level, n_rings)
+            .withColumnRenamed("_mc", "_tile")
             .join(F.broadcast(centers), "_tile"))
 
     # prune 1 (disc): keep (image, tile) only if the image's

@@ -22,11 +22,12 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions.constraints import SpatialIndex
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import max_pix_rad
+from ..functions.healpix import disc_lists, safe_ring1_rad
 
 
 # ---------------------------------------------------------------------------
@@ -419,63 +420,46 @@ def region_join(points: DataFrame, regions: list[dict],
 # J3: cross-match within radius
 # ---------------------------------------------------------------------------
 
-def _hpx_neighbors(order: int, pix: np.ndarray) -> np.ndarray:
-    """Pixel + its exact ring-1 neighbors: (n, 9) int64 (self in column 0).
-    Exactness validated against dense-sampled adjacency (test_operators)."""
-    from ..functions.healpix import neighbors
-
-    nb = neighbors(order, pix)
-    return np.concatenate([pix[:, None], nb], axis=1)
-
-
 #: deepest match level whose full (pix -> ring-1 cells) map is broadcast
 #: (12*4^8 = 786k rows, ~60 MB) so crossmatch's left-side ring expansion
 #: runs JVM-only; deeper levels fall back to the Arrow pandas UDF
 JVM_RING_MAX_LEVEL = 8
 
+#: cell-row budget of a multi-ring map (pixels x (2*rings+1)^2)
+RING_MAP_MAX_CELLS = 4_000_000
+
 
 _RING1_MAP_CACHE: dict = {}
 
 
+def _ring_map_fits(lvl: int, rings: int) -> bool:
+    """Whether the complete ring-``rings`` map at ``lvl`` is within the
+    broadcast budget. rings > 1 is the very-large-radius path (radius
+    beyond the level's safe ring-1 bound), where callers coarsen the
+    level first, so the map stays tiny (12 pixels at level 0)."""
+    if rings == 1:
+        return lvl <= JVM_RING_MAX_LEVEL
+    return (12 << (2 * lvl)) * (2 * rings + 1) ** 2 <= RING_MAP_MAX_CELLS
+
+
 def _ring1_map_df(spark, lvl: int, rings: int = 1) -> DataFrame:
-    """Complete (pix, sorted deduped ring-``rings`` disc cell list) map at
-    ``lvl`` — the broadcast side of crossmatch's JVM ring expansion.
+    """Complete (pix, sorted distinct ring-``rings`` disc cell list) map
+    at ``lvl``: the broadcast side of :func:`ring_explode`.
     Cached per (session, lvl, rings): the driver-side numpy build +
     local-data plan conversion costs ~1 s at level 7 and a long-running
     job pays it once, but a bench loop calling crossmatch repeatedly
-    would otherwise pay it per call (measured +1.2 s/call).
-
-    rings > 1 is the very-large-radius path (radius beyond the level's
-    safe ring-1 bound): callers coarsen the level first, so the disc
-    enumeration stays tiny (12 pixels at level 0); a guard bounds the
-    map size rather than ever building a silent monster."""
+    would otherwise pay it per call (measured +1.2 s/call)."""
     key = (spark, lvl, rings)  # session object itself: no id()-reuse alias
     cached = _RING1_MAP_CACHE.get(key)
     if cached is not None:
         return cached
-    npix = 12 << (2 * lvl)
-    if rings > 1:
-        if npix * (2 * rings + 1) ** 2 > 4_000_000:
-            raise ValueError(
-                f"ring map at level {lvl} with {rings} rings would exceed "
-                "the broadcast budget; coarsen the level")
-        from .knn import _disc_cells
-
-        pdf = pd.DataFrame({
-            "_pix": np.arange(npix, dtype=np.int64),
-            "_ring": [_disc_cells(lvl, p, rings).tolist()
-                      for p in range(npix)]})
-        df = spark.createDataFrame(pdf, "_pix long, _ring array<long>")
-        return _persist_ring_map(key, df)
-    pix = np.arange(npix, dtype=np.int64)
-    nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-    keep = np.ones(nb.shape, dtype=bool)
-    keep[:, 1:] = nb[:, 1:] != nb[:, :-1]
-    counts = keep.sum(axis=1)
-    flat = nb[keep]
-    rings = np.split(flat, np.cumsum(counts)[:-1])
-    pdf = pd.DataFrame({"_pix": pix,
-                        "_ring": [r.tolist() for r in rings]})
+    if not _ring_map_fits(lvl, rings):
+        raise ValueError(
+            f"ring map at level {lvl} with {rings} rings would exceed "
+            "the broadcast budget; coarsen the level")
+    pix = np.arange(12 << (2 * lvl), dtype=np.int64)
+    pdf = pd.DataFrame({"_pix": pix, "_ring": [
+        r.tolist() for r in disc_lists(lvl, pix, rings)]})
     df = spark.createDataFrame(pdf, "_pix long, _ring array<long>")
     return _persist_ring_map(key, df)
 
@@ -495,6 +479,42 @@ def _persist_ring_map(key, df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _RING1_MAP_CACHE[key] = df
     return df
+
+
+def _disc_udf(lvl: int, rings: int):
+    """pandas UDF: level-``lvl`` pixel -> its distinct ring-``rings`` disc
+    cells (null for a null pixel, which so gets no match keys)."""
+
+    @pandas_udf("array<long>")
+    def _udf(pix: pd.Series) -> pd.Series:
+        ok = pix.notna()
+        cells = iter(disc_lists(lvl, pix[ok].to_numpy(np.int64), rings))
+        if ok.all():
+            return pd.Series(list(cells), dtype=object)
+        return pd.Series([next(cells) if o else None for o in ok],
+                         dtype=object)
+
+    return _udf
+
+
+def ring_explode(df: DataFrame, pix: Column, lvl: int, rings: int = 1,
+                 cols=None) -> DataFrame:
+    """``cols`` of ``df`` (default: all of them) plus ``_mc``, one row per
+    cell of the ring-``rings`` disc around the level-``lvl`` pixel
+    ``pix``: the exploded side of every ring-keyed equi-join. The disc
+    comes from the persisted broadcast map when the map fits its budget,
+    so the explode is JVM-only; otherwise from one pandas UDF over
+    healpix.disc. The choice depends on ``lvl`` and ``rings`` only. Either
+    way a row's keys are distinct, so joining a side keyed by one cell
+    yields each pair at most once."""
+    cols = df.columns if cols is None else cols
+    if not _ring_map_fits(lvl, rings):
+        return df.select(*cols, F.explode(_disc_udf(lvl, rings)(pix))
+                         .alias("_mc"))
+    keyed = df.select(*cols, pix.alias("_pix"))
+    ring_map = _ring1_map_df(df.sparkSession, lvl, rings)
+    return (keyed.join(F.broadcast(ring_map), "_pix")
+            .select(*keyed.columns[:-1], F.explode("_ring").alias("_mc")))
 
 
 def check_hpx_cell_col(data: DataFrame, cell_col: str, cell_level: int) -> None:
@@ -537,8 +557,6 @@ def pick_match_level(radius_deg: float, max_level: int = 20) -> int:
     """Deepest HPX order whose SAFE ring-1 radius (healpix.safe_ring1_rad —
     not max_pix_rad, which under-covers) still exceeds the match radius, so
     ring-1 neighbors provably cover the match disc."""
-    from ..functions.healpix import safe_ring1_rad
-
     r = radius_deg * RAD_PER_DEG
     level = 0
     while level < max_level and safe_ring1_rad(level + 1) >= r:
@@ -558,8 +576,6 @@ def ring_cover_level(radius_deg: float, cell_level: int) -> tuple[int, int]:
     pick_match_level already chose 0 (the min() caps can only COARSEN,
     which enlarges safe_ring1_rad) — kept as an explicit invariant
     rather than an assumption."""
-    from ..functions.healpix import safe_ring1_rad
-
     lvl = min(pick_match_level(radius_deg), cell_level, JVM_RING_MAX_LEVEL)
     rings = max(1, math.ceil(radius_deg * RAD_PER_DEG / safe_ring1_rad(lvl)))
     if rings > 1:
@@ -595,9 +611,6 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
     if use_cell:
         level = min(level, cell_level)
 
-    from pyspark.sql.pandas.functions import pandas_udf
-    from ..functions.healpix import hpx_id as _hpx, safe_ring1_rad
-
     lvl = level
     # rings needed so ring-r adjacency provably covers radius_deg (chain
     # argument: points <= r*safe apart connect through r adjacent cells).
@@ -605,64 +618,24 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
     # the order-0 safe radius (~28 deg) or a user-forced coarse level.
     rings = max(1, math.ceil(radius_deg * RAD_PER_DEG / safe_ring1_rad(lvl)))
 
-    def _nb_lists(pix: np.ndarray) -> pd.Series:
-        if rings == 1:
-            nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-            # row-wise dedup without a per-row unique() call: mask repeats
-            # in the sorted rows, split kept values by per-row counts
-            keep = np.ones(nb.shape, dtype=bool)
-            keep[:, 1:] = nb[:, 1:] != nb[:, :-1]
-            counts = keep.sum(axis=1)
-            flat = nb[keep]
-            return pd.Series(np.split(flat, np.cumsum(counts)[:-1]))
-        rows = [np.atleast_1d(p) for p in pix]
-        for _ in range(rings):
-            rows = [np.unique(_hpx_neighbors(lvl, row)) for row in rows]
-        return pd.Series(rows)
-
-    @pandas_udf("long")
-    def cell_of(ra: pd.Series, dec: pd.Series) -> pd.Series:
-        return pd.Series(_hpx(lvl, ra.values, dec.values))
-
-    @pandas_udf("array<long>")
-    def cells_with_neighbors(ra: pd.Series, dec: pd.Series) -> pd.Series:
-        return _nb_lists(_hpx(lvl, ra.values, dec.values))
-
-    @pandas_udf("array<long>")
-    def cells_with_neighbors_from_pix(pix: pd.Series) -> pd.Series:
-        return _nb_lists(pix.values.astype(np.int64))
-
     lr, ld = left_cols
     rr, rd = right_cols
     lsel = [F.col(c).alias(c + suffixes[0]) for c in left.columns]
     rsel = [F.col(c).alias(c + suffixes[1]) for c in right.columns]
 
     if use_cell:
-        # in-plan every-row range guard on the big (right) side — no
-        # sampling job
-        rkey_col = hpx_cell_key(cell_col, cell_level, lvl)
-        if rings == 1 and lvl <= JVM_RING_MAX_LEVEL:
-            # coarse match level: the complete (pix -> ring-1 cells) map is
-            # small (12*4^lvl rows, <= ~786k at level 8) — broadcast it and
-            # explode JVM-side, so the WHOLE crossmatch plan is free of
-            # ArrowEvalPython when an ingest-time cell column is supplied
-            # (plan-asserted). Both sides share the guarded key expression.
-            ring_map = _ring1_map_df(left.sparkSession, lvl)
-            lkey = (left.select(*lsel,
-                                hpx_cell_key(cell_col, cell_level, lvl)
-                                .alias("_pix"))
-                    .join(F.broadcast(ring_map), "_pix", "inner")
-                    .select(*[c + suffixes[0] for c in left.columns],
-                            F.explode("_ring").alias("_mc")))
-        else:
-            lpix = F.shiftright(F.col(cell_col), 2 * (cell_level - lvl))
-            lcells = cells_with_neighbors_from_pix(lpix)
-            lkey = left.select(*lsel, F.explode(lcells).alias("_mc"))
+        # both sides share the guarded key expression, an in-plan
+        # every-row range check with no sampling job; at match levels
+        # <= JVM_RING_MAX_LEVEL the left explode rides the broadcast map,
+        # so the WHOLE crossmatch plan is free of ArrowEvalPython
+        # (plan-asserted)
+        lpix = rkey_col = hpx_cell_key(cell_col, cell_level, lvl)
     else:
-        rkey_col = cell_of(F.col(rr), F.col(rd))
-        lcells = cells_with_neighbors(F.col(lr), F.col(ld))
-        lkey = left.select(*lsel, F.explode(lcells).alias("_mc"))
+        from ..functions.udfs import hpx_udf
 
+        lpix = hpx_udf(lvl)(F.col(lr), F.col(ld))
+        rkey_col = hpx_udf(lvl)(F.col(rr), F.col(rd))
+    lkey = ring_explode(left, lpix, lvl, rings, cols=lsel)
     rkey = right.select(*rsel, rkey_col.alias("_mc"))
 
     pairs = lkey.join(rkey, "_mc").drop("_mc")

@@ -42,8 +42,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from ..functions.geometry import RAD_PER_DEG
-from ..functions.healpix import hpx_id, safe_ring1_rad
-from .joins import _hpx_neighbors, hpx_cell_key
+from ..functions.healpix import disc_lists, hpx_id, safe_ring1_rad
+from .joins import hpx_cell_key, ring_explode
 
 # last knn_join auto decisions, for probe/test introspection only
 _DECISIONS: dict = {}
@@ -63,54 +63,20 @@ MERGE_PAIR_BUDGET = 8_000_000  # extra pairs a sparse-rung fold may add
 SAT_BC_MAX = 4_000_000         # satisfied sets broadcast into semi/anti joins
 
 
-def _disc_cells(lvl: int, pix: int, r: int) -> np.ndarray:
-    """Closure of ring-r adjacency around one pixel (sorted unique ids).
-    Caps at the full sphere once the disc would cover most of it."""
-    total = 12 << (2 * lvl)
-    if r > 0 and (2 * r + 1) ** 2 >= total:
-        return np.arange(total, dtype=np.int64)
-    cells = np.atleast_1d(np.int64(pix))
-    for _ in range(r):
-        cells = np.unique(_hpx_neighbors(lvl, cells))
-        cells = cells[cells >= 0]
-    return cells
-
-
-def _shell_cells_udf(lvl: int, r_lo: int, r_hi: int):
-    """Cells in disc(r_hi) \\ disc(r_lo) per query row (r_lo=0 => the whole
-    disc including the center cell). Shells are disjoint across widening
-    rounds, so accumulated candidate pairs never duplicate.
-
-    The (0, 1) case — the only shape knn_join's fine rungs and knn()'s
-    first probe use — is fully vectorized (guide §4.2): the old per-row
-    ``_disc_cells`` loop ran np.unique once per row, and on a
-    cell-clustered table a dense spot concentrates in ONE task, which
-    then gates every broadcast/job that evaluates the UDF (profiled at
-    sf1: 4.7-5.7 s straggler tasks, several per sweep). The batch path
-    computes all rows' 9-cell discs in one ``neighbors`` call and
-    dedups with a sort + shift-compare, identical output set per row
-    (order differs; the consumer explodes, so order is irrelevant)."""
+def _shell_udf(lvl: int, r_lo: int, r_hi: int):
+    """pandas UDF: (ra, dec) -> the cells of disc(r_hi) \\ disc(r_lo)
+    around the row's level-``lvl`` pixel (r_lo=0 => the whole disc
+    including the center cell). Shells are disjoint across knn()'s
+    widening rounds, so accumulated candidate pairs never duplicate."""
 
     @pandas_udf("array<long>")
     def _udf(ra: pd.Series, dec: pd.Series) -> pd.Series:
         pix = hpx_id(lvl, ra.values, dec.values)
-        if r_lo == 0 and r_hi == 1:
-            nb = np.sort(_hpx_neighbors(lvl, pix), axis=1)
-            keep = nb >= 0
-            keep[:, 1:] &= nb[:, 1:] != nb[:, :-1]
-            counts = keep.sum(axis=1)
-            flat = nb[keep]
-            if len(pix) == 0:
-                return pd.Series([], dtype=object)
-            rows = np.split(flat, np.cumsum(counts)[:-1])
-            return pd.Series([r.tolist() for r in rows])
-        out = []
-        for p in pix:
-            hi = _disc_cells(lvl, p, r_hi)
-            if r_lo > 0:
-                hi = np.setdiff1d(hi, _disc_cells(lvl, p, r_lo))
-            out.append(hi.tolist())
-        return pd.Series(out)
+        out = disc_lists(lvl, pix, r_hi)
+        if r_lo > 0:
+            out = [np.setdiff1d(a, b, assume_unique=True)
+                   for a, b in zip(out, disc_lists(lvl, pix, r_lo))]
+        return pd.Series(out, dtype=object)
 
     return _udf
 
@@ -185,7 +151,7 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
                else F.shiftright(F.col("_mc"), 2 * (lvl - at_level)))
         qk = qdf.select(
             F.col(query_id), "_qra", "_qdec",
-            F.explode(_shell_cells_udf(at_level, r_lo, r_hi)("_qra", "_qdec"))
+            F.explode(_shell_udf(at_level, r_lo, r_hi)("_qra", "_qdec"))
             .alias("_pk"))
         p = (dk.withColumn("_pk", key)
              .join(F.broadcast(qk), "_pk").drop("_pk", "_mc")
@@ -516,8 +482,9 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     Unlike :func:`knn`, which broadcasts a small query frame, neither side
     is broadcast: both are keyed at a probe level and the candidate join is
     a shuffled cell equi-join (plan-asserted in tests). Each left row
-    explodes into its ring-1 disc through the broadcast (pix -> ring) map,
-    the only broadcast in the plan, so every pair within the level's
+    explodes into its ring-1 disc (:func:`~.joins.ring_explode`: the
+    broadcast ring map up to JVM_RING_MAX_LEVEL, the only broadcast in the
+    plan, and one pandas UDF above), so every pair within the level's
     verified radius shares a key.
 
     RUNG LADDER. A rung is a probe level, and the ladder is the descending
@@ -570,7 +537,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     names collide, suffixes ``_l``/``_r`` are appended.
     """
     from ..functions.udfs import hpx_udf
-    from .joins import JVM_RING_MAX_LEVEL, _ring1_map_df
 
     if on_starved not in ("raise", "exact"):
         raise ValueError(f"unknown on_starved {on_starved!r}")
@@ -596,7 +562,6 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     out_lid = left_id + "_l" if left_id == right_id else left_id
     out_rid = right_id + "_r" if left_id == right_id else right_id
 
-    spark = left.sparkSession
     lf = (left.select(F.col(left_id).alias("_lid"),
                       F.col(lr).alias("_lra"), F.col(ld).alias("_ldec"),
                       *([F.col(cell_col).alias("_lcell")] if use_cell else []))
@@ -689,17 +654,8 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
             rkey = hpx_udf(lvl)(F.col("_rra"), F.col("_rdec"))
         # project before the join exchange, the widest of the operator:
         # _lcell/_albl (and _rcell) would otherwise ride it as dead weight
-        act_xyz = _with_xyz(active, "_l", "_lra", "_ldec")
-        if lvl <= JVM_RING_MAX_LEVEL:
-            lk = (act_xyz.withColumn("_pix", lpix)
-                  .select("_lid", "_lx", "_ly", "_lz", "_pix")
-                  .join(F.broadcast(_ring1_map_df(spark, lvl)), "_pix")
-                  .withColumn("_mc", F.explode("_ring"))
-                  .drop("_ring", "_pix"))
-        else:
-            disc = _shell_cells_udf(lvl, 0, 1)(F.col("_lra"), F.col("_ldec"))
-            lk = act_xyz.select("_lid", "_lx", "_ly", "_lz",
-                                F.explode(disc).alias("_mc"))
+        lk = ring_explode(_with_xyz(active, "_l", "_lra", "_ldec"), lpix, lvl,
+                          cols=["_lid", "_lx", "_ly", "_lz"])
         rk = rk_base
         # a small rung semi-joins the right side against its bounded cell
         # set, so the full table does not re-key for a handful of rows; a

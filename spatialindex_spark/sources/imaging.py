@@ -90,66 +90,16 @@ def decode(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
-def decode_window(data: bytes, w: int, h: int, fmt: str,
-                  x0: int, x1: int, y0: int, y1: int,
-                  channel: int | None = 0) -> np.ndarray:
-    """Exactly ``decode(data, w, h, fmt)[y0:y1, x0:x1, channel]`` (or
-    ``[y0:y1, x0:x1]`` for ``channel=None``) without decoding pixels
-    outside the window. For "raw"/"z" the full buffer is (inherently)
-    materialized but never copied or reshaped beyond a view;
-    for "dct" ONLY the 8x8 blocks intersecting the window run the IDCT —
-    block decodes are independent and element-wise identical to the full
-    decode (same per-block matmul, +128, rint, clip), so the returned
-    pixels are bit-identical. Windows are assumed pre-clipped to
-    [0,w)x[0,h) (cutout_windows guarantees this); an empty window returns
-    an empty array. ``data`` may be any buffer (bytes/memoryview)."""
-    ch = slice(None) if channel is None else channel
-    if x0 >= x1 or y0 >= y1:
-        shape = (max(y1 - y0, 0), max(x1 - x0, 0))
-        return np.empty(shape + (3,) if channel is None else shape,
-                        dtype=np.uint8)
-    if fmt == "raw":
-        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)[
-            y0:y1, x0:x1, ch]
-    if fmt == "z":
-        return np.frombuffer(zlib.decompress(data),
-                             dtype=np.uint8).reshape(h, w, 3)[
-            y0:y1, x0:x1, ch]
-    if fmt == "dct":
-        H, W = h + ((-h) % 8), w + ((-w) % 8)
-        nb = (H // 8) * (W // 8)
-        wb = W // 8
-        q = np.frombuffer(zlib.decompress(data), dtype="<i2")
-        q = q.astype(np.float64).reshape(3, nb, 8, 8)
-        by0, by1 = y0 // 8, (y1 - 1) // 8
-        bx0, bx1 = x0 // 8, (x1 - 1) // 8
-        sel = [by * wb + bx
-               for by in range(by0, by1 + 1)
-               for bx in range(bx0, bx1 + 1)]
-        nby, nbx = by1 - by0 + 1, bx1 - bx0 + 1
-        ys, xs = y0 - 8 * by0, x0 - 8 * bx0
-        chans = range(3) if channel is None else (channel,)
-        planes = []
-        for c in chans:
-            f = q[c, sel] * _Q
-            blocks = _D8.T @ f @ _D8
-            rect = (blocks.reshape(nby, nbx, 8, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(nby * 8, nbx * 8)) + 128.0
-            out = np.clip(np.rint(rect), 0, 255).astype(np.uint8)
-            planes.append(out[ys:y1 - 8 * by0, xs:x1 - 8 * bx0])
-        return planes[0] if channel is not None else np.stack(planes,
-                                                              axis=-1)
-    raise ValueError(f"unknown fmt {fmt!r}")
-
-
 def decode_windows(data: bytes, w: int, h: int, fmt: str,
                    windows, channel: int | None = 0) -> list:
     """Decode SEVERAL windows of one payload with the per-payload work
     (zlib decompress, dct dequantization) done ONCE. Each returned array
-    is bit-identical to ``decode_window(data, w, h, fmt, *win, channel)``
-    — same element-wise math per 8x8 block — the only change is sharing
-    the decoded/dequantized buffer across windows. This is the batch
+    is exactly ``decode(data, w, h, fmt)[y0:y1, x0:x1, channel]`` (or
+    ``[y0:y1, x0:x1]`` for ``channel=None``), without decoding pixels
+    outside the windows: for "dct" ONLY the 8x8 blocks intersecting a
+    window run the IDCT, and block decodes are independent and
+    element-wise identical to the full decode (same per-block matmul,
+    +128, rint, clip), so the pixels are bit-identical. This is the batch
     entry the pixel operators use after grouping their (target, image)
     windows per image: a survey target list averages several windows per
     matched image, and per-window full decompression was the readback

@@ -218,8 +218,9 @@ def stream_crossmatch(stream: DataFrame, catalog: DataFrame,
     Plan shape: the catalog side is keyed once by its ingest-time cell
     column (shiftright to the match level — pure JVM, exactly the batch
     crossmatch's cell_col path, joins.py); the STREAM side explodes each
-    row into its ring-1 neighbor cells via the broadcast (pix -> ring)
-    map, so every true pair shares an equi-join key and the stateless
+    row into its ring disc cells through joins.ring_explode (always its
+    broadcast map here: ring_cover_level keeps the level within the map
+    budget), so every true pair shares an equi-join key and the stateless
     per-micro-batch join needs no watermark or state store. Exact
     dot-product distance filters after. The static side is the big one at
     scale — it never re-keys per batch (Spark caches the batch plan), and
@@ -227,31 +228,24 @@ def stream_crossmatch(stream: DataFrame, catalog: DataFrame,
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..operators.joins import (hpx_cell_key, ring_cover_level,
+                                   ring_explode)
 
-    # Cap at JVM_RING_MAX_LEVEL like batch crossmatch: _ring1_map_df builds
-    # 12*4^lvl rows on the driver (level 12 ~ 200M rows would OOM), and the
-    # broadcast-map path is only valid when the disc adjacency covers the
-    # radius. Coarser levels keep safe_ring1_rad larger, so the cap never
-    # loses pairs — it only widens the candidate set. Radii beyond even
-    # the order-0 ring-1 bound (~29 deg) drop to level 0 with a
-    # multi-ring disc map (12 pixels, trivially broadcastable) — the same
+    # Cap at JVM_RING_MAX_LEVEL like batch crossmatch, so the stream side
+    # explodes through the broadcast map, never a per-batch Python UDF.
+    # Coarser levels keep safe_ring1_rad larger, so the cap never loses
+    # pairs — it only widens the candidate set. Radii beyond even the
+    # order-0 ring-1 bound (~29 deg) drop to level 0 with a multi-ring
+    # disc map (12 pixels, trivially broadcastable) — the same
     # chain-coverage argument as batch crossmatch's rings>1 path, so no
     # radius silently under-matches (r3 advice fix).
     lvl, rings = ring_cover_level(radius_deg, cell_level)
-    ring_map = _ring1_map_df(catalog.sparkSession, lvl, rings)
-    cat = (catalog.withColumn("_mc", hpx_cell_key(cell_col, cell_level, lvl))
+    key = hpx_cell_key(cell_col, cell_level, lvl)
+    cat = (catalog.withColumn("_mc", key)
            .withColumnRenamed(ra_col, "cat_ra")
            .withColumnRenamed(dec_col, "cat_dec")
            .drop(cell_col))   # both sides carry it; avoid ambiguous output
-    s = stream.withColumn("_pix", hpx_cell_key(cell_col, cell_level, lvl))
-    s = (s.join(F.broadcast(ring_map), s["_pix"] == ring_map["_pix"],
-                "inner")
-         .drop(ring_map["_pix"])
-         .withColumn("_mc", F.explode("_ring"))
-         .drop("_ring", "_pix"))
-    pairs = s.join(cat, "_mc").drop("_mc")
+    pairs = ring_explode(stream, key, lvl, rings).join(cat, "_mc").drop("_mc")
     cosr = math.cos(radius_deg * RAD_PER_DEG)
     rad = F.radians
     dot = (F.cos(rad(F.col(dec_col))) * F.cos(rad(F.col("cat_dec")))
@@ -282,17 +276,13 @@ def stream_transients(stream: DataFrame, catalog: DataFrame,
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..operators.joins import (hpx_cell_key, ring_cover_level,
+                                   ring_explode)
 
     lvl, rings = ring_cover_level(radius_deg, cell_level)
-    ring_map = _ring1_map_df(catalog.sparkSession, lvl, rings)
-    cat = (catalog
-           .withColumn("_pix", hpx_cell_key(cell_col, cell_level, lvl))
-           .join(F.broadcast(ring_map), "_pix", "inner")
-           .select(F.col(ra_col).alias("_cra"),
-                   F.col(dec_col).alias("_cdec"),
-                   F.explode("_ring").alias("_mc")))
+    cat = ring_explode(catalog, hpx_cell_key(cell_col, cell_level, lvl), lvl,
+                       rings, cols=[F.col(ra_col).alias("_cra"),
+                                    F.col(dec_col).alias("_cdec")])
     s = stream.withColumn("_smc", hpx_cell_key(cell_col, cell_level, lvl))
     cosr = math.cos(radius_deg * RAD_PER_DEG)
     rad = F.radians
@@ -315,23 +305,23 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
 
     Plan shape mirrors :func:`stream_crossmatch`: the static target list
     is keyed once at the match level; the STREAM side explodes into its
-    ring-1 (or multi-ring at level 0) neighbor cells via the broadcast
-    map, so the per-micro-batch join is a stateless equi-join — no
-    watermark or state store. Window math is the batch operator's JVM
-    Column trig (operators/cutouts.py); results across micro-batches
-    equal the batch ``cutout_windows`` on the same rows (pytest-gated).
+    ring-1 (or multi-ring at level 0) neighbor cells via
+    joins.ring_explode, so the per-micro-batch join is a stateless
+    equi-join — no watermark or state store. Window math is the batch
+    operator's JVM Column trig (operators/cutouts.py); results across
+    micro-batches equal the batch ``cutout_windows`` on the same rows
+    (pytest-gated).
 
     ``max_dim_px`` must bound max(w, h) of the stream (a stream cannot
     be aggregated at plan time); rows exceeding it raise at runtime via
     an in-plan guard rather than silently under-matching.
     """
     from ..operators.cutouts import _tan_px_cols, pairing_radius_deg
-    from ..operators.joins import (_ring1_map_df, hpx_cell_key,
-                                   ring_cover_level)
+    from ..operators.joins import (hpx_cell_key, ring_cover_level,
+                                   ring_explode)
 
     radius = pairing_radius_deg(scale_deg_px, max_dim_px)
     lvl, rings = ring_cover_level(radius, cell_level)
-    ring_map = _ring1_map_df(stream_images.sparkSession, lvl, rings)
 
     tgt = (targets.select(target_id, F.col("ra").alias("t_ra"),
                           F.col("dec").alias("t_dec"))
@@ -347,13 +337,8 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
     pixkey = F.coalesce(
         F.when(guard.isNull(), hpx_cell_key(cell_col, cell_level, lvl)),
         F.lit(-1))
-    s = stream_images.withColumn("_pix", pixkey)
-    s = (s.join(F.broadcast(ring_map), s["_pix"] == ring_map["_pix"],
-                "inner")
-         .drop(ring_map["_pix"])
-         .withColumn("_mc", F.explode("_ring"))
-         .drop("_ring", "_pix"))
-    pairs = s.join(tgt, "_mc").drop("_mc")
+    pairs = (ring_explode(stream_images, pixkey, lvl, rings)
+             .join(tgt, "_mc").drop("_mc"))
 
     w, h = F.col("w"), F.col("h")
     px, py, den = _tan_px_cols(F.col("t_ra"), F.col("t_dec"),

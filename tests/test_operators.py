@@ -37,6 +37,57 @@ def test_neighbors_complete_vs_dense_sampling():
             assert adj[p] <= got, f"order {order} pix {p}: missing {adj[p]-got}"
 
 
+def _closure(adj, p, rings):
+    """Brute-force ring-``rings`` disc of one pixel: breadth-first
+    expansion over the adjacency lookup ``adj`` (pixel -> neighbors)."""
+    seen, frontier = {p}, {p}
+    for _ in range(rings):
+        frontier = {q for f in frontier for q in adj(f)} - seen
+        seen |= frontier
+    return seen
+
+
+def test_disc_matches_neighbor_closure():
+    """healpix.disc / disc_lists equal the brute-force closure of
+    neighbors(): every pixel at orders <= 4 for 1-3 rings, random pixels
+    (plus face corners) at orders 8, 12 and 20 for 1-2 rings. Lists are
+    sorted and duplicate-free; table rows only repeat members."""
+    from spatialindex_spark.functions.healpix import disc, disc_lists
+
+    rng = np.random.default_rng(5)
+    cases = [(o, np.arange(12 << (2 * o)), r)
+             for o in range(5) for r in (1, 2, 3)]
+    for o in (8, 12, 20):
+        npface = 1 << (2 * o)
+        corners = np.array([f * npface + c for f in range(12)
+                            for c in (0, npface - 1)], dtype=np.int64)
+        pix = np.concatenate([rng.integers(0, 12 * npface, 150), corners])
+        cases += [(o, pix, r) for r in (1, 2)]
+    for order, pix, rings in cases:
+        if order <= 4:  # one neighbors() table for the whole sphere
+            nb = neighbors(order, np.arange(12 << (2 * order))).tolist()
+            adj = nb.__getitem__
+        else:
+            def adj(f, order=order):
+                return neighbors(order, np.array([f]))[0].tolist()
+        table = disc(order, pix, rings)
+        lists = disc_lists(order, pix, rings)
+        assert table.shape[0] == len(lists) == len(pix)
+        for p, row, cells in zip(pix, table, lists):
+            want = _closure(adj, int(p), rings)
+            assert np.all(np.diff(cells) > 0), (order, p, rings)
+            assert set(cells.tolist()) == want, (order, p, rings)
+            assert np.all(np.diff(row) >= 0) and set(row.tolist()) == want
+
+
+def test_disc_of_no_pixels_is_empty():
+    from spatialindex_spark.functions.healpix import disc, disc_lists
+
+    for rings in (0, 1, 2):
+        assert disc(7, np.array([], dtype=np.int64), rings).shape[0] == 0
+        assert disc_lists(7, [], rings) == []
+
+
 def test_codecs_roundtrip_and_psnr():
     for i in (0, 5, 9):
         for w in (16, 32, 64):

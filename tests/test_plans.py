@@ -9,6 +9,7 @@ at 100 TB must be visible in explain() output, not assumed.
   isnotnull pushdown used to duplicate it).
 """
 
+import math
 import re
 
 from pyspark.sql import functions as F
@@ -90,6 +91,50 @@ def test_crossmatch_cell_col_keeps_big_side_jvm(spark):
     got = set(map(tuple, cm.select("image_id_l", "image_id_r").collect()))
     want = set(map(tuple, ref.select("image_id_l", "image_id_r").collect()))
     assert got == want
+
+
+def test_crossmatch_deep_cell_col_one_python_eval(spark):
+    """Above JVM_RING_MAX_LEVEL the cell path's ring explode runs one
+    pandas UDF over the ingest cell ancestors (match level 12 here), the
+    right side stays a JVM key, and the pairs equal a numpy brute force.
+    The patch straddles the z = 2/3 polar/equatorial boundary and RA 0.
+    A left row with a null cell id gets no match keys, as on the map
+    path's inner join."""
+    import numpy as np
+
+    from spatialindex_spark.functions.healpix import hpx_id
+    from spatialindex_spark.operators.joins import (
+        JVM_RING_MAX_LEVEL, crossmatch, pick_match_level)
+
+    radius = 0.005
+    assert pick_match_level(radius) == 12 > JVM_RING_MAX_LEVEL
+    rng = np.random.default_rng(11)
+    n = 3000
+    ra = (rng.uniform(-0.5, 0.5, n)) % 360.0
+    dec = rng.uniform(41.3, 42.3, n)
+    cell = hpx_id(12, ra, dec)
+    rows = [(i, float(a), float(d), int(c))
+            for i, (a, d, c) in enumerate(zip(ra, dec, cell))]
+    cat = spark.createDataFrame(rows, "id long, ra double, dec double, "
+                                      "hpx12 long")
+    null_cell = spark.createDataFrame(
+        [(-1, float(ra[0]), float(dec[0]), None)], cat.schema)
+    left = cat.filter(F.col("id") % 5 == 0).unionByName(null_cell)
+    cm = crossmatch(left, cat, radius, cell_col="hpx12", cell_level=12)
+    assert _plan(cm).count("ArrowEvalPython") == 1, _plan(cm)[:2000]
+
+    rr, dr = np.radians(ra), np.radians(dec)
+    li = np.arange(0, n, 5)
+    dot = (np.cos(dr[li])[:, None] * np.cos(dr)[None, :]
+           * np.cos(rr[li][:, None] - rr[None, :])
+           + np.sin(dr[li])[:, None] * np.sin(dr)[None, :])
+    cosr = math.cos(math.radians(radius))
+    near = np.abs(dot - cosr) < 1e-12  # too close to call either way
+    want = {(int(li[a]), int(b)) for a, b in zip(*np.nonzero(dot >= cosr))}
+    unsure = {(int(li[a]), int(b)) for a, b in zip(*np.nonzero(near))}
+    got = {(r.id_l, r.id_r) for r in cm.select("id_l", "id_r").collect()}
+    assert len(want) > len(li)  # more than the self pairs
+    assert got - unsure == want - unsure
 
 
 def test_wholestage_codegen_on_geometry(spark):

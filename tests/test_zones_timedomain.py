@@ -289,7 +289,7 @@ def test_map_smooth_matches_numpy(spark):
     import numpy as np
 
     from spatialindex_spark.operators.counts import map_smooth
-    from spatialindex_spark.operators.joins import _hpx_neighbors
+    from spatialindex_spark.functions.healpix import neighbors
 
     rng = random.Random(13)
     level, npix = 2, 12 << (2 * 2)
@@ -300,8 +300,7 @@ def test_map_smooth_matches_numpy(spark):
            map_smooth(df, level, quant=100).collect()}
     assert set(got) == set(pres)
     for p in pres:
-        disc = set(np.atleast_1d(
-            _hpx_neighbors(level, np.array([p]))).ravel().tolist()) | {p}
+        disc = set(neighbors(level, np.array([p]))[0].tolist()) | {p}
         present = [q for q in disc if q in vals]
         s = sum(round(vals[q] * 100) for q in present)
         assert got[p][0] == len(present)
