@@ -10,9 +10,17 @@ one window partition); auto_levels starts each row at the finest level
 its local density supports, so the clump probes fine cells and the field
 coarse ones.
 
-Measured in isolated sessions (one per config); result equality is
-asserted via a full checksum. Writes bench_artifacts/knn_skew_probe.json.
-Run ISOLATED (single-box co-tenancy swings shuffle timings 2x).
+A second sky puts N_RESID rows inside ~0.07 arcsec: one cell at every
+level knn_join probes, so the cogroup must split it over hash groups
+(``split_cells`` in knn._DECISIONS) rather than hold its N_RESID^2 pairs
+in one task. auto_levels and the fixed ladder must agree on it too.
+
+Measured in isolated sessions (one per config, one core per available
+CPU); result equality is asserted via a full checksum. Writes
+bench_artifacts/knn_skew_probe.json. Run ISOLATED (single-box co-tenancy
+swings shuffle timings 2x), with SPARK_GRAFT_DRIVER_MEM=4g:
+
+    SPARK_GRAFT_DRIVER_MEM=4g python scripts/knn_skew_probe.py [clump|resid]
 """
 
 from __future__ import annotations
@@ -22,18 +30,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 N_FIELD = int(os.environ.get("KNN_PROBE_FIELD", "500000"))
 N_CLUMP = int(os.environ.get("KNN_PROBE_CLUMP", "10000"))
-# residual-extreme-key fixture: N_RESID rows inside ~1 arcsec — one
-# level-16 (max_fine_level) cell. The drill-down cannot split it, so the
-# candidate join holds one N_RESID^2-pair key REGARDLESS of probe level;
-# auto salting splits that single task into ceil(count/SALT_TARGET)
-# salt tasks (right rows hashed, left rows replicated) — the regime
-# the auto_levels residual salting targets.
+# residual-extreme-key fixture: N_RESID rows inside ~0.07 arcsec, one
+# cell at every probe level, so its N_RESID^2 pairs meet in one cell
+# REGARDLESS of level; the cogroup splits that cell's left rows over
+# ceil(pairs / PAIR_BUDGET) hash groups and replicates its right rows
 N_RESID = int(os.environ.get("KNN_PROBE_RESID", "12000"))
 RESID_R = 1e-5       # deg half-width (~0.04 arcsec: no cell straddle)
 # 0.05-deg half-width: the whole clump fits in ~one level-7 cell, so a
@@ -49,7 +55,11 @@ FIXED_LEVELS = (7, 5, 3, 0)   # what the sparse field alone would want
 def get_session(tag: str):
     from spatialindex_spark.plans.session import get_session as gs
 
-    spark = gs(app=f"knnskew-{tag}", cores=32, shuffle_partitions=64)
+    # every Python worker is a process: one core per CPU this process may
+    # run on, not a fixed count
+    cores = len(os.sched_getaffinity(0))
+    spark = gs(app=f"knnskew-{tag}", cores=cores,
+               shuffle_partitions=max(2 * cores, 8))
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
@@ -86,18 +96,14 @@ def resid_sky(spark):
     return field.unionByName(resid).localCheckpoint(eager=True)
 
 
-def run(tag: str, sky_fn=None, consts=None, **kw):
-    """One isolated knn_join run; ``consts`` overrides knn.py module
-    constants (e.g. RESIDUAL_HOT) for this run only."""
+def run(tag: str, sky_fn=None, **kw):
+    """One isolated knn_join run: its time, row count, checksum, and the
+    number of split cells over all rungs."""
     from spatialindex_spark.operators import knn as knn_mod
     from spatialindex_spark.operators.knn import knn_join
 
-    consts = consts or {}
-    saved = {name: getattr(knn_mod, name) for name in consts}
     spark = get_session(tag)
     try:
-        for name, value in consts.items():
-            setattr(knn_mod, name, value)
         pts = (sky_fn or sky)(spark)
         t0 = time.perf_counter()
         out = knn_join(pts, pts, k=K, left_id="pid", right_id="pid",
@@ -109,12 +115,13 @@ def run(tag: str, sky_fn=None, consts=None, **kw):
                          F.lit(10 ** 9))).alias("chk")).collect()[0]
         secs = time.perf_counter() - t0
     finally:
-        for name, value in saved.items():
-            setattr(knn_mod, name, value)
         spark.stop()
+    rungs = knn_mod._DECISIONS["rungs"]
     return {"config": tag, "secs": round(secs, 2),
             "rows": agg["n"], "checksum": int(agg["chk"]),
-            "salted_cells": knn_mod._DECISIONS.get("salted_cells")}
+            "rungs": [r["level"] for r in rungs],
+            "split_cells": sum(r["split_cells"] for r in rungs),
+            "max_group_pairs": max(r["max_group_pairs"] for r in rungs)}
 
 
 def main():
@@ -146,34 +153,27 @@ def main():
                 results[1]["secs"] / results[0]["secs"], 2),
         })
 
-    if mode in ("all", "resid", "resid_big"):
-        # PAST the drill-down caps: the clump fits one MAX_FINE_LEVEL
-        # cell, so no probe level can split its join key. A/B the auto
-        # residual salting (should self-enable) against it switched off
-        # by a RESIDUAL_HOT no cell reaches.
+    if mode in ("all", "resid"):
+        # past any probe level's resolution: the clump is one cell on every
+        # rung, so only the split bounds its task
         resid = [
-            run("resid_salted_auto", sky_fn=resid_sky, level=8,
-                auto_levels=True),
-            run("resid_unsalted", sky_fn=resid_sky, level=8,
-                auto_levels=True, consts={"RESIDUAL_HOT": 10 ** 12}),
+            run("resid_auto_levels", sky_fn=resid_sky, auto_levels=True),
+            run("resid_fixed_ladder", sky_fn=resid_sky,
+                level=FIXED_LEVELS[0], levels=FIXED_LEVELS),
         ]
         assert all(r["rows"] == K * (N_FIELD + N_RESID) for r in resid)
         assert len({r["checksum"] for r in resid}) == 1, \
             "residual configs disagree on the result"
-        assert resid[0]["salted_cells"] >= 1, \
-            "auto failed to detect the residual extreme key"
-        assert all(r["salted_cells"] == 0 for r in resid[1:])
-        key = "resid_results" if mode != "resid_big" else "resid_big_results"
-        pfx = "resid" if mode != "resid_big" else "resid_big"
-        for stale in ("n_resid", "resid_halfwidth_deg",
-                      "resid_speedup_partial"):
+        assert all(r["split_cells"] >= 1 for r in resid), \
+            "the residual extreme key was not split"
+        for stale in ("resid_speedup_salted", "resid_big_n_field",
+                      "resid_big_n", "resid_big_halfwidth_deg",
+                      "resid_big_results", "resid_big_speedup_salted"):
             out.pop(stale, None)
         out.update({
-            f"{pfx}_n_field": N_FIELD,
-            f"{pfx}_n": N_RESID, f"{pfx}_halfwidth_deg": RESID_R,
-            key: resid,
-            f"{pfx}_speedup_salted": round(
-                resid[1]["secs"] / resid[0]["secs"], 2),
+            "resid_n_field": N_FIELD,
+            "resid_n": N_RESID, "resid_halfwidth_deg": RESID_R,
+            "resid_results": resid,
         })
 
     with open(path, "w") as f:

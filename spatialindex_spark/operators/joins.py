@@ -465,19 +465,22 @@ def _ring1_map_df(spark, lvl: int, rings: int = 1) -> DataFrame:
 
 
 def _persist_ring_map(key, df: DataFrame) -> DataFrame:
-    """Session-lifetime persist of a ring map (pure geometry, data-
+    """Session-lifetime copy of a ring map (pure geometry, data-
     independent — a function of (level, rings) only, the engine's dr[o]
     table analogue). Without it every query execution re-materializes
     the 12*4^lvl-row LocalRelation inside its broadcast build — profiled
     at level 7: 1.1 s 'time to collect' + 0.2 s build PER QUERY (guide
-    §5 caching: reused AND expensive to recompute). Persisted it reads
-    from the block store; interleaved A/B on the bench crossmatch:
-    1.99 s -> 1.47 s. Bounded: levels are capped at JVM_RING_MAX_LEVEL
-    (786k rows, ~60 MB) and the cache is per (session, lvl, rings)."""
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    §5 caching: reused AND expensive to recompute). A local checkpoint
+    rather than a persist: both read from the block store, but a persisted
+    frame keeps the LocalRelation, all 196k rows at level 7, in every plan
+    that joins it, and analysing those plans cost crossmatch ~0.25 s of
+    its ~0.4 s frame build per call (0.13-0.2 s with the checkpoint).
+    Bounded: levels are capped at JVM_RING_MAX_LEVEL (786k rows, ~60 MB)
+    and the cache is per (session, lvl, rings); the broadcast-hinted frame
+    is cached next to it."""
+    df = df.localCheckpoint(eager=True)
     _RING1_MAP_CACHE[key] = df
+    _RING1_MAP_CACHE[key + ("broadcast",)] = F.broadcast(df)
     return df
 
 
@@ -512,9 +515,12 @@ def ring_explode(df: DataFrame, pix: Column, lvl: int, rings: int = 1,
         return df.select(*cols, F.explode(_disc_udf(lvl, rings)(pix))
                          .alias("_mc"))
     keyed = df.select(*cols, pix.alias("_pix"))
-    ring_map = _ring1_map_df(df.sparkSession, lvl, rings)
-    return (keyed.join(F.broadcast(ring_map), "_pix")
-            .select(*keyed.columns[:-1], F.explode("_ring").alias("_mc")))
+    spark = df.sparkSession
+    _ring1_map_df(spark, lvl, rings)
+    ring_map = _RING1_MAP_CACHE[(spark, lvl, rings, "broadcast")]
+    return (keyed.join(ring_map, "_pix")
+            .selectExpr(*map(_sql_name, keyed.columns[:-1]),
+                        "explode(_ring) AS _mc"))
 
 
 def check_hpx_cell_col(data: DataFrame, cell_col: str, cell_level: int) -> None:
@@ -544,13 +550,23 @@ def hpx_cell_key(cell_col: str, cell_level: int, match_level: int):
     call; VERDICT r1 'What's wrong' #4). NULL cells pass through as NULL
     keys (dropped by the inner join), matching the sampled guard's
     behavior."""
-    c = F.col(cell_col)
-    limit = 12 << (2 * cell_level)
-    ok = c.isNull() | ((c >= 0) & (c < F.lit(limit)))
-    guard = F.assert_true(
-        ok, f"{cell_col} is not a nested-HPX cell id at level {cell_level} "
-            f"(did you pass an HTM column?)")
-    return F.when(guard.isNull(), F.shiftright(c, 2 * (cell_level - match_level)))
+    c = _sql_name(cell_col)
+    msg = (f"{cell_col} is not a nested-HPX cell id at level {cell_level} "
+           "(did you pass an HTM column?)").replace("'", "\\'")
+    # one SQL expression: a single py4j call instead of one per operator
+    return F.expr(
+        f"CASE WHEN assert_true({c} IS NULL OR ({c} >= 0 AND "
+        f"{c} < {12 << (2 * cell_level)}), '{msg}') IS NULL "
+        f"THEN shiftright({c}, {2 * (cell_level - match_level)}) END")
+
+
+def _sql_name(col: str) -> str:
+    """``col`` as a SQL column reference that resolves as ``F.col(col)``
+    does: each dot-separated part backquoted (so keywords and odd
+    characters parse), a name the caller already quoted kept as is."""
+    if "`" in col:
+        return col
+    return ".".join(f"`{part}`" for part in col.split("."))
 
 
 def pick_match_level(radius_deg: float, max_level: int = 20) -> int:
@@ -620,39 +636,38 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
 
     lr, ld = left_cols
     rr, rd = right_cols
-    lsel = [F.col(c).alias(c + suffixes[0]) for c in left.columns]
-    rsel = [F.col(c).alias(c + suffixes[1]) for c in right.columns]
-
+    # renamed once, keys and predicate as one SQL expression each: the
+    # frame build is a handful of py4j calls, not one per column operator
+    sl, sr = suffixes
+    left = left.toDF(*[c + sl for c in left.columns])
+    right = right.toDF(*[c + sr for c in right.columns])
     if use_cell:
         # both sides share the guarded key expression, an in-plan
         # every-row range check with no sampling job; at match levels
         # <= JVM_RING_MAX_LEVEL the left explode rides the broadcast map,
         # so the WHOLE crossmatch plan is free of ArrowEvalPython
         # (plan-asserted)
-        lpix = rkey_col = hpx_cell_key(cell_col, cell_level, lvl)
+        lpix = hpx_cell_key(cell_col + sl, cell_level, lvl)
+        rkey_col = hpx_cell_key(cell_col + sr, cell_level, lvl)
     else:
         from ..functions.udfs import hpx_udf
 
-        lpix = hpx_udf(lvl)(F.col(lr), F.col(ld))
-        rkey_col = hpx_udf(lvl)(F.col(rr), F.col(rd))
-    lkey = ring_explode(left, lpix, lvl, rings, cols=lsel)
-    rkey = right.select(*rsel, rkey_col.alias("_mc"))
+        lpix = hpx_udf(lvl)(F.col(lr + sl), F.col(ld + sl))
+        rkey_col = hpx_udf(lvl)(F.col(rr + sr), F.col(rd + sr))
+    lkey = ring_explode(left, lpix, lvl, rings)
+    rkey = right.withColumn("_mr", rkey_col)
 
-    pairs = lkey.join(rkey, "_mc").drop("_mc")
-
-    lrc, ldc = lr + suffixes[0], ld + suffixes[0]
-    rrc, rdc = rr + suffixes[1], rd + suffixes[1]
+    lrc, ldc, rrc, rdc = map(_sql_name, (lr + sl, ld + sl, rr + sr, rd + sr))
+    dot = (f"COS(RADIANS({ldc})) * COS(RADIANS({rdc})) "
+           f"* COS(RADIANS({lrc}) - RADIANS({rrc})) "
+           f"+ SIN(RADIANS({ldc})) * SIN(RADIANS({rdc}))")
     cosr = math.cos(radius_deg * RAD_PER_DEG)
-    rad = F.radians
-    dot = (
-        F.cos(rad(F.col(ldc))) * F.cos(rad(F.col(rdc)))
-        * F.cos(rad(F.col(lrc)) - rad(F.col(rrc)))
-        + F.sin(rad(F.col(ldc))) * F.sin(rad(F.col(rdc)))
-    )
     # no dedup pass needed: the right side has exactly ONE cell key and the
     # left side's ring cells are deduped per row, so each (l, r) pair can
     # match on at most one key — the join output is already duplicate-free
-    return pairs.filter(dot >= F.lit(cosr))
+    return lkey.join(rkey, F.expr(
+        f"_mc = _mr AND {dot} >= CAST('{cosr!r}' AS DOUBLE)")
+    ).drop("_mc", "_mr")
 
 
 def best_match(left: DataFrame, right: DataFrame, radius_deg: float,

@@ -1,34 +1,23 @@
-"""k-nearest-neighbors via iterative cell-ring expansion (SURVEY.md J4).
+"""k-nearest neighbours by HEALPix ring-disc widening (SURVEY.md J4).
 
-The reference's selection kernels (htm_select/htm_min, select.c) solve the
-single-node top-k problem by pruning a tree search that widens until
-satisfied (htm.c:1582-1700 prunes, never full-scans). The distributed
-analogue:
+The reference's selection kernels (htm_select/htm_min, select.c) answer
+kNN by widening a pruned tree search until it is satisfied
+(htm.c:1582-1700 prunes, never full-scans). Both operators here widen a
+ring-1 disc the same way, and both stop on the same certificate: a point
+whose k-th candidate lies within the per-order SAFE ring-1 radius
+(healpix.safe_ring1_rad, cf. sptQueryLib.c:1363-1382's dr[o] table) holds
+its exact top-k, since every point that close shares a disc cell with it.
 
-1. every query point gets its HPX cell + its ring-``rings`` neighbor disc
-   (ring-r cells via exact nested adjacency, bounded by the per-order SAFE
-   ring-1 radius — cf. sptQueryLib.c:1363-1382's dr[o] table);
-2. candidates = data rows in any disc cell, joined on the cell key
-   (broadcast hash join — the query side is small);
-3. exact angular distance + Window.partitionBy(query).orderBy(dist)
-   rank <= k;
-4. queries that do NOT hold k candidates within the *verified* radius
-   (sparse regions, k above local density) iteratively widen: each round
-   targets 4x the verified radius, probing ONLY the starved queries' NEW
-   shell cells through the same broadcast hash equi-join. When the ring
-   disc at the current level would exceed a bounded cell budget, the probe
-   level COARSENS instead (the data key is a shiftright of the fine cell),
-   so the broadcast never exceeds starved x budget rows; the terminal
-   full-sphere state is a 12-key level-0 equi-join — NEVER a full-table
-   CartesianProduct/BroadcastNestedLoopJoin and never a cell blow-up
-   (tests assert exactness on starved fixtures at fine levels and the
-   absence of any cross join).
-
-The ring radius guarantees correctness: ring r covers every point within
-r * safe_ring1_rad, so a query stops expanding once it holds k candidates
-within the verified radius. For the common bounded-k use the default
-start_ring already suffices and the plan is a single broadcast join + one
-window.
+- :func:`knn` serves a small query frame against a big data table. The
+  queries are broadcast into a cell equi-join with the data, one
+  window rank picks the top k, and only starved queries probe wider
+  shells (coarsening the level under a cell budget) until the certificate
+  holds or the disc covers the sphere.
+- :func:`knn_join` serves a big left table against a big right table
+  (k nearest for EVERY left row). Each rung of its level ladder is one
+  cell-local cogroup: left rows keyed by their cell, right rows by their
+  ring-1 disc, and one vectorised numpy top-k per cell. Rows the rung
+  cannot certify move to a rung two levels coarser.
 """
 
 from __future__ import annotations
@@ -38,29 +27,23 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..functions.geometry import RAD_PER_DEG
 from ..functions.healpix import disc_lists, hpx_id, safe_ring1_rad
 from .joins import hpx_cell_key, ring_explode
 
-# last knn_join auto decisions, for probe/test introspection only
+#: per-rung row counts of the last knn_join call (introspection only)
 _DECISIONS: dict = {}
 
-# knn_join tuning constants. Module-level, so probes and tests can patch them.
-OVERSAMPLE = 2.0               # start rung holds k + OVERSAMPLE*sqrt(k) rows
-MAX_FINE_LEVEL = 16            # finest probe level the density profile assigns
-PRUNE_MAX_ACTIVE = 200_000     # rungs this small semi-prune the right side
-MIN_CNT = 48                   # stable profile cell count (~14% Poisson error)
-REFINE_CNT = 4 * MIN_CNT       # the drill-down refines only cells this hot ...
-TOP_REFINE = 8192              # ... and at most this many of them per step
-DRILL_CKPT_MAX = 8_000_000     # drill survivors are checkpointed up to this
-DRILL_COLLECT_MAX = 4_000_000  # hot-cell mass the drill finishes in numpy
-RESIDUAL_HOT = 4000            # finest-grid cell size that gets salted
-SALT_TARGET = 2000             # right rows per salt group
-MERGE_PAIR_BUDGET = 8_000_000  # extra pairs a sparse-rung fold may add
-SAT_BC_MAX = 4_000_000         # satisfied sets broadcast into semi/anti joins
+# knn_join constants. Module-level, so probes and tests can patch them.
+MAX_FINE_LEVEL = 16         # finest start rung auto_levels picks
+START_CELL_ROWS = 64        # auto_levels: right rows per start-rung cell
+PAIR_BUDGET = 1 << 24       # candidate pairs one cogroup group may hold
+BLOCK_ENTRIES = 1 << 21     # dot-matrix entries one kernel block holds
+GROUP_LEVELS = 2            # a cogroup group holds 4**GROUP_LEVELS cells
 
 
 def _shell_udf(lvl: int, r_lo: int, r_hi: int):
@@ -110,6 +93,13 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
     Python), with an in-plan assert_true range guard (every row validated
     inside whole-stage codegen; no sampling job). The search level is
     capped at ``cell_level``.
+
+    This stays on its broadcast widening path rather than knn_join's
+    cogroup kernel: a cogroup shuffles the whole data table (nine times
+    over, ring-exploded) into Python on every rung, where the broadcast
+    equi-join here leaves the big side unshuffled and in the JVM, and only
+    the starved queries' new shells are probed on later rounds. For a
+    handful of queries against a big table that is the cheaper plan.
     """
     if level is None:
         if max_radius_deg is not None:
@@ -264,206 +254,89 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
     return out
 
 
-def _vr_deg(level: int) -> float:
-    """Verified ring-1 radius of a probe level, in degrees."""
-    return safe_ring1_rad(level) / RAD_PER_DEG
+def _topk_block(lv: tuple, rv: tuple, lc: np.ndarray, rc: np.ndarray,
+                k: int, exclude_self: bool) -> tuple:
+    """Top k right rows of each left row of one block.
+
+    ``lv``/``rv`` are (x, y, z) unit-vector arrays, ``lc``/``rc`` integer
+    codes of the ids, ordered like the ids. Returns ``(rows, cols, rank,
+    kth)``: the kept (left, right) index pairs in (left, -dot, right id)
+    order with their 1-based rank, and each left row's k-th largest dot
+    (-inf below k candidates). Every candidate tied with the k-th dot
+    enters the sort, so ties break on the right id exactly. The dot is
+    elementwise ((x*x + y*y) + z*z), never BLAS: equal positions give
+    bit-equal dots whatever their place in the block."""
+    dot = np.multiply.outer(lv[0], rv[0])
+    dot += np.multiply.outer(lv[1], rv[1])
+    dot += np.multiply.outer(lv[2], rv[2])
+    if exclude_self:
+        dot[lc[:, None] == rc[None, :]] = -np.inf
+    m = dot.shape[1]
+    kth = (np.partition(dot, m - k, axis=1)[:, m - k] if m >= k
+           else np.full(len(dot), -np.inf))
+    rows, cols = np.nonzero(dot >= kth[:, None])
+    d = dot[rows, cols]
+    ok = d > -np.inf
+    rows, cols, d = rows[ok], cols[ok], d[ok]
+    o = np.lexsort((rc[cols], -d, rows))
+    rows, cols = rows[o], cols[o]
+    rank = np.arange(1, len(rows) + 1) - np.searchsorted(rows, rows)
+    keep = rank <= k
+    return rows[keep], cols[keep], rank[keep], kth
 
 
-def _cell_area(level: int) -> float:
-    return 41252.96124941928 / (12 << (2 * level))  # sq deg per cell
+def _cell_topk(k: int, exclude_self: bool, min_dot: float, lcols: list):
+    """Cogroup function of one rung. A group is a block of cells ``_c``,
+    or one hash share of a hot cell: each cell's left rows meet the right
+    rows keyed to that cell, i.e. the right rows of its ring-1 disc.
 
+    A left row whose k-th dot is >= ``min_dot`` is answered: k rows with
+    ``_rid`` and ``knn_rank``. Any other row comes back once, with
+    ``knn_rank`` 0, a null ``_rid`` and its ``lcols``, for the next rung.
+    ``_np`` carries the group's pair count. A cell's left rows are
+    processed in blocks of at most BLOCK_ENTRIES dot products."""
 
-def _rung_density(k: int, level: int) -> float:
-    """Density (rows / sq deg) at which a row's verified disc at ``level``
-    is expected to hold ``k + OVERSAMPLE * sqrt(k)`` rows."""
-    need = k + OVERSAMPLE * math.sqrt(k)
-    return need / (math.pi * _vr_deg(level) ** 2)
+    def run(lf: pd.DataFrame, rf: pd.DataFrame) -> pd.DataFrame:
+        if lf.empty:
+            return pd.DataFrame()
+        lf, rf = (f.sort_values("_c", kind="stable") for f in (lf, rf))
+        n = len(lf)
+        # right id codes in id order, nulls (-1) first as Spark orders
+        # them; a left id's code is its right id's, or -2 (equal to none)
+        rc, ids = pd.factorize(rf["_rid"].to_numpy(), sort=True)
+        lc = pd.Index(ids).get_indexer(lf["_lid"].to_numpy())
+        lc[lc < 0] = -2
+        lv = [lf[c].to_numpy() for c in ("_lx", "_ly", "_lz")]
+        rv = [rf[c].to_numpy() for c in ("_rx", "_ry", "_rz")]
+        rcell = rf["_c"].to_numpy()
+        cells, l0 = np.unique(lf["_c"].to_numpy(), return_index=True)
+        l1 = np.append(l0[1:], n)
+        r0, r1 = (np.searchsorted(rcell, cells, side)
+                  for side in ("left", "right"))
+        sat, parts = np.empty(n, bool), []
+        for a, b, c, d in zip(l0, l1, r0, r1):
+            step = max(1, BLOCK_ENTRIES // max(d - c, 1))
+            for s in range(a, b, step):
+                e = min(s + step, b)
+                rows, cols, rank, kth = _topk_block(
+                    [x[s:e] for x in lv], [x[c:d] for x in rv], lc[s:e],
+                    rc[c:d], k, exclude_self)
+                sat[s:e] = kth >= min_dot
+                keep = sat[s:e][rows]
+                parts.append((rows[keep] + s, cols[keep] + c, rank[keep]))
+        rows, cols, rank = (np.concatenate(p) for p in zip(*parts))
+        rid = rf["_rid"].to_numpy()[cols]
+        miss = np.flatnonzero(~sat)  # back once each, rank 0 and no _rid
+        if len(miss):
+            rows = np.concatenate([rows, miss])
+            rank = np.concatenate([rank, np.zeros(len(miss), rank.dtype)])
+            rid = np.concatenate([rid.astype(object), [None] * len(miss)])
+        out = {c: lf[c].to_numpy()[rows] for c in lcols}
+        out.update(_rid=rid, knn_rank=rank.astype(np.int32),
+                   _np=np.full(len(rows), int((l1 - l0) @ (r1 - r0))))
+        return pd.DataFrame(out)
 
-
-def _union_all(frames: list) -> DataFrame:
-    return functools.reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def _first_when(cases, default: Column) -> Column:
-    """CASE WHEN c1 THEN v1 WHEN c2 THEN v2 ... ELSE default END."""
-    out = None
-    for cond, val in cases:
-        out = F.when(cond, val) if out is None else out.when(cond, val)
-    return default if out is None else out.otherwise(default)
-
-
-def _density_profile(lf: DataFrame, rk_base: DataFrame, k: int,
-                     cell_level: int | None):
-    """Start rung ``_albl`` for every left row of an auto_levels knn_join.
-
-    The right side is counted once per cell at a reference level capped at
-    JVM_RING_MAX_LEVEL, so the counts frame holds at most 12*4^8 rows
-    whatever the table size; coarser grids are shiftright rollups of it.
-    One global grid cannot serve a skewed sky: too coarse and a clump's
-    density dilutes over its big cell, too fine and the sparse field's
-    counts are 0/1 Poisson noise. So each left row reads its density from
-    the FINEST grid whose count is stable (>= MIN_CNT).
-
-    A clump smaller than a reference cell still dilutes, so below the
-    reference grid the profile drills down two levels at a time, inside
-    hot cells only (>= REFINE_CNT rows, at most TOP_REFINE per step). Every
-    counts frame therefore stays bounded at any table size. The hot cells'
-    row count is known up front: when it fits DRILL_COLLECT_MAX their keys
-    are collected once and the drill finishes in numpy with no further
-    Spark jobs; above it, a distributed loop runs the same refinement at
-    about four Spark jobs per step.
-
-    Each row starts on the finest even rung whose verified disc is expected
-    to hold ``k + OVERSAMPLE * sqrt(k)`` rows at its density: enough to be
-    satisfied with high Poisson probability and no more, since each rung
-    coarser costs 16x the candidate pairs. The rung only shapes cost; the
-    sweep's satisfaction check keeps the result exact.
-
-    Returns ``(todo, finest, finest_level)``: ``lf`` plus ``_albl``
-    (checkpointed), and the finest counts frame (``_dc``, ``_dn``) with
-    its level.
-    """
-    from ..functions.udfs import hpx_udf
-    from .joins import JVM_RING_MAX_LEVEL
-
-    spark = lf.sparkSession
-    use_cell = cell_level is not None
-    even_top = MAX_FINE_LEVEL - MAX_FINE_LEVEL % 2
-    ref_top = (min(cell_level, JVM_RING_MAX_LEVEL) if use_cell
-               else JVM_RING_MAX_LEVEL)
-    refs = list(range(ref_top, -1, -2))  # finest ... coarsest
-
-    def _key_at(cell: str, fine: str, R: int) -> Column:
-        """Level-R key from the ingest cell column, or a shiftright of the
-        level-even_top key column ``fine``."""
-        if use_cell and R <= cell_level:
-            return hpx_cell_key(cell, cell_level, R)
-        return F.shiftright(fine, 2 * (even_top - R))
-
-    def _hpx(ra: str, dec: str, R: int) -> Column:
-        return hpx_udf(R)(F.col(ra), F.col(dec))
-
-    rref = (hpx_cell_key("_rcell", cell_level, ref_top) if use_cell
-            else _hpx("_rra", "_rdec", ref_top))
-    lref = (hpx_cell_key("_lcell", cell_level, ref_top) if use_cell
-            else _hpx("_lra", "_ldec", ref_top))
-    counts_top = (rk_base.groupBy(rref.alias("_dc"))
-                  .agg(F.count(F.lit(1)).alias("_dn"))
-                  .localCheckpoint(eager=True))
-
-    fine_grids: list = []  # [(level, counts_df)], finest last
-    cur, lvlp = counts_top, ref_top
-    drill_done = lvlp + 2 > even_top
-    if not drill_done:
-        hot0 = (counts_top.filter(F.col("_dn") >= REFINE_CNT)
-                .orderBy(F.col("_dn").desc()).limit(TOP_REFINE).collect())
-        drill_done = not hot0  # no refinable cell anywhere
-    if not drill_done and sum(r["_dn"] for r in hot0) <= DRILL_COLLECT_MAX:
-        hdf = spark.createDataFrame([(int(r["_dc"]),) for r in hot0],
-                                    "_hc long")
-        if use_cell:
-            # prune on the ingest cell column (ref_top <= cell_level), so
-            # only survivors reach the key UDF
-            keyed = (rk_base.join(
-                F.broadcast(hdf),
-                hpx_cell_key("_rcell", cell_level, ref_top) == F.col("_hc"),
-                "left_semi")
-                .select((hpx_cell_key("_rcell", cell_level, even_top)
-                         if even_top <= cell_level
-                         else _hpx("_rra", "_rdec", even_top)).alias("_k")))
-        else:
-            keyed = (rk_base.withColumn("_k", _hpx("_rra", "_rdec", even_top))
-                     .join(F.broadcast(hdf),
-                           F.shiftright("_k", 2 * (even_top - ref_top))
-                           == F.col("_hc"), "left_semi")
-                     .select("_k"))
-        keys = keyed.toPandas()["_k"].to_numpy().astype(np.int64)
-        hot = np.array([int(r["_dc"]) for r in hot0], dtype=np.int64)
-        while lvlp + 2 <= even_top and hot.size:
-            nxt = lvlp + 2
-            keys = keys[np.isin(keys >> np.int64(2 * (even_top - lvlp)), hot)]
-            cells, cnts = np.unique(keys >> np.int64(2 * (even_top - nxt)),
-                                    return_counts=True)
-            keep = cnts >= MIN_CNT
-            cells, cnts = cells[keep], cnts[keep]
-            if cells.size == 0:
-                break
-            cur, lvlp = spark.createDataFrame(
-                pd.DataFrame({"_dc": cells.astype(np.int64),
-                              "_dn": cnts.astype(np.int64)}),
-                "_dc long, _dn long"), nxt
-            fine_grids.append((lvlp, cur))
-            hm = cnts >= REFINE_CNT
-            hot = cells[hm][np.argsort(-cnts[hm], kind="stable")[:TOP_REFINE]]
-        drill_done = True
-
-    def _with_rf(df: DataFrame, R: int) -> DataFrame:
-        if "_rf" in df.columns or (use_cell and R <= cell_level):
-            return df
-        return df.withColumn("_rf", _hpx("_rra", "_rdec", even_top))
-
-    srv = rk_base  # right rows inside the current hot cells
-    while not drill_done and lvlp + 2 <= even_top:
-        nxt = lvlp + 2
-        hot = (cur.filter(F.col("_dn") >= REFINE_CNT)
-               .orderBy(F.col("_dn").desc()).limit(TOP_REFINE)
-               .select(F.col("_dc").alias("_hc"), "_dn")
-               .localCheckpoint(eager=True))
-        # one small collect answers emptiness and gives the exact survivor
-        # count for the checkpoint gate
-        hot_rows = hot.select("_dn").collect()
-        if not hot_rows:
-            break
-        # prune on a JVM key first (the ingest cell column, or _rf from an
-        # earlier step), then key the survivors
-        srv = _with_rf(_with_rf(srv, lvlp).join(
-            F.broadcast(hot.select("_hc")),
-            _key_at("_rcell", "_rf", lvlp) == F.col("_hc"), "left_semi"), nxt)
-        # otherwise each step rescans the full table through the lazy chain;
-        # above the cap the chain stays lazy rather than materialise an
-        # unbounded frame
-        if sum(r["_dn"] for r in hot_rows) <= DRILL_CKPT_MAX:
-            srv = srv.localCheckpoint(eager=True)
-        fine = (srv.groupBy(_key_at("_rcell", "_rf", nxt).alias("_dc"))
-                .agg(F.count(F.lit(1)).alias("_dn"))
-                .filter(F.col("_dn") >= MIN_CNT)
-                .localCheckpoint(eager=True))
-        if fine.limit(1).count() == 0:
-            break
-        fine_grids.append((nxt, fine))
-        cur, lvlp = fine, nxt
-
-    todo = lf.withColumn("_p", lref)
-    if fine_grids and not (use_cell and fine_grids[-1][0] <= cell_level):
-        todo = todo.withColumn("_pf", _hpx("_lra", "_ldec", even_top))
-    grids = [(R, _key_at("_lcell", "_pf", R), cdf) for R, cdf in fine_grids]
-    grids += [(R, F.shiftright("_p", 2 * (ref_top - R)),
-               counts_top if R == ref_top else
-               counts_top.groupBy(
-                   F.shiftright("_dc", 2 * (ref_top - R)).alias("_dc"))
-               .agg(F.sum("_dn").alias("_dn"))) for R in refs]
-    for R, key, cdf in grids:
-        cdf = cdf.select(F.col("_dc").alias(f"_dc{R}"),
-                         F.col("_dn").alias(f"_dn{R}"))
-        todo = (todo.withColumn(f"_dc{R}", key)
-                .join(F.broadcast(cdf), f"_dc{R}", "left"))
-    refs_all = sorted((R for R, _, _ in grids), reverse=True)
-
-    def cnt(R):
-        return F.coalesce(F.col(f"_dn{R}"), F.lit(0)).cast("double")
-
-    def dens(R):
-        return cnt(R) / F.lit(_cell_area(R))
-
-    # rows / sq deg at the finest stable grid
-    d = _first_when(((cnt(R) >= MIN_CNT, dens(R)) for R in refs_all),
-                    dens(refs[-1]))
-    albl = _first_when(((d >= _rung_density(k, L), L)
-                        for L in range(even_top, 0, -2)), F.lit(0))
-    todo = (todo.withColumn("_albl", albl)
-            .drop("_p", "_pf", *[f"_d{c}{R}" for c in "cn" for R in refs_all])
-            .localCheckpoint(eager=True))
-    return todo, cur, lvlp
+    return run
 
 
 def knn_join(left: DataFrame, right: DataFrame, k: int,
@@ -480,327 +353,192 @@ def knn_join(left: DataFrame, right: DataFrame, k: int,
     pruning, htm.c:1582-1700, at table scale).
 
     Unlike :func:`knn`, which broadcasts a small query frame, neither side
-    is broadcast: both are keyed at a probe level and the candidate join is
-    a shuffled cell equi-join (plan-asserted in tests). Each left row
-    explodes into its ring-1 disc (:func:`~.joins.ring_explode`: the
-    broadcast ring map up to JVM_RING_MAX_LEVEL, the only broadcast in the
-    plan, and one pandas UDF above), so every pair within the level's
-    verified radius shares a key.
+    is broadcast. A RUNG is a probe level L, and each rung is one
+    ``groupBy(cell).cogroup(...).applyInPandas`` pass: left rows are keyed
+    by their level-L cell, right rows by every cell of their ring-1 disc
+    (:func:`~.joins.ring_explode`: the broadcast ring map up to
+    JVM_RING_MAX_LEVEL, one pandas UDF above). A cell so meets every
+    right row within safe_ring1_rad(L) of its left rows, and one
+    vectorised numpy pass computes the dot products in blocks of at most
+    BLOCK_ENTRIES and keeps the top k per left row. A cogroup group holds
+    the 4**GROUP_LEVELS sibling cells of one coarser parent and runs them
+    cell by cell: each group costs Spark and Arrow a fixed few ms, which
+    768 one-cell groups paid ~1 s of a 50k-row rung for. A left row is
+    answered when its k-th dot is >= cos(safe_ring1_rad(L)): no uncovered
+    point, being farther away, can enter its true top-k. Other rows carry
+    themselves, one row each, to the next rung of the ladder, so duplicate
+    left ids are answered row by row.
 
-    RUNG LADDER. A rung is a probe level, and the ladder is the descending
-    list of them: ``levels`` (default ``(level, level-2, 0)``), or under
-    ``auto_levels=True`` every even level from MAX_FINE_LEVEL down to 0.
-    A left row is SATISFIED on rung L when its k-th candidate lies within
-    safe_ring1_rad(L): no uncovered point, being farther away, can enter
-    its true top-k. Every left row starts on a rung: ``levels[0]``, or
-    under ``auto_levels`` the finest rung its local density supports (see
-    :func:`_density_profile`), so a dense clump probes fine cells and the
-    sparse field coarse ones. Each sweep serves all outstanding rungs in
-    one job (one union branch per rung, one rank window, satisfaction check
-    and anti-join over the union) and moves every unsatisfied row to the
-    next rung of the ladder, where its candidates are recomputed wholesale,
-    so pairs never duplicate. Rows still unsatisfied on the last rung go to
-    ``on_starved``: "raise" (the default; never silently partial) or
-    "exact" (a labeled crossJoin of just those rows against ``right``;
-    they are the sparse tail, so the product stays small).
+    RUNG LADDER. ``levels`` (default ``(level, level-2, 0)``), or under
+    ``auto_levels=True`` a start rung L0 = floor(log4(n / (12 *
+    START_CELL_ROWS))) from the right row count n (at most MAX_FINE_LEVEL
+    and ``cell_level``), then every second level down to 0. Rows still
+    unanswered after the last rung go to ``on_starved``: "raise" (the
+    default; never silently partial) or "exact" (one more cogroup pass of
+    those rows against every right row, without the radius test).
 
-    SPARSE-RUNG FOLDING. A rung holding a few rows folds into the next
-    outstanding rung when its extra pair count (rows x profile density
-    bound x the target rung's disc area) stays under MERGE_PAIR_BUDGET,
-    saving a union branch and its right-side keying. A coarser probe only
-    widens the candidate set and the verified radius, so folding never
-    changes the result. The bound is exact where the drill-down measured
-    and heuristic where it stopped refining. Without a density profile
-    the bound is infinite and nothing folds.
-
-    RESIDUAL EXTREME KEYS. A clump inside ONE cell of the profile's finest
-    grid cannot be split by probing finer, and its count^2 pairs would be
-    enumerated inside one join task. Under ``auto_levels`` every such cell
-    of at least RESIDUAL_HOT rows is salted: its right rows hash into
-    ceil(count / SALT_TARGET) groups and its left rows replicate across
-    them, so every (l, r) pair still occurs exactly once while the work
-    splits over the groups. The rank needs no salt-aware change: Spark
-    plans the rank filter as a WindowGroupLimit with a partial pass
-    map-side, so each task forwards at most k rows per left row
-    (plan-asserted in tests).
+    HOT CELLS. A cell whose left rows times disc right rows pass
+    PAIR_BUDGET would be quadratic in one task. One count job per rung
+    (skipped when the rung's rows times all right rows stay under
+    PAIR_BUDGET / 4**GROUP_LEVELS) finds every cell over that share of the
+    budget. Such a cell leaves its block: its left rows split over S =
+    ceil(pairs / PAIR_BUDGET) hash groups and its right rows replicate S
+    times, so every pair still meets exactly once and no group holds much
+    more than PAIR_BUDGET pairs.
 
     When both tables carry an ingest-time nested-HPX cell column
     (``cell_col`` at ``cell_level``), keys are shiftrights of it and the
-    whole plan is JVM-only at probe levels <= JVM_RING_MAX_LEVEL.
+    whole plan is JVM-only up to the cogroup at probe levels <=
+    JVM_RING_MAX_LEVEL.
 
-    Left rows with a null or NaN ra or dec produce no output rows, and
-    right rows with one are never candidates.
+    Left rows with a null or NaN ra or dec (or, with ``cell_col``, a null
+    cell) produce no output rows, and such right rows are never
+    candidates. ``exclude_self`` drops candidates whose id equals the left
+    row's id.
 
     Output: one row per (left row, rank): ``left_id``, ``right_id``,
     ``knn_rank`` (1-based, ordered by exact angular distance with
     ``right_id`` as the deterministic tiebreak). If the two id column
-    names collide, suffixes ``_l``/``_r`` are appended.
+    names collide, suffixes ``_l``/``_r`` are appended. ``_DECISIONS``
+    records each rung's rows in, rows answered, largest group pair count
+    and split cells, and the starved row count.
     """
     from ..functions.udfs import hpx_udf
 
     if on_starved not in ("raise", "exact"):
         raise ValueError(f"unknown on_starved {on_starved!r}")
+    if k < 1:
+        raise ValueError("k must be >= 1")
     if auto_levels and levels is not None:
         raise ValueError("auto_levels=True replaces the fixed `levels` "
                          "ladder; pass one or the other")
     use_cell = cell_col is not None and cell_level is not None
     if use_cell:
         level = min(level, cell_level)
-    if auto_levels:
-        ladder = tuple(range(MAX_FINE_LEVEL - MAX_FINE_LEVEL % 2, -1, -2))
-    else:
+    if not auto_levels:
         ladder = tuple(dict.fromkeys(
             (level, max(level - 2, 0), 0) if levels is None else levels))
         if not ladder or max(ladder) > level:
             raise ValueError("levels must be a non-empty ladder of levels "
                              "<= the starting level")
-    last = ladder[-1]
-    next_rung = dict(zip(ladder, ladder[1:]))
 
     lr, ld = l_cols
     rr, rd = r_cols
     out_lid = left_id + "_l" if left_id == right_id else left_id
     out_rid = right_id + "_r" if left_id == right_id else right_id
 
-    lf = (left.select(F.col(left_id).alias("_lid"),
-                      F.col(lr).alias("_lra"), F.col(ld).alias("_ldec"),
-                      *([F.col(cell_col).alias("_lcell")] if use_cell else []))
-          .dropna(subset=["_lra", "_ldec"]))
-    rk_base = (right.select(F.col(right_id).alias("_rid"),
-                            F.col(rr).alias("_rra"), F.col(rd).alias("_rdec"),
-                            *([F.col(cell_col).alias("_rcell")]
-                              if use_cell else []))
-               .dropna(subset=["_rra", "_rdec"]))
+    def _side(df, pre, id_col, ra, dec):
+        """Id, ra, dec (and cell) of positioned rows, plus their unit
+        vectors: computed in the JVM, so dot products, and the order of
+        near-equal ones, match a JVM dot product bit for bit."""
+        sel = df.select(
+            F.col(id_col).alias(f"_{pre}id"),
+            F.col(ra).cast("double").alias(f"_{pre}ra"),
+            F.col(dec).cast("double").alias(f"_{pre}dec"),
+            *([F.col(cell_col).cast("long").alias(f"_{pre}cell")]
+              if use_cell else []))
+        r, d = F.radians(f"_{pre}ra"), F.radians(f"_{pre}dec")
+        return sel.dropna(subset=sel.columns[1:]).withColumns(
+            {f"_{pre}x": F.cos(r) * F.cos(d),
+             f"_{pre}y": F.sin(r) * F.cos(d), f"_{pre}z": F.sin(d)})
 
-    # ``_dist`` holds the NEGATED pair cosine, not the angle: acos is
-    # strictly decreasing, so orderings and thresholds on -dot are exactly
-    # those on the angular distance, at 3 multiplies + 2 adds per pair from
-    # precomputed unit vectors. No distance column is ever output.
-    xyz_dot = (F.col("_lx") * F.col("_rx") + F.col("_ly") * F.col("_ry")
-               + F.col("_lz") * F.col("_rz"))
+    lf = _side(left, "l", left_id, lr, ld)
+    rk_base = _side(right, "r", right_id, rr, rd)
+    lcols = lf.columns
+    n_right = rk_base.count()
+    if auto_levels:  # floor(log4(n / (12 * START_CELL_ROWS))), capped
+        top = min(max((n_right // (12 * START_CELL_ROWS)).bit_length() - 1,
+                      0) // 2, MAX_FINE_LEVEL,
+                  cell_level if use_cell else MAX_FINE_LEVEL)
+        ladder = tuple(dict.fromkeys(max(L, 0) for L in range(top, -2, -2)))
+    # every field nullable: a pending row has no _rid
+    schema = StructType([StructField(f.name, f.dataType) for f in
+                         [*lf.schema.fields, rk_base.schema["_rid"]]]
+                        + [StructField("knn_rank", IntegerType()),
+                           StructField("_np", LongType())])
 
-    def _with_xyz(df: DataFrame, pre: str, ra_c: str, dec_c: str) -> DataFrame:
-        cr, cd = F.radians(F.col(ra_c)), F.radians(F.col(dec_c))
-        return df.withColumns({f"{pre}x": F.cos(cr) * F.cos(cd),
-                               f"{pre}y": F.sin(cr) * F.cos(cd),
-                               f"{pre}z": F.sin(cd)})
+    def _pix(pre: str, lvl: int):
+        if use_cell:
+            return hpx_cell_key(f"_{pre}cell", cell_level, lvl)
+        return hpx_udf(lvl)(F.col(f"_{pre}ra"), F.col(f"_{pre}dec"))
 
-    def _all_pairs(rows: DataFrame) -> DataFrame:
-        return (_with_xyz(rows, "_l", "_lra", "_ldec")
-                .crossJoin(_with_xyz(rk_base, "_r", "_rra", "_rdec")))
+    def _rung(todo: DataFrame, lvl: int | None, n_todo: int | None):
+        """One cogroup pass over ``todo`` at rung ``lvl`` (None: the exact
+        pass, one group of every right row). Returns the kernel output and
+        the number of split cells."""
+        if lvl is None:
+            lk = todo.withColumn("_c", F.lit(0).cast("long"))
+            rk = rk_base.select("_rid", "_rx", "_ry", "_rz",
+                                F.lit(0).cast("long").alias("_c"))
+            min_dot = -math.inf
+        else:
+            lk = todo.withColumn("_c", _pix("l", lvl))
+            rk = ring_explode(rk_base, _pix("r", lvl), lvl,
+                              cols=["_rid", "_rx", "_ry", "_rz"]
+                              ).withColumnRenamed("_mc", "_c")
+            min_dot = math.cos(safe_ring1_rad(lvl))
+        # a group is the block of 4**GROUP_LEVELS sibling cells under one
+        # coarser parent (at most the 12 base pixels); a hot cell, one over
+        # PAIR_BUDGET / 4**GROUP_LEVELS pairs, groups alone instead, its
+        # left rows split over ceil(pairs / PAIR_BUDGET) hash shares and
+        # its right rows replicated to each
+        grp = F.shiftright("_c", 2 * min(GROUP_LEVELS, lvl or 0))
+        cap = PAIR_BUDGET >> 2 * GROUP_LEVELS
+        hot: dict = {}
+        if n_todo is None or n_todo * n_right > cap:
+            nl = F.sum("_l")  # a cell's left rows; the rest are disc rows
+            hot = {r["_c"]: min(r["_nl"], -(-r["_np"] // PAIR_BUDGET))
+                   for r in lk.select("_c", F.lit(1).alias("_l"))
+                   .unionByName(rk.select("_c", F.lit(0).alias("_l")))
+                   .groupBy("_c").agg(nl.alias("_nl"), (
+                       nl * (F.count("_l") - nl)).alias("_np"))
+                   .filter(F.col("_np") > cap).collect()}
+        keys = ["_g"]
+        if hot:
+            ns = F.element_at(F.create_map(*[
+                F.lit(v).cast(t) for c, s in sorted(hot.items())
+                for v, t in ((c, "long"), (s, "int"))]), F.col("_c"))
+            grp = F.when(ns.isNull(), grp).otherwise(-1 - F.col("_c"))
+            ns = F.coalesce(ns, F.lit(1))
+            lk = lk.withColumn("_s", F.pmod(F.xxhash64(*lcols),
+                                            ns.cast("long")).cast("int"))
+            rk = rk.withColumn("_s", F.explode(F.sequence(F.lit(0), ns - 1)))
+            keys.append("_s")
+        lk, rk = lk.withColumn("_g", grp), rk.withColumn("_g", grp)
+        out = (lk.groupBy(*keys).cogroup(rk.groupBy(*keys))
+               .applyInPandas(_cell_topk(k, exclude_self, min_dot, lcols),
+                              schema))
+        return out, sum(v > 1 for v in hot.values())
 
-    def rank_topk(cand: DataFrame) -> DataFrame:
-        """Top-k per left row by (_dist, _rid). A ``_vr`` column (the row's
-        rung radius as a negated cosine) drops farther candidates before
-        the window. That is safe: a row's output is kept only when its k-th
-        candidate lies within vr, and then so does its whole true top-k."""
-        if exclude_self:
-            cand = cand.filter(F.col("_lid") != F.col("_rid"))
-        cand = cand.withColumn("_dist", -xyz_dot)
-        if "_vr" in cand.columns:
-            cand = cand.filter(F.col("_dist") <= F.col("_vr"))
-        # project before the rank exchange: coordinates and _vr would
-        # otherwise ride the shuffle as dead weight
-        w = Window.partitionBy("_lid").orderBy(F.col("_dist").asc(),
-                                               F.col("_rid").asc())
-        return (cand.select("_lid", "_rid", "_dist")
-                .withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") <= k))
-
-    if auto_levels:
-        todo, finest, fine_lvl = _density_profile(
-            lf, rk_base, k, cell_level if use_cell else None)
-        # A finest-grid cell >= RESIDUAL_HOT rows is one no finer rung could
-        # take: RESIDUAL_HOT >= 4 * REFINE_CNT keeps every splittable
-        # ancestor above the refine filters on the way down. The top 1024
-        # are far beyond any real sky's tail and keep the salt map small.
-        hot_fine = {int(r["_dc"]): int(r["_dn"]) for r in
-                    finest.filter(F.col("_dn") >= RESIDUAL_HOT)
-                    .orderBy(F.col("_dn").desc()).limit(1024).collect()}
+    _DECISIONS.clear()
+    _DECISIONS.update(ladder=list(ladder), rungs=[], starved=0)
+    outputs = []
+    todo, n_todo = lf, None
+    for lvl in ladder:
+        res, n_split = _rung(todo, lvl, n_todo)
+        res = res.localCheckpoint(eager=False)
+        st = res.agg(F.sum((F.col("knn_rank") == 1).cast("long")),
+                     F.sum((F.col("knn_rank") == 0).cast("long")),
+                     F.max("_np")).first()
+        n_sat, n_todo = st[0] or 0, st[1] or 0
+        _DECISIONS["rungs"].append(dict(
+            level=lvl, rows_in=n_sat + n_todo, satisfied=n_sat,
+            max_group_pairs=st[2] or 0, split_cells=n_split))
+        outputs.append(res.filter(F.col("knn_rank") > 0))
+        if n_todo == 0:
+            break
+        todo = res.filter(F.col("knn_rank") == 0).select(*lcols)
     else:
-        todo = lf.withColumn("_albl", F.lit(ladder[0]))
-        hot_fine, fine_lvl = {}, 0
-    _DECISIONS["salted_cells"] = len(hot_fine)
-
-    def _salt_map_at(lvl: int) -> dict:
-        """(cell at ``lvl`` -> salt groups) for the residual hot cells.
-        A coarser rung sums counts up to the ancestor; a finer one (at most
-        one rung past the finest grid) gives each child its parent's count,
-        since over-salting a child only adds parallelism."""
-        if lvl <= fine_lvl:
-            agg: dict = {}
-            for p, dn in hot_fine.items():
-                a = p >> (2 * (fine_lvl - lvl))
-                agg[a] = agg.get(a, 0) + dn
-        else:
-            fan = 1 << (2 * (lvl - fine_lvl))
-            if fan > 16 or len(hot_fine) * fan > 4096:
-                return {}  # keeps the map literal small if the caps change
-            agg = {(p << (2 * (lvl - fine_lvl))) + i: dn
-                   for p, dn in hot_fine.items() for i in range(fan)}
-        return {a: -(-dn // SALT_TARGET) for a, dn in agg.items()
-                if dn > SALT_TARGET}
-
-    def _build_cand(active: DataFrame, lvl: int, n_active: int) -> DataFrame:
-        """Candidate pairs for the rows probing at rung ``lvl``: the left
-        ring-1 disc explode, the right side keyed at ``lvl`` (semi-pruned
-        against the rung's cell set when the rung is small) and the
-        residual hot cells salted."""
-        if use_cell and lvl <= cell_level:
-            lpix = hpx_cell_key("_lcell", cell_level, lvl)
-            rkey = hpx_cell_key("_rcell", cell_level, lvl)
-        else:
-            lpix = hpx_udf(lvl)(F.col("_lra"), F.col("_ldec"))
-            rkey = hpx_udf(lvl)(F.col("_rra"), F.col("_rdec"))
-        # project before the join exchange, the widest of the operator:
-        # _lcell/_albl (and _rcell) would otherwise ride it as dead weight
-        lk = ring_explode(_with_xyz(active, "_l", "_lra", "_ldec"), lpix, lvl,
-                          cols=["_lid", "_lx", "_ly", "_lz"])
-        rk = rk_base
-        # a small rung semi-joins the right side against its bounded cell
-        # set, so the full table does not re-key for a handful of rows; a
-        # big rung's cells cover most of the sky and would prune nothing.
-        # Not checkpointed: an eager checkpoint serialises on the driver
-        # what the broadcast thread pool evaluates concurrently across rungs.
-        cells = (lk.select("_mc").distinct()
-                 if n_active <= PRUNE_MAX_ACTIVE else None)
-        if cells is not None and use_cell and lvl > cell_level:
-            # the fine cells exist only after the key UDF: prune first on
-            # their cell_level ancestors (a JVM shiftright), so the UDF
-            # keys survivors only
-            anc = cells.select(F.shiftright("_mc", 2 * (lvl - cell_level))
-                               .alias("_rcell")).distinct()
-            rk = rk.join(F.broadcast(anc), "_rcell", "semi")
-        rk = rk.withColumn("_mc", rkey)
-        if cells is not None:
-            rk = rk.join(F.broadcast(cells), "_mc", "semi")
-        rk = (_with_xyz(rk, "_r", "_rra", "_rdec")
-              .select("_rid", "_rx", "_ry", "_rz", "_mc"))
-        keys = ["_mc"]
-        smap = _salt_map_at(lvl)
-        if smap:
-            # a hot cell's right rows split over S salt groups and its left
-            # rows replicate across them; other cells get S=1
-            sm = F.create_map(*[F.lit(int(v)).cast(t)
-                                for c, s in sorted(smap.items())
-                                for v, t in ((c, "bigint"), (s, "int"))])
-            ns = F.coalesce(F.element_at(sm, F.col("_mc")), F.lit(1))
-            rk = rk.withColumn("_salt", F.pmod(
-                F.xxhash64("_rid"), ns.cast("bigint")).cast("int"))
-            lk = lk.withColumn("_salt",
-                               F.explode(F.sequence(F.lit(0), ns - 1)))
-            keys.append("_salt")
-        return lk.join(rk, keys).drop(*keys)
-
-    def _thresh(lvl: int) -> float:
-        """Density bound of a row that failed rung ``lvl``: fewer than k
-        neighbours inside its verified radius. Infinite without a profile."""
-        return _rung_density(k, lvl) if auto_levels else math.inf
-
-    bounds: dict = {}  # rung -> density bound of the rows folded there
-
-    def _bound_of(t: int) -> float:
-        # a row the profile put on rung t did not meet rung t+2's density
-        return bounds.get(
-            t, _thresh(t + 2) if t + 2 <= ladder[0] else math.inf)
-
-    advance = _first_when(((F.col("_albl") == a, b)
-                           for a, b in next_rung.items()), F.col("_albl"))
-    outputs: list = []
-    starved_acc: list = []  # rows left unsatisfied by the last rung
-    while True:
-        # one histogram job serves the rung list, the per-rung prune
-        # decisions and the folding
-        hist = {int(r["_albl"]): int(r["_n"]) for r in
-                todo.groupBy("_albl").agg(F.count(F.lit(1)).alias("_n"))
-                .collect()}
-        if not hist:  # left side empty
-            break
-        # fold tail rungs into the next rung while the pair budget allows;
-        # the mass ledger (rows x density bound, summed per rung) prices
-        # every row at its own bound
-        mass = {r: hist[r] * _bound_of(r) for r in hist}
-        while hist:
-            t = max(hist)
-            lower = [r for r in hist if r < t]
-            # a lone tail rung pre-cascades to the next rung of the ladder
-            nx = max(lower) if lower else next_rung.get(t)
-            # 9 cells: the ring-1 disc each folded row probes at rung nx
-            if (nx is None
-                    or mass[t] * 9.0 * _cell_area(nx) > MERGE_PAIR_BUDGET):
-                break
-            todo = todo.withColumn("_albl", F.when(F.col("_albl") == t, nx)
-                                   .otherwise(F.col("_albl")))
-            bounds[nx] = max(_bound_of(nx), _bound_of(t))
-            mass[nx] = mass.get(nx, 0.0) + mass.pop(t)
-            hist[nx] = hist.get(nx, 0) + hist.pop(t)
-        rungs = sorted(hist, reverse=True)
-        # one union branch per rung; a row sits on exactly one rung, so it
-        # ranks against its own rung's candidates and radius
-        branches = [
-            _build_cand(todo.filter(F.col("_albl") == lvl)
-                        if len(rungs) > 1 else todo, lvl, hist[lvl])
-            .withColumn("_vr", F.lit(-math.cos(_vr_deg(lvl) * RAD_PER_DEG)))
-            for lvl in rungs]
-        # the sweep's top-k is materialised once: the output branch, sat and
-        # the anti-join all read it instead of re-running the candidate join
-        topk = rank_topk(_union_all(branches)).localCheckpoint(eager=True)
-        # satisfied: the k-th candidate exists (the _vr filter already put it
-        # inside the row's verified radius)
-        sat = topk.filter(F.col("_rk") == k).select("_lid")
-        # Without last-rung rows in flight, counting sat (a cheap job on a
-        # checkpointed frame) shows whether the sweep satisfied every row,
-        # and sizes the semi/anti joins: a broadcast up to SAT_BC_MAX, the
-        # planner's shuffle join above. Duplicate left ids only forfeit the
-        # shortcut.
-        n_sat = sat.count() if last not in hist else None
-        sat_j = (F.broadcast(sat)
-                 if n_sat is not None and n_sat <= SAT_BC_MAX else sat)
-        outputs.append(topk.join(sat_j, "_lid", "semi")
-                       .select("_lid", "_rid", F.col("_rk").alias("knn_rank")))
-        if n_sat is not None and n_sat >= sum(hist.values()):
-            break
-        todo = todo.join(sat_j, "_lid", "left_anti")
-        # bounds read the pre-sweep state; each rung lands on a distinct
-        # next rung, so the update order cannot matter
-        new_bounds: dict = {}
-        for lvl in rungs:
-            if lvl in next_rung:
-                nx = next_rung[lvl]
-                new_bounds[nx] = max(new_bounds.get(nx, _bound_of(nx)),
-                                     min(_bound_of(lvl), _thresh(lvl)))
-        if last in hist:
-            starved_acc.append(todo.filter(F.col("_albl") == last)
-                               .localCheckpoint(eager=True))
-            todo = todo.filter(F.col("_albl") != last)
-        bounds.update(new_bounds)
-        # localCheckpoint truncates the per-sweep lineage (Spark 4.1
-        # iterative-loop pathology, see knn()/graph.py)
-        todo = todo.withColumn("_albl", advance).localCheckpoint(eager=True)
-        # a known n_sat means a known remainder; only a last-rung split
-        # needs the emptiness probe
-        if n_sat is None and todo.limit(1).count() == 0:
-            break
-
-    if starved_acc:
-        starved = _union_all(starved_acc)
-        if starved.limit(1).count() > 0:
-            if on_starved == "raise":
-                raise RuntimeError(
-                    f"knn_join: {starved.count()} left rows still starved "
-                    f"after the level-{last} pass (k-th neighbor beyond its "
-                    f"~{_vr_deg(last):.0f} deg verified radius); pass "
-                    "on_starved='exact' or add coarser levels — results "
-                    "would otherwise be silently partial")
-            outputs.append(rank_topk(_all_pairs(starved)).select(
-                "_lid", "_rid", F.col("_rk").alias("knn_rank")))
-    if not outputs:  # empty left side: a vacuous, correctly-typed result
-        outputs.append(rank_topk(_all_pairs(lf.limit(0))).select(
-            "_lid", "_rid", F.col("_rk").alias("knn_rank")))
-    return _union_all(outputs).select(F.col("_lid").alias(out_lid),
-                                      F.col("_rid").alias(out_rid),
-                                      "knn_rank")
-
+        _DECISIONS["starved"] = n_todo
+        if on_starved == "raise":
+            raise RuntimeError(
+                f"knn_join: {n_todo} left rows still starved after the "
+                f"level-{ladder[-1]} pass; pass on_starved='exact' or add "
+                "coarser levels — results would otherwise be partial")
+        outputs.append(_rung(todo, None, n_todo)[0])
+    return functools.reduce(DataFrame.unionByName, outputs).select(
+        F.col("_lid").alias(out_lid), F.col("_rid").alias(out_rid),
+        "knn_rank")
 
 def verified_radius_deg(level: int, rings: int = 1) -> float:
     """Radius within which knn() results are guaranteed complete. Uses the

@@ -543,42 +543,6 @@ def test_knn_join_null_coordinates(spark):
         assert got == want, kw
 
 
-def test_knn_join_rung_folding_identical(spark, monkeypatch):
-    """Sparse-rung folding (pass-count economics: a tail rung folds into
-    the next outstanding pass when its bounded pair cost is cheaper than
-    a dedicated pass's fixed cost) must never change the result — the
-    same clumped sky returns identical top-k with the default fold
-    budget and with folding disabled (budget 0)."""
-    import numpy as np
-    import pandas as pd
-
-    from spatialindex_spark.operators import knn as knn_mod
-    from spatialindex_spark.operators.knn import knn_join
-
-    rng = np.random.default_rng(19)
-    # clump + field: the clump's spot-edge rows land on intermediate
-    # rungs with a handful of rows each — exactly what folding targets
-    ra = np.concatenate([120.0 + rng.uniform(-0.1, 0.1, 400),
-                         rng.uniform(100, 140, 120)])
-    dec = np.concatenate([-5.0 + rng.uniform(-0.1, 0.1, 400),
-                          rng.uniform(-25, 15, 120)])
-    pdf = pd.DataFrame({"pid": np.arange(520, dtype=np.int64),
-                        "ra": ra, "dec": dec})
-    pts = spark.createDataFrame(pdf).localCheckpoint(eager=True)
-
-    def run():
-        return {(r.pid_l, r.knn_rank): r.pid_r for r in
-                knn_join(pts, pts, k=3, auto_levels=True,
-                         left_id="pid", right_id="pid",
-                         exclude_self=True, on_starved="exact").collect()}
-
-    with monkeypatch.context() as m:
-        m.setattr(knn_mod, "MERGE_PAIR_BUDGET", 0)
-        off = run()
-    on = run()
-    assert on == off and len(on) == 3 * 520
-
-
 def test_iceberg_compaction_snapshot(spark, tmp_path):
     """Maintenance job (r3 verdict item #5): compaction rewrites the
     current generation into one sorted file per bucket as a NEW

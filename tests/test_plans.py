@@ -201,14 +201,15 @@ def test_cell_equijoin_is_sort_merge_for_large_sides(spark):
 
 
 def test_knn_join_plan_no_big_broadcast(spark, monkeypatch):
-    """knn_join's promise at 100 TB: the candidate join is a SHUFFLED
-    equi-join (never a broadcast of either big table — with broadcast
-    disabled it must still be SortMergeJoin/ShuffledHashJoin, no nested
-    loop, no cartesian), and with ingest-time cell columns at a JVM ring
-    level the whole plan is free of Python evals. Each sweep's candidate
-    join runs inside an eager localCheckpoint, so the executed plan of
-    every checkpointed frame is recorded and checked, not only the
-    final one."""
+    """knn_join's plan promise at scale: no executed plan holds a
+    CartesianProduct or a BroadcastNestedLoopJoin, even with broadcast
+    joins disabled; each rung is exactly one FlatMapCoGroupsInPandas (the
+    cell-local top-k, both sides shuffled into it); and with ingest-time
+    cell columns at a JVM ring level (<= 8) the ring explode stays in the
+    JVM, so no plan has a Python eval. Every rung's output is
+    checkpointed, so the plan of every checkpointed frame is recorded,
+    not only the final one."""
+    from spatialindex_spark.operators import knn as knn_mod
     from spatialindex_spark.operators.knn import knn_join
     from spatialindex_spark.sources.images import synth_images_indexed
 
@@ -220,32 +221,30 @@ def test_knn_join_plan_no_big_broadcast(spark, monkeypatch):
     checkpoint = frame_cls.localCheckpoint
 
     def recording_checkpoint(self, *args, **kwargs):
-        out = checkpoint(self, *args, **kwargs)
         plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return out
+        return checkpoint(self, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = knn_join(img, img, k=3, level=3,
+        out = knn_join(img, img, k=3, level=3, levels=(3, 1),
                        left_id="image_id", right_id="image_id",
                        cell_col="hpx7", cell_level=7,
                        exclude_self=True, on_starved="exact")
-        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        final = out._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # the candidate joins: the plans that explode the ring map's cells
-    cand = [p for p in plans if "_ring" in p]
-    assert cand, plans
-    for plan in cand:
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, \
-            plan[:1500]
-    for plan in plans:
+    rungs = [p for p in plans if "FlatMapCoGroupsInPandas" in p]
+    assert len(rungs) == len(knn_mod._DECISIONS["rungs"]) >= 1, plans
+    for plan in rungs:
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan[:2000]
+    # the exact pass for starved rows is one more cogroup, in the output
+    assert final.count("FlatMapCoGroupsInPandas") == (
+        1 if knn_mod._DECISIONS["starved"] else 0), final[:2000]
+    for plan in plans + [final]:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        # the only big-side broadcast is the (pix -> ring) map, which is
-        # explicitly hinted; zero Python anywhere (cell path, lvl <= 8)
         assert "ArrowEvalPython" not in plan, plan[:2000]
         assert "BatchEvalPython" not in plan
 

@@ -193,11 +193,11 @@ def test_stream_transients_matches_batch(spark, tmp_path):
 
 
 def test_rank_window_partial_group_limit(spark):
-    """The mechanism that keeps knn_join's rank exchange at O(k * rows)
-    whatever the candidate count (salted or not): Spark plans a
+    """The mechanism that keeps the rank exchanges of best_match and
+    knn() at O(k * rows) whatever the candidate count: Spark plans a
     row_number rank filter as WindowGroupLimit with a PARTIAL pass
-    map-side, so each join/salt task forwards <= k rows per left row to
-    the rank exchange instead of every enumerated candidate."""
+    map-side, so each join task forwards <= k rows per left row to the
+    rank exchange instead of every enumerated candidate."""
     a = (spark.range(1000)
          .select((F.col("id") % 97).alias("_mc"),
                  (F.col("id") % 7).alias("_lid")))
@@ -247,105 +247,6 @@ def test_knn_join_fixed_ladder_cell_path_correct(spark):
     assert len(got) == 50
     for i in range(50):
         assert got[i] == want_first[i]
-
-
-def _resid_sky(spark):
-    """3000 rows over the sphere plus 500 inside ~0.07 arcsec: ONE
-    level-16 cell (no straddle), which no probe level can split."""
-    from spatialindex_spark.functions.udfs import hpx_udf
-
-    rng = np.random.default_rng(7)
-    ra, dec = _sky(rng, 3000)
-    n_r = 500
-    ra_r = 40.0 + (rng.random(n_r) * 2 - 1) * 1e-5
-    dec_r = 10.0 + (rng.random(n_r) * 2 - 1) * 1e-5
-    df = spark.createDataFrame(pd.DataFrame({
-        "pid": np.arange(3000 + n_r),
-        "ra": np.concatenate([ra, ra_r]),
-        "dec": np.concatenate([dec, dec_r])}))
-    return (df.withColumn("hpx7", hpx_udf(7)(F.col("ra"), F.col("dec")))
-            .localCheckpoint(eager=True))
-
-
-def _knn_resid(df):
-    from spatialindex_spark.operators import knn as knn_mod
-
-    out = knn_mod.knn_join(df, df, k=2, level=8, auto_levels=True,
-                           left_id="pid", right_id="pid",
-                           cell_col="hpx7", cell_level=7,
-                           exclude_self=True, on_starved="exact")
-    rows = sorted((r.pid_l, r.pid_r, r.knn_rank) for r in out.collect())
-    return rows, knn_mod._DECISIONS["salted_cells"]
-
-
-def test_knn_join_residual_salting(spark, monkeypatch):
-    """auto_levels salts ONLY for a residual extreme key: a clump inside
-    ONE MAX_FINE_LEVEL cell that the density drill-down cannot split
-    further. A uniform sky stays unsalted, and the salted result equals
-    the unsalted one bit-for-bit."""
-    from spatialindex_spark.operators import knn as knn_mod
-
-    # the test threshold must stay >= the drill-down's REFINE_CNT (192):
-    # a real residual key (default threshold 4000) always drills to the
-    # finest rung because its ancestor counts dominate every refine
-    # filter on the way down — the detection inspects the finest grid
-    monkeypatch.setattr(knn_mod, "RESIDUAL_HOT", 300)
-    monkeypatch.setattr(knn_mod, "SALT_TARGET", 100)  # -> S = 5
-    df = _resid_sky(spark)
-
-    salted_rows, salted_cells = _knn_resid(df)
-    assert salted_cells >= 1         # residual key detected -> salted
-    with monkeypatch.context() as m:
-        m.setattr(knn_mod, "RESIDUAL_HOT", 10 ** 9)
-        plain_rows, plain_cells = _knn_resid(df)
-    assert plain_cells == 0
-    assert salted_rows == plain_rows  # identical result either way
-    assert len(salted_rows) == 2 * 3500
-
-    # uniform sky (no residual key): auto detects nothing to salt
-    df_u = df.filter(F.col("pid") < 3000)
-    knn_mod.knn_join(df_u, df_u, k=2, level=8, auto_levels=True,
-                     left_id="pid", right_id="pid",
-                     cell_col="hpx7", cell_level=7,
-                     exclude_self=True, on_starved="exact").count()
-    assert knn_mod._DECISIONS["salted_cells"] == 0
-
-
-def test_knn_join_drill_loop_matches_driver_drill(spark, monkeypatch):
-    """With DRILL_COLLECT_MAX at 0 the density profile refines its hot
-    cells through the distributed Spark loop instead of the driver-side
-    numpy drill. Both give every left row the same start rung, on the
-    cell-column and the UDF keying alike, and knn_join the same top-k.
-    The 500-row clump keeps its cells above REFINE_CNT down to the
-    finest level, so every refinement step runs."""
-    from spatialindex_spark.operators import knn as knn_mod
-
-    df = _resid_sky(spark)
-    rk_base = df.select(F.col("pid").alias("_rid"), F.col("ra").alias("_rra"),
-                        F.col("dec").alias("_rdec"),
-                        F.col("hpx7").alias("_rcell"))
-    lf = rk_base.toDF("_lid", "_lra", "_ldec", "_lcell")
-
-    def profile(cell_level):
-        todo, _, finest_level = knn_mod._density_profile(
-            lf, rk_base, 2, cell_level)
-        return ({r._lid: r._albl for r in todo.collect()},
-                finest_level)
-
-    for cell_level in (7, None):
-        driver = profile(cell_level)
-        with monkeypatch.context() as m:
-            m.setattr(knn_mod, "DRILL_COLLECT_MAX", 0)
-            loop = profile(cell_level)
-        assert loop == driver, cell_level
-        assert driver[1] >= 15  # the drill reached the finest grid
-        assert max(driver[0].values()) > 8  # the clump probes finer
-
-    driver_rows, driver_cells = _knn_resid(df)
-    monkeypatch.setattr(knn_mod, "DRILL_COLLECT_MAX", 0)
-    loop_rows, loop_cells = _knn_resid(df)
-    assert loop_rows == driver_rows and len(loop_rows) == 2 * 3500
-    assert loop_cells == driver_cells
 
 
 def test_pm_crossmatch_matches_brute_force(spark):
