@@ -1807,7 +1807,7 @@ def _q_ellipse_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ell = _ellipse()
     from spatialindex_spark.functions.cover import ranges_predicate
 
-    pred = ranges_predicate(F.col("htm7"), htm_ellipse_ranges(ell, 7))
+    pred = ranges_predicate("htm7", htm_ellipse_ranges(ell, 7))
     qf = (F.lit(ell.xx) * F.col("x") * F.col("x")
           + F.lit(ell.yy) * F.col("y") * F.col("y")
           + F.lit(ell.zz) * F.col("z") * F.col("z")
@@ -1842,7 +1842,7 @@ def _q_hull_htm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spatialindex_spark.functions.cover import ranges_predicate
 
     hull = _hull()
-    pred = ranges_predicate(F.col("htm7"), htm_polygon_ranges(hull, 7))
+    pred = ranges_predicate("htm7", htm_polygon_ranges(hull, 7))
     geom = None
     for e in hull.edges:
         g = (F.lit(e.x) * F.col("x") + F.lit(e.y) * F.col("y")

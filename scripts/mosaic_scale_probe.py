@@ -65,12 +65,12 @@ def run_size(spark, n_images: int, level: int, tile_px: int,
                           half_diag + F.lit(tile_rad * math.sqrt(2.0))))
     # box prune replica (operators/cutouts.py prune 2): grid-square
     # containment with the gnomonic-stretch margin
-    from spatialindex_spark.operators.cutouts import _tan_px_cols
+    from spatialindex_spark.operators.cutouts import _tan_px_sql
 
     tile_scale = 2.0 * tile_rad / tile_px
-    cpx, cpy, cden = _tan_px_cols(
-        F.col("ra"), F.col("dec"), F.col("_tra"), F.col("_tdec"),
-        F.lit(tile_px), F.lit(tile_px), math.degrees(tile_scale))
+    cpx, cpy, cden = map(F.expr, _tan_px_sql(
+        "ra", "dec", "_tra", "_tdec", tile_px, tile_px,
+        math.degrees(tile_scale)))
     margin = half_diag * F.lit(2.0) / F.lit(tile_scale)
     box = ((cden > 0)
            & (cpx >= -margin) & (cpx <= F.lit(float(tile_px)) + margin)

@@ -568,24 +568,62 @@ def compress_gaps(ranges: list[list[int]], maxpct: float = 30.0) -> list[list[in
     return out
 
 
-def ranges_predicate(col, ranges) -> "object":
-    """Covering ranges -> one Catalyst Column: `=` (single cell) / BETWEEN
-    (range) disjuncts, `lit(False)` for an empty covering. The single
-    shared implementation for every ranges-to-predicate site (filter,
-    counts, streaming, Iceberg-lite read).
+def sql_name(col: str) -> str:
+    """``col`` as a SQL column reference that resolves as ``F.col(col)``
+    does: each dot-separated part backquoted (so keywords and odd
+    characters parse), a name the caller already quoted kept as is."""
+    if "`" in col:
+        return col
+    return ".".join(f"`{part}`" for part in col.split("."))
 
-    Singleton cells collapse into one IN-set (Catalyst InSet, O(1)/row)
-    and the remaining disjuncts combine as a BALANCED or-tree — a linear
-    left-deep chain over a few hundred ranges overflows Catalyst's
-    recursive tree walks (java StackOverflowError, hit by hex cell-list
-    coverings whose every range is a singleton)."""
+
+def _sql_literal(v) -> str:
+    """One IN-list element as SQL text: an integer as its digits, a string
+    single-quoted with its backslashes and quotes backslash-escaped, None
+    as NULL."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, (int, np.integer)) and not isinstance(v, bool):
+        return str(int(v))
+    raise TypeError(f"IN-set literal must be an int or a str, got {type(v)!r}")
+
+
+def in_predicate(col: str, values) -> "object":
+    """``col IN (values)`` as ONE ``F.expr``: a single py4j call however
+    many values, where ``Column.isin`` makes one per literal (measured
+    0.3-0.5 s for 500 ids against ~2 ms). Same rows as ``isin`` and the
+    same plan: Catalyst's In/InSet, pushed to the scan as ``In``.
+    ``col`` is a column name; an empty ``values`` gives ``lit(False)``."""
+    from pyspark.sql import functions as F
+
+    if not len(values):
+        return F.lit(False)
+    return F.expr(f"{sql_name(col)} IN ({', '.join(map(_sql_literal, values))})")
+
+
+def ranges_predicate(col: str, ranges) -> "object":
+    """Covering ranges over the column named ``col`` -> one Catalyst
+    Column: an IN-set of the single cells and BETWEEN disjuncts for the
+    rest, `lit(False)` for an empty covering. The single shared
+    implementation for every ranges-to-predicate site (filter, counts,
+    streaming, Iceberg-lite read).
+
+    Singleton cells collapse into one IN-set (Catalyst InSet, O(1)/row,
+    rendered by :func:`in_predicate`) and the remaining disjuncts combine
+    as a BALANCED or-tree — a linear left-deep chain over a few hundred
+    ranges overflows Catalyst's recursive tree walks (java
+    StackOverflowError, hit by hex cell-list coverings whose every range
+    is a singleton)."""
     from pyspark.sql import functions as F
 
     singles = [int(lo) for lo, hi in ranges if int(lo) == int(hi)]
     preds = []
     if singles:
-        preds.append(col.isin(singles))
-    preds.extend(col.between(int(lo), int(hi))
+        preds.append(in_predicate(col, singles))
+    c = F.col(col)
+    preds.extend(c.between(int(lo), int(hi))
                  for lo, hi in ranges if int(lo) != int(hi))
     if not preds:
         return F.lit(False)

@@ -230,11 +230,11 @@ def region_count_bounds_frame(counts: DataFrame, region: dict,
     from ..functions.cover import ranges_predicate
 
     lvl_counts = counts.filter(F.col("level") == level)
-    lower = lvl_counts.filter(ranges_predicate(F.col("cell"), inside)).agg(
+    lower = lvl_counts.filter(ranges_predicate("cell", inside)).agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("lower"))
     upper = (lvl_counts
-             .filter(ranges_predicate(F.col("cell"), inside)
-                     | ranges_predicate(F.col("cell"), boundary))
+             .filter(ranges_predicate("cell", inside)
+                     | ranges_predicate("cell", boundary))
              .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("upper")))
     return lower.crossJoin(upper)
 
@@ -265,9 +265,9 @@ def region_count_fast_region(df: DataFrame, counts: DataFrame, region: dict,
 
     inside, boundary = region_split_ranges(region, level, mode)
     interior = (counts.filter(F.col("level") == level)
-                .filter(ranges_predicate(F.col("cell"), inside))
+                .filter(ranges_predicate("cell", inside))
                 .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("_interior")))
-    shell = (df.filter(ranges_predicate(F.col(cell_col), boundary))
+    shell = (df.filter(ranges_predicate(cell_col, boundary))
              .filter(region_geom_pred(region))
              .agg(F.count(F.lit(1)).alias("_shell")))
     return interior.crossJoin(shell).select(

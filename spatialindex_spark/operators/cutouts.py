@@ -29,22 +29,26 @@ grows toward -x (sky convention), Dec toward +y:
 The footprint half-diagonal ``scale * hypot(w, h) / 2`` bounds the
 center-to-corner separation (gnomonic projection only stretches radial
 distances outward), so a cone of that radius around a target contains
-every image whose footprint can reach it — the candidate join is the
-existing ``crossmatch`` ring-1 machinery (J3).
+every image whose footprint can reach it — the candidate join is
+crossmatch's ring-1 keying (J3).
 
 Scale shape (100 TB)
 --------------------
-- ``cutout_windows``: candidates ride crossmatch's broadcast ring-map
-  join keyed by the ingest-time cell column — the image side is a
-  METADATA-ONLY scan (the ``bytes`` column never enters ReadSchema,
-  plan-asserted in tests) and stays entirely JVM-side; the window math
-  is pure Column trig on the matched pairs.  Nothing about the image
-  table's size appears on the driver.
-- ``cutout_pixels``: only MATCHED image rows are re-read — the match
-  list is collected (bounded, with a guard: a cutout request is a
-  human-sized target list) into an IN-set pushdown on the id column so
-  parquet row-group stats skip unmatched stripes, then bytes decode in
-  Arrow batches via mapInPandas.
+- ``cutout_windows``: one ring-keyed equi-join.  The target list (a
+  human-sized request) explodes into its ring-1 disc cells through one
+  pandas UDF over (ra, dec), so no ring map is built or broadcast; the
+  image side is a METADATA-ONLY scan (the ``bytes`` column never enters
+  ReadSchema, plan-asserted in tests) keyed JVM-side by a shiftright of
+  the ingest-time cell column; the window math is JVM trig (SQL
+  expressions) on the matched pairs.  Nothing about the image table's size appears on
+  the driver.
+- ``cutout_pixels``: only MATCHED image rows are re-read — the per-image
+  window lists are read once (bounded, with a guard: a cutout request is
+  a human-sized target list), their ids become an IN-set pushed into the
+  scan so parquet row-group stats skip unmatched stripes, and bytes
+  decode in Arrow batches via mapInPandas with the windows in the
+  closure.  Above IN_SET_MAX images the read-back is a broadcast
+  left-semi join instead.
 - ``coadd_mosaic``: images shuffle ONCE keyed by output tile cell
   (ring-1 duplication is pruned by a center-distance bound before the
   exchange, so the dup factor stays ~1 except at tile corners); the
@@ -64,7 +68,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.geometry import RAD_PER_DEG
 from ..functions.healpix import disc, max_pix_rad, pix2vec
-from .joins import crossmatch, hpx_cell_key, ring_explode
+from ..functions.cover import in_predicate
+from .joins import (hpx_cell_key, match_level_rings, radec_disc_udf,
+                    ring_explode)
 
 _log = logging.getLogger(__name__)
 
@@ -92,19 +98,52 @@ def tan_pix_np(ra, dec, ra0, dec0, w, h, scale_deg):
             den > 0)
 
 
-def _tan_px_cols(tra, tdec, ira, idec, w, h, scale_deg):
-    """JVM Column gnomonic pixel coords of target (tra, tdec) in the
-    image frame — the Column twin of :func:`tan_pix_np`."""
-    at, dt = F.radians(tra), F.radians(tdec)
-    a0, d0 = F.radians(ira), F.radians(idec)
-    s = F.lit(math.radians(scale_deg))
-    cosd, sind = F.cos(dt), F.sin(dt)
-    cosd0, sind0 = F.cos(d0), F.sin(d0)
-    cosdra = F.cos(at - a0)
-    den = sind0 * sind + cosd0 * cosd * cosdra
-    xi = cosd * F.sin(at - a0) / den
-    eta = (cosd0 * sind - sind0 * cosd * cosdra) / den
-    return w / F.lit(2.0) - xi / s, h / F.lit(2.0) + eta / s, den
+def _tan_px_sql(tra, tdec, ira, idec, w, h, scale_deg):
+    """SQL twin of :func:`tan_pix_np`: (px, py, den) expression texts of
+    the gnomonic pixel coords of target (tra, tdec) in the frame of an
+    image at (ira, idec), over column names or literals.  SQL text, not
+    Column operators: in PySpark each Column operator costs several py4j
+    round trips, and this tree has ~40 of them (with Column operators
+    the pairing and window math took ~0.4 s of frame build per cutout
+    request, ~0.2 s as SQL text)."""
+    at, dt, a0, d0 = (f"RADIANS({c})" for c in (tra, tdec, ira, idec))
+    s = f"CAST('{math.radians(scale_deg)!r}' AS DOUBLE)"
+    cosd, sind = f"COS({dt})", f"SIN({dt})"
+    cosd0, sind0 = f"COS({d0})", f"SIN({d0})"
+    cosdra = f"COS({at} - {a0})"
+    den = f"({sind0} * {sind} + {cosd0} * {cosd} * {cosdra})"
+    xi = f"({cosd} * SIN({at} - {a0}) / {den})"
+    eta = f"(({cosd0} * {sind} - {sind0} * {cosd} * {cosdra}) / {den})"
+    return f"{w} / 2.0D - {xi} / {s}", f"{h} / 2.0D + {eta} / {s}", den
+
+
+def pair_windows(pairs: DataFrame, scale_deg_px: float, size_px: int,
+                 target_id: str, image_id: str) -> DataFrame:
+    """The clipped ``size_px`` cutout window of every (target, image) pair
+    of ``pairs`` (columns _tid, _iid, ra_t, dec_t, ra_i, dec_i, w_i, h_i)
+    whose target lands inside the image: :func:`cutout_windows`' output
+    columns, shared with the streaming cutout.  A target inside the
+    footprint is within the half-diagonal (atan(r) <= r in the tangent
+    plane), so no separation filter is needed before this one."""
+    px, py, den = _tan_px_sql("ra_t", "dec_t", "ra_i", "dec_i", "w_i", "h_i",
+                              scale_deg_px)
+    half = size_px // 2
+    return (pairs.selectExpr("_tid", "_iid", "w_i", "h_i", f"{px} AS _px",
+                             f"{py} AS _py", f"{den} AS _den")
+            .where("_den > 0 AND _px >= 0 AND _px < w_i AND _py >= 0 "
+                   "AND _py < h_i")
+            .selectExpr("_tid", "_iid", "_px", "_py", "w_i", "h_i",
+                        f"CAST(FLOOR(_px) AS INT) - {half} AS _x0r",
+                        f"CAST(FLOOR(_py) AS INT) - {half} AS _y0r")
+            .selectExpr("_tid", "_iid", "ROUND(_px, 6) AS px",
+                        "ROUND(_py, 6) AS py", "GREATEST(0, _x0r) AS x0",
+                        f"LEAST(CAST(w_i AS INT), _x0r + {size_px}) AS x1",
+                        "GREATEST(0, _y0r) AS y0",
+                        f"LEAST(CAST(h_i AS INT), _y0r + {size_px}) AS y1")
+            .selectExpr("*", f"x1 - x0 = {size_px} AND y1 - y0 = {size_px}"
+                             " AS complete")
+            .toDF(target_id, image_id, "px", "py", "x0", "x1", "y0", "y1",
+                  "complete"))
 
 
 def pairing_radius_deg(scale_deg_px: float, max_dim_px: float) -> float:
@@ -130,11 +169,14 @@ def cutout_windows(targets: DataFrame, images: DataFrame,
     image footprint, with the clipped ``size_px`` cutout window.
 
     ``targets`` needs (target_id, ra, dec); ``images`` needs
-    (image_id, ra, dec, w, h).  Pass the ingest-time nested-HPX cell
-    column via ``cell_col``/``cell_level`` to keep the image side's
-    candidate keying entirely JVM (crossmatch keys both sides by a
-    shiftright of it, and up to JVM_RING_MAX_LEVEL its ring explode is a
-    broadcast map join).
+    (image_id, ra, dec, w, h).  The pairing is crossmatch's ring-keyed
+    equi-join at the pairing radius: each target explodes into the cells
+    of its ring-1 disc through ONE pandas UDF over (ra, dec)
+    (:func:`~.joins.radec_disc_udf` — no ring map is built or broadcast),
+    and each image is keyed by its own cell.  Pass the ingest-time
+    nested-HPX cell column via ``cell_col``/``cell_level`` to key the
+    image side entirely JVM-side (a guarded shiftright of it).  A target
+    with a null, NaN or infinite coordinate gets no windows.
 
     ``max_dim_px`` bounds max(w, h) across the table; when omitted it
     is read with one scalar aggregate (a single-row driver read, the
@@ -150,51 +192,21 @@ def cutout_windows(targets: DataFrame, images: DataFrame,
         if max_dim_px is None:  # empty input: zero rows out, not a crash
             max_dim_px = 1
     radius = pairing_radius_deg(scale_deg_px, max_dim_px)
+    use_cell = cell_col is not None and cell_level is not None
+    lvl, rings = match_level_rings(radius, level,
+                                   cell_level if use_cell else None)
+    if use_cell:
+        ikey = hpx_cell_key(cell_col, cell_level, lvl)
+    else:
+        from ..functions.udfs import hpx_udf
+        ikey = hpx_udf(lvl)("ra", "dec")
 
-    tsel = targets.select(target_id, "ra", "dec")
-    isel = images.select(image_id, "ra", "dec", "w", "h",
-                         *([cell_col] if cell_col else []))
-    if cell_col is not None and cell_level is not None:
-        # crossmatch's JVM ring-map path keys BOTH sides on the same
-        # cell column name; targets are small, so computing their cell
-        # here costs one Arrow batch over the tiny side only
-        if cell_col not in tsel.columns:
-            from ..functions.udfs import hpx_udf
-            # non-deterministic marker (guide §4.4): crossmatch keys this
-            # column through hpx_cell_key, whose inferred isnotnull filter
-            # otherwise clones the Arrow UDF into a second eval (observed
-            # as a duplicate 512-row ArrowEvalPython in the bench pairing
-            # plan); the function itself is deterministic
-            tsel = tsel.withColumn(
-                cell_col,
-                hpx_udf(cell_level).asNondeterministic()("ra", "dec"))
-    pairs = crossmatch(tsel, isel, radius, level=level,
-                       suffixes=("_t", "_i"),
-                       cell_col=cell_col, cell_level=cell_level)
-
-    w, h = F.col("w_i"), F.col("h_i")
-    px, py, den = _tan_px_cols(
-        F.col("ra_t"), F.col("dec_t"), F.col("ra_i"), F.col("dec_i"),
-        w, h, scale_deg_px)
-    inside = (den > 0) & (px >= 0) & (px < w) & (py >= 0) & (py < h)
-
-    half = size_px // 2
-    x0r = F.floor(px).cast("int") - F.lit(half)
-    y0r = F.floor(py).cast("int") - F.lit(half)
-    x0 = F.greatest(F.lit(0), x0r)
-    y0 = F.greatest(F.lit(0), y0r)
-    x1 = F.least(w.cast("int"), x0r + F.lit(size_px))
-    y1 = F.least(h.cast("int"), y0r + F.lit(size_px))
-
-    return (pairs.filter(inside)
-            .select(F.col(target_id + "_t").alias(target_id),
-                    F.col(image_id + "_i").alias(image_id),
-                    F.round(px, 6).alias("px"),
-                    F.round(py, 6).alias("py"),
-                    x0.alias("x0"), x1.alias("x1"),
-                    y0.alias("y0"), y1.alias("y1"),
-                    ((x1 - x0 == size_px) & (y1 - y0 == size_px))
-                    .alias("complete")))
+    pairs = targets.select(
+        F.explode(radec_disc_udf(lvl, rings)("ra", "dec")).alias("_mc"),
+        target_id, "ra", "dec").toDF("_mc", "_tid", "ra_t", "dec_t").join(
+        images.select(ikey.alias("_mc"), image_id, "ra", "dec", "w", "h")
+        .toDF("_mc", "_iid", "ra_i", "dec_i", "w_i", "h_i"), "_mc")
+    return pair_windows(pairs, scale_deg_px, size_px, target_id, image_id)
 
 
 #: matched-id count above which the pixel read-back switches from a
@@ -305,24 +317,41 @@ def matched_image_filter(images_sel: DataFrame, ids_src: DataFrame,
 
     Two physical strategies, picked by one bounded driver read:
 
-    - <= IN_SET_MAX matched ids: collect them into a literal IN-set.
+    - <= IN_SET_MAX matched ids: a literal IN-set (:func:`_in_set_filter`).
       It is pushed into the parquet scan, so row-group statistics prune
       unmatched stripes — at 100 TB the image table is READ only where
       it matched.
-    - above: broadcast LEFT-SEMI join on the distinct-id projection
-      (bounded by ``max_images``, loud raise beyond).  The plan stays
-      constant-size however many ids matched; with runtime Bloom
-      filters enabled Spark still pushes a scan-side filter.
+    - above: a broadcast LEFT-SEMI join (:func:`_semi_join_filter`).
     """
     wid = ids_src.select(image_id).distinct()
     head = wid.limit(IN_SET_MAX + 1).collect()
     if len(head) <= IN_SET_MAX:
-        if len(head) > max_images:
-            raise ValueError(
-                f"{what} matched > {max_images} distinct images; "
-                "raise max_images or partition the target list")
-        return images_sel.filter(
-            F.col(image_id).isin([r[0] for r in head]))
+        return _in_set_filter(images_sel, [r[0] for r in head], image_id,
+                              max_images, what)
+    return _semi_join_filter(images_sel, wid, image_id, max_images, what)
+
+
+def _check_max_images(n: int, max_images: int, what: str) -> None:
+    if n > max_images:
+        raise ValueError(
+            f"{what} matched > {max_images} distinct images; "
+            "raise max_images or partition the target list")
+
+
+def _in_set_filter(images_sel: DataFrame, ids: list, image_id: str,
+                   max_images: int, what: str) -> DataFrame:
+    """``images_sel`` where ``image_id`` is in the driver-side ``ids``
+    (at most IN_SET_MAX of them), as ONE SQL IN expression."""
+    _check_max_images(len(ids), max_images, what)
+    return images_sel.filter(in_predicate(image_id, ids))
+
+
+def _semi_join_filter(images_sel: DataFrame, wid: DataFrame, image_id: str,
+                      max_images: int, what: str) -> DataFrame:
+    """``images_sel`` left-semi joined with the broadcast distinct-id
+    frame ``wid`` (bounded by ``max_images``, loud raise beyond).  The
+    plan stays constant-size however many ids matched; with runtime Bloom
+    filters enabled Spark still pushes a scan-side filter."""
     # materialize the distinct-id projection ONCE — but BOUNDED (r5
     # advice): limit(max_images + 1) caps what the checkpoint can
     # materialize before the guard has passed, so a pathological id set
@@ -332,11 +361,7 @@ def matched_image_filter(images_sel: DataFrame, ids_src: DataFrame,
     # the count (local, cheap) and the broadcast build without
     # re-executing the pairing plan.
     wid = wid.limit(max_images + 1).localCheckpoint(eager=True)
-    n = wid.count()
-    if n > max_images:
-        raise ValueError(
-            f"{what} matched > {max_images} distinct images; "
-            "raise max_images or partition the target list")
+    _check_max_images(wid.count(), max_images, what)
     return images_sel.join(F.broadcast(wid), image_id, "left_semi")
 
 
@@ -375,31 +400,47 @@ def cutout_pixels(images: DataFrame, windows: DataFrame,
                   max_images: int = 1_000_000) -> DataFrame:
     """Extract the pixel windows computed by :func:`cutout_windows`.
 
-    ``images`` must carry (image_id, bytes, w, h, fmt).  The distinct
-    matched image ids restrict the read-back via matched_image_filter
-    (IN-set pushed to row-group stats below IN_SET_MAX, broadcast
-    left-semi above — the 100-TB table is READ only where it matched);
-    ``max_images`` guards the driver reads.  Decoding runs in Arrow
-    batches (mapInPandas); output pixels are re-encoded as raw uint8.
+    ``images`` must carry (image_id, bytes, w, h, fmt).  The windows are
+    grouped per image and read ONCE by a bounded driver read
+    (IN_SET_MAX + 1 images).  Up to IN_SET_MAX images, the read gives the
+    IN-set pushed into the scan (row-group stats skip unmatched stripes)
+    and the decode carries the window lists in its closure: the request
+    is that read plus one scan-and-decode pass.  Above it, the windows
+    are checkpointed and the read-back is matched_image_filter's
+    broadcast left-semi join plus a broadcast join of the window lists.
+    ``max_images`` guards both.  Decoding runs in Arrow batches
+    (mapInPandas); output pixels are re-encoded as raw uint8.
 
     Output: window columns + cut_w, cut_h, data (raw bytes), mean_val.
     """
-    # one materialization of the pairing (forced_photometry's wsel
-    # pattern): the matched-id driver read and the broadcast join below
-    # would otherwise each re-run a lazy cutout_windows plan
-    windows = windows.localCheckpoint(eager=True)
-    # group windows PER IMAGE before they meet the payload (see
-    # forced_photometry): bytes cross the Arrow boundary once per image,
-    # not once per window, and decode_windows shares the decompress /
-    # dequant across the image's windows (bit-identical pixels)
-    wgrp = (windows.groupBy(image_id)
-            .agg(F.collect_list(F.struct(
-                F.col("target_id").alias("_t"),
-                "x0", "x1", "y0", "y1")).alias("_wins")))
-    matched = (matched_image_filter(
-                   images.select(image_id, bytes_col, "w", "h", "fmt"),
-                   windows, image_id, max_images, "cutout_pixels")
-               .join(F.broadcast(wgrp), image_id))
+    def grouped(w: DataFrame) -> DataFrame:
+        # windows PER IMAGE (see forced_photometry): bytes cross the Arrow
+        # boundary once per image, not once per window, and decode_windows
+        # shares the decompress / dequant across the image's windows
+        return w.groupBy(image_id).agg(F.expr(
+            "collect_list(struct(target_id AS _t, x0, x1, y0, y1)) AS _wins"))
+
+    isel = images.select(image_id, bytes_col, "w", "h", "fmt")
+    head = grouped(windows).limit(IN_SET_MAX + 1).collect()
+    if len(head) <= IN_SET_MAX:
+        wins_by_id = {r[0]: [tuple(w) for w in r[1]] for r in head}
+        matched = _in_set_filter(isel, list(wins_by_id), image_id,
+                                 max_images, "cutout_pixels")
+
+        def wins_of(b: pd.DataFrame):
+            return [wins_by_id[i] for i in b[image_id]]
+    else:
+        # one materialization of the pairing: the semi-join's id build and
+        # the window-list broadcast would otherwise each re-run it
+        windows = windows.localCheckpoint(eager=True)
+        matched = (_semi_join_filter(
+                       isel, windows.select(image_id).distinct(), image_id,
+                       max_images, "cutout_pixels")
+                   .join(F.broadcast(grouped(windows)), image_id))
+
+        def wins_of(b: pd.DataFrame):
+            return [[(d["_t"], d["x0"], d["x1"], d["y0"], d["y1"])
+                     for d in ws] for ws in b["_wins"]]
 
     schema = (f"{image_id} string, target_id long, x0 int, x1 int, "
               "y0 int, y1 int, cut_w int, cut_h int, data binary, "
@@ -422,21 +463,20 @@ def cutout_pixels(images: DataFrame, windows: DataFrame,
         for b in batches:
             wa, ha = b["w"].to_numpy(), b["h"].to_numpy()
             fmta, bytesa = b["fmt"].to_numpy(), b[bytes_col].to_numpy()
-            winsa = b["_wins"].to_numpy()
             ids = b[image_id].to_numpy()
             out = {image_id: [], "target_id": [], "x0": [], "x1": [],
                    "y0": [], "y1": [], "cut_w": [], "cut_h": [],
                    "data": [], "mean_val": []}
-            for i in range(len(b)):
-                wins = winsa[i]
-                coords = [(int(d["x0"]), int(d["x1"]),
-                           int(d["y0"]), int(d["y1"])) for d in wins]
+            for i, wins in enumerate(wins_of(b)):
+                coords = [(int(x0), int(x1), int(y0), int(y1))
+                          for _, x0, x1, y0, y1 in wins]
                 cuts = imaging.decode_windows(
                     bytesa[i], int(wa[i]), int(ha[i]), str(fmta[i]),
                     coords, channel=None)
-                for d, (x0, x1, y0, y1), cut in zip(wins, coords, cuts):
+                for (t, *_), (x0, x1, y0, y1), cut in zip(wins, coords,
+                                                          cuts):
                     out[image_id].append(ids[i])
-                    out["target_id"].append(d["_t"])
+                    out["target_id"].append(t)
                     out["x0"].append(x0)
                     out["x1"].append(x1)
                     out["y0"].append(y0)
@@ -726,9 +766,9 @@ def coadd_mosaic(images: DataFrame, level: int, tile_px: int,
     # (sqrt(2)*tile_rad + half_diag < 45 deg), keeping the box sound;
     # at level 0 the angle can exceed 45 deg, so only the disc applies.
     if level >= 1:
-        cpx, cpy, cden = _tan_px_cols(
-            F.col("ra"), F.col("dec"), F.col("_tra"), F.col("_tdec"),
-            F.lit(tile_px), F.lit(tile_px), math.degrees(tile_scale))
+        cpx, cpy, cden = map(F.expr, _tan_px_sql(
+            "ra", "dec", "_tra", "_tdec", tile_px, tile_px,
+            math.degrees(tile_scale)))
         margin = half_diag * F.lit(2.0) / F.lit(tile_scale)
         cand = cand.filter(
             (cden > 0)

@@ -77,7 +77,7 @@ def detect_sources(images: DataFrame, scale_deg_px: float,
 
     # inverse TAN (JVM Column trig): pixel center -> tangent-plane
     # (xi, eta) -> unit vector in the (east, north, center) basis at the
-    # pointing -> (ra, dec). Exact inverse of cutouts._tan_px_cols.
+    # pointing -> (ra, dec). Exact inverse of cutouts._tan_px_sql.
     s = F.lit(math.radians(scale_deg_px))
     pxc = F.col("src_x") + F.lit(0.5)
     pyc = F.col("src_y") + F.lit(0.5)

@@ -299,7 +299,7 @@ def moc_filter(df: DataFrame, ranges, pix_col: str):
     table)."""
     from ..functions.cover import ranges_predicate
 
-    return df.filter(ranges_predicate(F.col(pix_col), _normalize(ranges)))
+    return df.filter(ranges_predicate(pix_col, _normalize(ranges)))
 
 
 def density_mom(df: DataFrame, pix_col: str, order: int,

@@ -594,7 +594,7 @@ class IcebergLiteTable:
             from ..functions.cover import ranges_predicate
 
             df = df.filter(F.col("bucket").isin(self.stat_pruned_buckets(ranges)))
-            df = df.filter(ranges_predicate(F.col(self.cell_col), ranges))
+            df = df.filter(ranges_predicate(self.cell_col, ranges))
         return df
 
     def stat_pruned_buckets(self, ranges: list[list[int]]) -> list[int]:

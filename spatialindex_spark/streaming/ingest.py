@@ -88,7 +88,7 @@ def stream_region_filter(stream: DataFrame, ra: float, dec: float,
 
     cells = stream.withColumn("spt_ind",
                               hpx_udf(level)(F.col(ra_col), F.col(dec_col)))
-    pred = ranges_predicate(F.col("spt_ind"), hpx_cone_ranges(level, ra, dec, radius))
+    pred = ranges_predicate("spt_ind", hpx_cone_ranges(level, ra, dec, radius))
     c = sc_to_v3(ra, dec)
     rad = F.radians
     geom = (F.cos(rad(ra_col)) * F.cos(rad(dec_col)) * c.x
@@ -308,7 +308,7 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
     ring-1 (or multi-ring at level 0) neighbor cells via
     joins.ring_explode, so the per-micro-batch join is a stateless
     equi-join — no watermark or state store. Window math is the batch
-    operator's JVM Column trig (operators/cutouts.py); results across
+    operator's (operators/cutouts.py:pair_windows); results across
     micro-batches equal the batch ``cutout_windows`` on the same rows
     (pytest-gated).
 
@@ -316,7 +316,7 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
     be aggregated at plan time); rows exceeding it raise at runtime via
     an in-plan guard rather than silently under-matching.
     """
-    from ..operators.cutouts import _tan_px_cols, pairing_radius_deg
+    from ..operators.cutouts import pair_windows, pairing_radius_deg
     from ..operators.joins import (hpx_cell_key, ring_cover_level,
                                    ring_explode)
 
@@ -340,25 +340,11 @@ def stream_cutout(stream_images: DataFrame, targets: DataFrame,
     pairs = (ring_explode(stream_images, pixkey, lvl, rings)
              .join(tgt, "_mc").drop("_mc"))
 
-    w, h = F.col("w"), F.col("h")
-    px, py, den = _tan_px_cols(F.col("t_ra"), F.col("t_dec"),
-                               F.col("ra"), F.col("dec"), w, h,
-                               scale_deg_px)
-    inside = (den > 0) & (px >= 0) & (px < w) & (py >= 0) & (py < h)
-    half = size_px // 2
-    x0r = F.floor(px).cast("int") - F.lit(half)
-    y0r = F.floor(py).cast("int") - F.lit(half)
-    x0 = F.greatest(F.lit(0), x0r)
-    y0 = F.greatest(F.lit(0), y0r)
-    x1 = F.least(w.cast("int"), x0r + F.lit(size_px))
-    y1 = F.least(h.cast("int"), y0r + F.lit(size_px))
-    return (pairs.filter(inside)
-            .select(target_id, image_id,
-                    F.round(px, 6).alias("px"), F.round(py, 6).alias("py"),
-                    x0.alias("x0"), x1.alias("x1"),
-                    y0.alias("y0"), y1.alias("y1"),
-                    ((x1 - x0 == size_px) & (y1 - y0 == size_px))
-                    .alias("complete")))
+    return pair_windows(
+        pairs.select(target_id, image_id, "t_ra", "t_dec", "ra", "dec", "w",
+                     "h").toDF("_tid", "_iid", "ra_t", "dec_t", "ra_i",
+                               "dec_i", "w_i", "h_i"),
+        scale_deg_px, size_px, target_id, image_id)
 
 
 def stream_simhash_dedup(stream: DataFrame, text_col: str = "text",

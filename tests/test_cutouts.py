@@ -68,6 +68,23 @@ def _brute_windows(imgs: pd.DataFrame, tgts: pd.DataFrame):
     return sorted(out)
 
 
+def _payload(imgs_df, fmts=("raw", "z", "dct")):
+    """``imgs_df`` plus fmt (cycling ``fmts`` by image id) and the encoded
+    synthetic pixels of each image."""
+    def gen(batches):
+        for b in batches:
+            f = [fmts[int(i) % len(fmts)] for i in b["image_id"]]
+            b = b.copy()
+            b["fmt"] = f
+            b["bytes"] = [imaging.encode(
+                imaging.synth_image(int(i), int(w), int(h)), fm)
+                for i, w, h, fm in zip(b["image_id"], b["w"], b["h"], f)]
+            yield b
+
+    schema = imgs_df.schema.simpleString()[len("struct<"):-1].replace(":", " ")
+    return imgs_df.mapInPandas(gen, schema + ", fmt string, bytes binary")
+
+
 def test_windows_match_brute_force(spark):
     imgs_df, tgts_df, imgs, tgts = _mk_tables(spark)
     got = cutout_windows(tgts_df, imgs_df, SCALE, SIZE).collect()
@@ -114,19 +131,7 @@ def test_cutout_pixels_match_numpy_slice(spark):
     imgs_df, tgts_df, imgs, _ = _mk_tables(spark, n_img=40, n_tgt=60,
                                            seed=3)
 
-    def gen(batches):
-        for b in batches:
-            fmts = [("raw", "z", "dct")[int(i) % 3] for i in b["image_id"]]
-            b = b.copy()
-            b["fmt"] = fmts
-            b["bytes"] = [imaging.encode(
-                imaging.synth_image(int(i), int(w), int(h)), f)
-                for i, w, h, f in zip(b["image_id"], b["w"], b["h"], fmts)]
-            yield b
-
-    payload = imgs_df.mapInPandas(
-        gen, "image_id long, ra double, dec double, w int, h int, "
-             "fmt string, bytes binary")
+    payload = _payload(imgs_df)
     wins = cutout_windows(tgts_df, imgs_df, SCALE, SIZE)
     cuts = cutout_pixels(payload, wins).collect()
     assert len(cuts) == wins.count() and len(cuts) > 0
@@ -546,42 +551,164 @@ def test_mosaic_includes_corner_ring_contributor(spark):
 def test_pixel_readback_semijoin_above_inset_cap(spark, monkeypatch):
     """Above IN_SET_MAX matched ids the read-back must switch to a
     broadcast left-semi join (constant-size plan — no 100k-literal
-    IN-list) and return byte-identical results; the max_images guard
-    still raises loudly on both paths."""
+    IN-list) and return the IN-set branch's rows, row for row; the
+    max_images guard still raises loudly on both paths. Inputs: the
+    checkpointed windows, and the lazy windows plan with a duplicate
+    target id."""
     import spatialindex_spark.operators.cutouts as C
 
     imgs_df, tgts_df, imgs, _ = _mk_tables(spark, n_img=40, n_tgt=60,
                                            seed=3)
-
-    def gen(batches):
-        for b in batches:
-            b = b.copy()
-            b["fmt"] = "raw"
-            b["bytes"] = [imaging.encode(
-                imaging.synth_image(int(i), int(w), int(h)), "raw")
-                for i, w, h in zip(b["image_id"], b["w"], b["h"])]
-            yield b
-
-    payload = imgs_df.mapInPandas(
-        gen, "image_id long, ra double, dec double, w int, h int, "
-             "fmt string, bytes binary").localCheckpoint(eager=True)
+    payload = _payload(imgs_df, ("raw",)).localCheckpoint(eager=True)
     wins = cutout_windows(tgts_df, imgs_df, SCALE, SIZE) \
         .localCheckpoint(eager=True)
     assert wins.select("image_id").distinct().count() > 3
+    dup = tgts_df.unionByName(tgts_df.limit(5).withColumn(
+        "ra", (F.col("ra") + 0.05) % 360.0))
+    lazy = cutout_windows(dup, imgs_df, SCALE, SIZE)
 
     def snap(df):
-        return sorted((r.target_id, r.image_id, r.x0, r.x1, r.y0, r.y1,
-                       bytes(r.data)) for r in df.collect())
+        return sorted(tuple(r) for r in df.collect())
 
-    base = snap(cutout_pixels(payload, wins))
-    monkeypatch.setattr(C, "IN_SET_MAX", 2)
-    out = cutout_pixels(payload, wins)
+    for w in (wins, lazy):
+        monkeypatch.setattr(C, "IN_SET_MAX", 20_000)
+        inset = cutout_pixels(payload, w)
+        plan = inset._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" not in plan
+        base = snap(inset)
+        monkeypatch.setattr(C, "IN_SET_MAX", 2)
+        out = cutout_pixels(payload, w)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" in plan
+        assert snap(out) == base and len(base) == w.count() > 0
+
+        with pytest.raises(ValueError, match="matched >"):
+            cutout_pixels(payload, w, max_images=3)
+
+
+def _indexed_payload(spark, tmp_path, imgs_df):
+    """``imgs_df`` with its hpx7 ingest cell and raw pixels, as parquet."""
+    from spatialindex_spark.functions.udfs import hpx_udf
+
+    p = str(tmp_path / "imgs_indexed")
+    _payload(imgs_df.withColumn("hpx7", hpx_udf(7)("ra", "dec")),
+             ("raw",)).write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def test_cutout_request_plan_shape(spark, tmp_path, monkeypatch):
+    """A cutout request is two Spark passes: the pairing keys the targets
+    with ONE Arrow UDF (their ring-1 discs) and never builds or joins the
+    ring map, and the IN-set read-back is one scan-and-decode pass, with
+    the IN-set pushed into the scan and no broadcast."""
+    import spatialindex_spark.operators.joins as J
+
+    monkeypatch.setattr(J, "_RING1_MAP_CACHE", {})
+    imgs_df, tgts_df, imgs, tgts = _mk_tables(spark, n_img=60, n_tgt=40)
+    indexed = _indexed_payload(spark, tmp_path, imgs_df)
+    wins = cutout_windows(tgts_df, indexed.drop("bytes", "fmt"), SCALE,
+                          SIZE, max_dim_px=64, cell_col="hpx7",
+                          cell_level=7)
+    plan = wins._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "_pix" not in plan and "bytes" not in plan
+    got = sorted((r.target_id, r.image_id, r.px, r.py, r.x0, r.x1, r.y0,
+                  r.y1) for r in wins.collect())
+    assert got == _brute_windows(imgs, tgts) and got
+
+    out = cutout_pixels(indexed, wins)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan
-    assert snap(out) == base and len(base) > 0
+    assert "BroadcastExchange" not in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    i = plan.find("PushedFilters: [")
+    assert "In(image_id" in plan[i:i + 400], plan[i:i + 400]
+    assert out.count() == len(got)
+    assert J._RING1_MAP_CACHE == {}
 
-    with pytest.raises(ValueError, match="matched >"):
-        cutout_pixels(payload, wins, max_images=3)
+
+def test_cutout_null_and_nan_targets_get_no_windows(spark):
+    """A target with a null, NaN or infinite ra/dec gets no windows (its
+    UDF key list is null, so it explodes to nothing); the valid targets of
+    the same frame keep theirs."""
+    imgs_df, _, imgs, tgts = _mk_tables(spark, n_img=40, n_tgt=20, seed=5)
+    nan, inf = float("nan"), float("inf")
+    bad = [(100, None, 10.0), (101, 10.0, None), (102, nan, 1.0),
+           (103, 1.0, nan), (104, inf, 1.0), (105, None, None)]
+    rows = [(int(t.target_id), float(t.ra), float(t.dec))
+            for t in tgts.itertuples(index=False)] + bad
+    tdf = spark.createDataFrame(rows, "target_id long, ra double, dec double")
+    for kw in ({}, {"cell_col": "hpx7", "cell_level": 7}):
+        idf = imgs_df
+        if kw:
+            from spatialindex_spark.functions.udfs import hpx_udf
+            idf = imgs_df.withColumn("hpx7", hpx_udf(7)("ra", "dec"))
+        got = sorted((r.target_id, r.image_id, r.px, r.py, r.x0, r.x1, r.y0,
+                      r.y1) for r in cutout_windows(tdf, idf, SCALE, SIZE,
+                                                    **kw).collect())
+        assert got == _brute_windows(imgs, tgts) and got
+
+
+def test_cutout_pole_and_ra_wrap_targets_match_brute_force(spark):
+    """Targets at dec = +-90 and on both sides of RA 0/360 (360 itself
+    included) get the windows of the tan_pix_np brute force, on the UDF-
+    and the cell-keyed image side."""
+    from spatialindex_spark.functions.udfs import hpx_udf
+
+    imgs = pd.DataFrame({
+        "image_id": np.arange(8, dtype=np.int64),
+        "ra": [0.0, 120.0, 240.0, 45.0, 0.2, 359.8, 0.0, 180.0],
+        "dec": [89.7, 89.9, -89.8, -89.5, 10.0, 10.0, -30.0, 0.3],
+        "w": np.array([64, 64, 64, 64, 64, 64, 32, 64], dtype=np.int32),
+        "h": np.array([64, 32, 64, 64, 64, 64, 32, 64], dtype=np.int32)})
+    tgts = pd.DataFrame({
+        "target_id": np.arange(9, dtype=np.int64),
+        "ra": [0.0, 77.0, 0.0, 300.0, 0.0, 360.0, 359.99, 0.01, 180.0],
+        "dec": [90.0, 90.0, -90.0, -90.0, 10.0, 10.0, 10.1, -30.05, 0.0]})
+    want = _brute_windows(imgs, tgts)
+    assert {t for t, *_ in want} >= {0, 1, 2, 3, 4, 5, 6, 7, 8}
+    imgs_df = spark.createDataFrame(imgs)
+    tdf = spark.createDataFrame(tgts)
+    for idf, kw in ((imgs_df, {}),
+                    (imgs_df.withColumn("hpx7", hpx_udf(7)("ra", "dec")),
+                     {"cell_col": "hpx7", "cell_level": 7})):
+        got = sorted((r.target_id, r.image_id, r.px, r.py, r.x0, r.x1, r.y0,
+                      r.y1) for r in cutout_windows(tdf, idf, SCALE, SIZE,
+                                                    **kw).collect())
+        assert got == want
+
+
+def test_cutout_duplicate_target_ids_each_get_windows(spark):
+    """Two targets sharing an id each get their own windows, and the
+    pixel read-back cuts every one of them."""
+    imgs_df, _, imgs, tgts = _mk_tables(spark, n_img=40, n_tgt=30, seed=9)
+    dup = tgts.copy()
+    dup["ra"] = (dup["ra"] + 0.03) % 360.0
+    both = pd.concat([tgts, dup], ignore_index=True)
+    wins = cutout_windows(spark.createDataFrame(both), imgs_df, SCALE, SIZE)
+    got = sorted((r.target_id, r.image_id, r.px, r.py, r.x0, r.x1, r.y0,
+                  r.y1) for r in wins.collect())
+    want = _brute_windows(imgs, both)
+    assert got == want
+    assert len(want) > len(_brute_windows(imgs, tgts)) > 0
+    cuts = sorted((r.target_id, r.image_id, r.x0, r.x1, r.y0, r.y1)
+                  for r in cutout_pixels(_payload(imgs_df), wins).collect())
+    assert cuts == sorted((t, i, x0, x1, y0, y1)
+                          for t, i, _, _, x0, x1, y0, y1 in want)
+
+
+def test_cutout_empty_targets_skip_readback_scan(spark, tmp_path):
+    """An empty target frame gives zero windows and zero pixel rows, and
+    the read-back plans no scan of the image table."""
+    imgs_df, *_ = _mk_tables(spark, n_img=20, n_tgt=2)
+    indexed = _indexed_payload(spark, tmp_path, imgs_df)
+    none = spark.createDataFrame([], "target_id long, ra double, dec double")
+    wins = cutout_windows(none, indexed.drop("bytes", "fmt"), SCALE, SIZE,
+                          max_dim_px=64, cell_col="hpx7", cell_level=7)
+    assert wins.count() == 0
+    out = cutout_pixels(indexed, wins)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "Scan parquet" not in plan, plan
+    assert out.collect() == []
 
 
 def test_decode_windows_matches_full_decode_crops():
