@@ -636,6 +636,18 @@ def match_level_rings(radius_deg: float, level: int | None = None,
                                    / safe_ring1_rad(level)))
 
 
+def _dot_sql(lra: str, ldec: str, rra: str, rdec: str) -> str:
+    """SQL text of the dot product of two (ra, dec) unit vectors in
+    degrees, the cosine of their separation. One expression string is one
+    py4j call, where a Column build costs several round trips per
+    operator; crossmatch, best_match and bayes_match share it, so their
+    separations are bit-identical."""
+    lra, ldec, rra, rdec = map(sql_name, (lra, ldec, rra, rdec))
+    return (f"COS(RADIANS({ldec})) * COS(RADIANS({rdec})) "
+            f"* COS(RADIANS({lra}) - RADIANS({rra})) "
+            f"+ SIN(RADIANS({ldec})) * SIN(RADIANS({rdec}))")
+
+
 def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
                level: int | None = None,
                left_cols=("ra", "dec"), right_cols=("ra", "dec"),
@@ -683,10 +695,7 @@ def crossmatch(left: DataFrame, right: DataFrame, radius_deg: float,
     lkey = ring_explode(left, lpix, lvl, rings)
     rkey = right.withColumn("_mr", rkey_col)
 
-    lrc, ldc, rrc, rdc = map(sql_name, (lr + sl, ld + sl, rr + sr, rd + sr))
-    dot = (f"COS(RADIANS({ldc})) * COS(RADIANS({rdc})) "
-           f"* COS(RADIANS({lrc}) - RADIANS({rrc})) "
-           f"+ SIN(RADIANS({ldc})) * SIN(RADIANS({rdc}))")
+    dot = _dot_sql(lr + sl, ld + sl, rr + sr, rd + sr)
     cosr = math.cos(radius_deg * RAD_PER_DEG)
     # no dedup pass needed: the right side has exactly ONE cell key and the
     # left side's ring cells are deduped per row, so each (l, r) pair can
@@ -708,16 +717,9 @@ def best_match(left: DataFrame, right: DataFrame, radius_deg: float,
     lr, ld = kwargs.get("left_cols", ("ra", "dec"))
     rr, rd = kwargs.get("right_cols", ("ra", "dec"))
     pairs = crossmatch(left, right, radius_deg, **kwargs)
-    rad = F.radians
-    lrc, ldc = lr + suffixes[0], ld + suffixes[0]
-    rrc, rdc = rr + suffixes[1], rd + suffixes[1]
-    dot = (
-        F.cos(rad(F.col(ldc))) * F.cos(rad(F.col(rdc)))
-        * F.cos(rad(F.col(lrc)) - rad(F.col(rrc)))
-        + F.sin(rad(F.col(ldc))) * F.sin(rad(F.col(rdc)))
-    )
-    sep = F.degrees(F.acos(F.least(F.greatest(dot, F.lit(-1.0)),
-                                   F.lit(1.0))))
+    dot = _dot_sql(lr + suffixes[0], ld + suffixes[0],
+                   rr + suffixes[1], rd + suffixes[1])
+    sep = F.expr(f"DEGREES(ACOS(LEAST(GREATEST({dot}, -1.0D), 1.0D)))")
     w = Window.partitionBy(left_id + suffixes[0]).orderBy(
         sep.asc(), F.col(right_id + suffixes[1]).asc())
     return (pairs.withColumn("sep_deg", sep)
@@ -777,16 +779,11 @@ def bayes_match(left: DataFrame, right: DataFrame, radius_deg: float,
     s = (sigma_left_deg * RAD_PER_DEG) ** 2 \
         + (sigma_right_deg * RAD_PER_DEG) ** 2
     pairs = crossmatch(left, right, radius_deg, **kwargs)
-    rad = F.radians
-    lrc, ldc = lr + suffixes[0], ld + suffixes[0]
-    rrc, rdc = rr + suffixes[1], rd + suffixes[1]
-    dot = (
-        F.cos(rad(F.col(ldc))) * F.cos(rad(F.col(rdc)))
-        * F.cos(rad(F.col(lrc)) - rad(F.col(rrc)))
-        + F.sin(rad(F.col(ldc))) * F.sin(rad(F.col(rdc)))
-    )
-    ln_b = F.lit(math.log(2.0 / s)) - (F.lit(1.0) - dot) / F.lit(s)
-    out = pairs.withColumn("ln_bayes", ln_b)
+    dot = _dot_sql(lr + suffixes[0], ld + suffixes[0],
+                   rr + suffixes[1], rd + suffixes[1])
+    out = pairs.withColumn("ln_bayes", F.expr(
+        f"CAST('{math.log(2.0 / s)!r}' AS DOUBLE) "
+        f"- (1.0D - ({dot})) / CAST('{s!r}' AS DOUBLE)"))
     if prior is not None:
         b = F.exp(F.col("ln_bayes"))
         out = out.withColumn(

@@ -62,17 +62,16 @@ def tile_cell_assignments(points: DataFrame, tiles: list[dict], level: int = 7,
 
 def resumable_tile_assignment(points: DataFrame, tiles: list[dict], path: str,
                               level: int = 7, cell_col: str = "spt_ind",
-                              system: str = "htm", group_size: int = 8,
-                              fail_after_groups: int | None = None) -> dict:
+                              system: str = "htm") -> dict:
     """North-rule checkpoint-resume: materialize the full tile-assignment
-    output through the Iceberg-lite layout. Cell-range buckets are the work
-    units; each committed bucket is recorded in the lineage WAL with row
-    counts + checksums, so a killed job resumes exactly where it stopped and
-    re-running after completion is a no-op. Returns the snapshot dict."""
+    output through the Iceberg-lite layout in one staged pass, then a
+    per-bucket claim. Cell-range buckets are the work units; each claimed
+    bucket is recorded in the lineage log with row counts + checksums, so
+    a killed job resumes with the unmarked buckets only and re-running
+    after completion is a no-op. Returns the snapshot dict."""
     from ..sources.iceberg_lite import IcebergLiteTable
 
     out = map_tiles_to_points(points, tiles, level, cell_col)
     t = IcebergLiteTable(path, cell_col=cell_col, system=system, level=level,
-                         num_buckets=max(group_size * 4, 16))
-    return t.write(out, group_size=group_size,
-                   fail_after_groups=fail_after_groups)
+                         num_buckets=32)
+    return t.write(out)

@@ -18,28 +18,35 @@ Buckets are fixed-width slices of the cell-ID space, so each bucket holds a
 straight to bucket dirs, giving partition pruning before parquet row-group
 stats even load.
 
-Checkpoint-resume: ``write`` stages each group into a private directory,
-CLAIMS every bucket with an atomic directory rename into data/, and
-publishes a lineage marker (bucket, cell range, row count, checksum) with
-an atomic file replace. A re-run skips every bucket already marked —
-partially-completed tile-assignment jobs resume idempotently (north-rule
-requirement). Same-host writers are additionally SERIALIZED with an
-advisory flock on metadata/write.lock (held for the whole write; released
-automatically on process death), so the startup cleanup of unmarked bucket
-dirs can never race a live writer's rename-then-mark window (r3 advice
-fix) — two resumers racing the same crash recover without duplicate or
-torn state (tested with concurrent threads). The rename-claim protocol
-remains in place beneath the lock as defense in depth for shared
-filesystems where flock is unreliable (exactly one claim rename wins per
-bucket; the loser discards its staging copy). The final snapshot is the
-compacted commit log, itself rename-committed.
+Checkpoint-resume: ``write`` stages every unmarked bucket in one Spark pass
+(one shuffle on the bucket, so each bucket lands as one file) into a private
+directory, then, per bucket, CLAIMS it with an atomic directory rename into
+data/ and publishes a lineage marker (bucket, cell range, row count,
+checksum) with an atomic file replace. A re-run skips every bucket already
+marked — partially-completed tile-assignment jobs resume idempotently
+(north-rule requirement), and a finished table re-runs without a Spark job.
+Same-host writers are additionally SERIALIZED with an advisory flock on
+metadata/write.lock (held for the whole write; released automatically on
+process death), so the startup cleanup of unmarked bucket dirs can never
+race a live writer's rename-then-mark window (r3 advice fix) — two resumers
+racing the same crash recover without duplicate or torn state (tested with
+concurrent threads). The rename-claim protocol remains in place beneath the
+lock as defense in depth for shared filesystems where flock is unreliable
+(exactly one claim rename wins per bucket; the loser discards its staging
+copy). The final snapshot is the compacted commit log, itself
+rename-committed. ``append_batch`` (streaming) and ``compact`` commit
+through the same lock, staging, stats and atomic-JSON routines.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
 import json
 import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,6 +62,18 @@ def _cell_space(system: str, level: int) -> tuple[int, int]:
     raise ValueError(f"unknown system {system!r}")
 
 
+def _write_json(final: str, payload: dict) -> None:
+    """Atomically publish ``payload`` as the JSON file ``final`` (tmp +
+    fsync + os.replace): a reader sees the whole file or none of it."""
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    tmp = final + f".tmp-{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write(json.dumps(payload))
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, final)
+
+
 class IcebergLiteTable:
     def __init__(self, path: str, cell_col: str = "spt_ind",
                  system: str = "htm", level: int = 7, num_buckets: int = 64):
@@ -67,7 +86,7 @@ class IcebergLiteTable:
         # bucket_expr computes (cell - lo) * num_buckets in int64; past
         # this bound it overflows for VALID in-space ids (ANSI Spark
         # raises per-row mid-write; non-ANSI wraps to a negative bucket
-        # no write group selects = silent row loss). Fail at
+        # the claim loop never picks up = silent row loss). Fail at
         # construction instead — deep-level tables must coarsen the
         # bucket key or reduce num_buckets.
         if (self.hi - self.lo - 1) * num_buckets >= 2 ** 63:
@@ -92,8 +111,8 @@ class IcebergLiteTable:
     def bucket_expr(self):
         """Bucket id, failing LOUDLY on null or out-of-id-space cells: an
         unclamped expression sent nulls to the last bucket (F.least skips
-        nulls) and below-range ids to negative buckets no write group ever
-        selected — silent row loss in a checksummed, resumable layout."""
+        nulls) and below-range ids to negative buckets no claim ever picked
+        up — silent row loss in a checksummed, resumable layout."""
         span = self.hi - self.lo
         cell = F.col(self.cell_col)
         raw = ((cell - F.lit(self.lo)) * self.num_buckets / F.lit(span)) \
@@ -117,6 +136,74 @@ class IcebergLiteTable:
             out.update(range(self.bucket_of_cell(lo), self.bucket_of_cell(hi) + 1))
         return sorted(out)
 
+    # -- commit primitives ---------------------------------------------------
+    @contextlib.contextmanager
+    def _locked(self):
+        """Hold the table's write lock: an advisory, blocking flock on
+        metadata/write.lock, released when the file closes (also on process
+        death, so a crashed writer never wedges the table). It serializes
+        same-host writers: without it, resumer B's startup cleanup could
+        delete a bucket dir that live writer A renamed into place but had
+        not yet marked, and A would publish a marker for data that no
+        longer exists (silent row loss)."""
+        os.makedirs(self.meta_dir, exist_ok=True)
+        with open(os.path.join(self.meta_dir, "write.lock"), "w") as lockf:
+            fcntl.flock(lockf, fcntl.LOCK_EX)
+            yield
+
+    @contextlib.contextmanager
+    def _staged(self, df: DataFrame):
+        """Write ``df`` (carrying its ``bucket`` column) into a fresh
+        private staging dir, partitioned by bucket with rows sorted by
+        (bucket, cell): the dynamic-partition writer requires a bucket
+        ordering and would otherwise re-sort by bucket alone, destroying
+        the cell clustering that row-group pruning needs. Yields the dir;
+        whatever the caller did not rename out of it is removed on exit,
+        also when the caller raises."""
+        stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
+        try:
+            (df.sortWithinPartitions("bucket", self.cell_col)
+               .write.mode("overwrite").partitionBy("bucket").parquet(stage))
+            yield stage
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _bucket_stats(self, spark: SparkSession, path: str) -> dict[int, dict]:
+        """Lineage stats of each ``bucket=<k>`` dir under ``path``: row
+        count, cell range and the additive crc32 checksum of the cell ids,
+        from one aggregation over the files. {} when no bucket has rows."""
+        if not any(d.startswith("bucket=") for d in os.listdir(path)):
+            return {}
+        keys = ("bucket", "row_count", "cell_min", "cell_max", "checksum")
+        rows = (spark.read.option("basePath", path).parquet(path)
+                .groupBy("bucket")
+                .agg(F.count(F.lit(1)).alias("row_count"),
+                     F.min(self.cell_col).alias("cell_min"),
+                     F.max(self.cell_col).alias("cell_max"),
+                     F.sum(F.crc32(F.col(self.cell_col).cast("string")))
+                     .alias("checksum"))
+                .collect())
+        return {int(r["bucket"]): {k: int(r[k]) for k in keys} for r in rows}
+
+    @staticmethod
+    def _marker(bucket: int, stats: dict[int, dict]) -> dict:
+        """Lineage marker of ``bucket``: its stats, or an empty bucket."""
+        st = stats.get(bucket) or {"bucket": bucket, "row_count": 0,
+                                   "cell_min": None, "cell_max": None,
+                                   "checksum": 0}
+        return {**st, "status": "committed", "ts": time.time()}
+
+    @staticmethod
+    def _check_columns(df: DataFrame) -> None:
+        """The layout owns the ``bucket`` and ``batch`` partition columns:
+        an input column of either name would be overwritten by the bucket
+        ids or break the stream read, so it is refused up front."""
+        clash = [c for c in df.columns if c.lower() in ("bucket", "batch")]
+        if clash:
+            raise ValueError(
+                f"input columns {clash} collide with the table's partition "
+                "columns (bucket, batch); rename them before writing")
+
     # -- lineage commit log -------------------------------------------------
     def committed_buckets(self) -> dict[int, dict]:
         done = {}
@@ -138,130 +225,77 @@ class IcebergLiteTable:
         return done
 
     def _commit_bucket(self, row: dict) -> None:
-        """Atomically publish one bucket's lineage marker (tmp + fsync +
-        os.replace). Racing writers of the same bucket produce identical
-        content, so last-replace-wins is idempotent."""
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        final = os.path.join(self.lineage_dir, f"bucket-{row['bucket']}.json")
-        tmp = final + f".tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            f.write(json.dumps(row))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, final)
+        """Atomically publish one bucket's lineage marker. Racing writers
+        of the same bucket produce identical content, so
+        last-replace-wins is idempotent."""
+        _write_json(os.path.join(self.lineage_dir,
+                                 f"bucket-{row['bucket']}.json"), row)
 
     # -- write with checkpoint-resume --------------------------------------
-    def write(self, df: DataFrame, group_size: int = 16,
-              fail_after_groups: int | None = None) -> dict:
-        """Write/resume the table. Buckets already in the WAL are skipped.
-
-        ``fail_after_groups`` is a test hook simulating a mid-job crash.
-        Returns the snapshot dict."""
-        import fcntl
-
-        os.makedirs(self.meta_dir, exist_ok=True)
-        # Serialize same-host writers: without this, resumer B's startup
-        # cleanup could rmtree a bucket dir that live writer A renamed into
-        # place but had not yet marked — A then publishes a marker for data
-        # that no longer exists (silent row loss). flock is advisory,
-        # blocking, and auto-released on process death, so a crashed writer
-        # never wedges the table (r3 advice fix).
-        with open(os.path.join(self.meta_dir, "write.lock"), "w") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                return self._write_locked(df, group_size, fail_after_groups)
-            finally:
-                fcntl.flock(lockf, fcntl.LOCK_UN)
-
     #: staging dirs older than this are presumed crash leftovers. Far above
-    #: any realistic single-group stage write (the previous 60 s threshold
-    #: was shorter than a typical Spark stage, so a late-starting resumer
-    #: could delete a LIVE writer's in-progress staging dir — r3 advice fix;
-    #: with the write lock this now only ever fires on true crash debris).
+    #: any realistic stage write (the previous 60 s threshold was shorter
+    #: than a typical Spark stage, so a late-starting resumer could delete
+    #: a LIVE writer's in-progress staging dir — r3 advice fix; with the
+    #: write lock this now only ever fires on true crash debris).
     STALE_STAGE_SECS = 6 * 3600
 
-    def _write_locked(self, df: DataFrame, group_size: int,
-                      fail_after_groups: int | None) -> dict:
-        import shutil
-        import uuid
+    def write(self, df: DataFrame) -> dict:
+        """Write/resume the table; buckets already marked are skipped.
 
-        # re-read under the lock: a writer that held the lock before us may
-        # have committed buckets after our constructor ran
-        done = self.committed_buckets()
-        # crash leftovers: (a) bucket dirs that were renamed into place but
-        # whose marker never landed, (b) stale staging dirs. Both are
-        # re-creatable from the source, so delete and re-write. The write
-        # lock guarantees no live writer's rename/mark can interleave here.
-        if os.path.isdir(self.data_dir):
-            for d in os.listdir(self.data_dir):
-                if d.startswith("bucket="):
-                    b = int(d.split("=", 1)[1])
-                    if b not in done:
+        Every unmarked bucket is staged by ONE Spark write that shuffles
+        once on the bucket, so each bucket is one task and one file; the
+        buckets are then claimed and marked one by one. A crash in the
+        claim loop resumes bucket by bucket; a crash inside the stage
+        write redoes that write (its files are private). A finished table
+        re-runs without a Spark job. Returns the snapshot dict."""
+        self._check_columns(df)
+        with self._locked():
+            # re-read under the lock: a writer that held the lock before
+            # us may have committed buckets after our constructor ran
+            done = self.committed_buckets()
+            # crash leftovers: (a) bucket dirs that were renamed into place
+            # but whose marker never landed, (b) stale staging dirs. Both
+            # are re-creatable from the source, so delete and re-write. The
+            # write lock guarantees no live writer's rename/mark can
+            # interleave here.
+            if os.path.isdir(self.data_dir):
+                for d in os.listdir(self.data_dir):
+                    if d.startswith("bucket=") \
+                            and int(d.split("=", 1)[1]) not in done:
                         shutil.rmtree(os.path.join(self.data_dir, d))
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                p = os.path.join(self.path, d)
-                if d.startswith(".stage-") and \
-                        time.time() - os.path.getmtime(p) > self.STALE_STAGE_SECS:
-                    shutil.rmtree(p, ignore_errors=True)
-        todo = [b for b in range(self.num_buckets) if b not in done]
-        df = df.withColumn("bucket", self.bucket_expr())
-        os.makedirs(self.data_dir, exist_ok=True)
-
-        groups = [todo[i:i + group_size] for i in range(0, len(todo), group_size)]
-        for gi, group in enumerate(groups):
-            if fail_after_groups is not None and gi >= fail_after_groups:
-                raise RuntimeError("simulated crash (fail_after_groups)")
-            # racing resumers may both pick up the same todo bucket: each
-            # stages into a private dir, then CLAIMS the bucket with an
-            # atomic directory rename — exactly one writer's files become
-            # the bucket; the loser discards its staging copy. The lineage
-            # marker is published (atomic replace) immediately after each
-            # winning rename to keep the unmarked window minimal.
-            stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
-            part = df.filter(F.col("bucket").isin(group))
-            (part.repartitionByRange(len(group), "bucket", self.cell_col)
-                 .sortWithinPartitions(self.cell_col)
-                 .write.mode("overwrite").partitionBy("bucket")
-                 .parquet(stage))
-            staged = {int(d.split("=", 1)[1]) for d in os.listdir(stage)
-                      if d.startswith("bucket=")}
-            stats = {}
-            if staged:
-                for r in (part.sparkSession.read.parquet(stage)
-                          .groupBy("bucket")
-                          .agg(F.count(F.lit(1)).alias("row_count"),
-                               F.min(self.cell_col).alias("cell_min"),
-                               F.max(self.cell_col).alias("cell_max"),
-                               F.sum(F.crc32(F.col(self.cell_col)
-                                             .cast("string")))
-                               .alias("checksum"))
-                          .collect()):
-                    stats[int(r["bucket"])] = r
-            for b in group:
-                if b in staged:
-                    src = os.path.join(stage, f"bucket={b}")
-                    dst = os.path.join(self.data_dir, f"bucket={b}")
-                    try:
-                        os.rename(src, dst)
-                    except OSError:
-                        if os.path.isdir(dst):
-                            continue    # lost the claim race; winner marks
-                        raise
-                    r = stats[b]
-                    self._commit_bucket({
-                        "bucket": b, "row_count": int(r["row_count"]),
-                        "cell_min": int(r["cell_min"]),
-                        "cell_max": int(r["cell_max"]),
-                        "checksum": int(r["checksum"]),
-                        "status": "committed", "ts": time.time()})
-                else:
-                    self._commit_bucket({
-                        "bucket": b, "row_count": 0, "cell_min": None,
-                        "cell_max": None, "checksum": 0,
-                        "status": "committed", "ts": time.time()})
-            shutil.rmtree(stage, ignore_errors=True)
-        return self.commit_snapshot()
+            if os.path.isdir(self.path):
+                for d in os.listdir(self.path):
+                    p = os.path.join(self.path, d)
+                    if d.startswith(".stage-") and time.time() \
+                            - os.path.getmtime(p) > self.STALE_STAGE_SECS:
+                        shutil.rmtree(p, ignore_errors=True)
+            todo = [b for b in range(self.num_buckets) if b not in done]
+            if not todo:
+                return self.commit_snapshot()
+            part = df.withColumn("bucket", self.bucket_expr())
+            if done:
+                part = part.filter(F.col("bucket").isin(todo))
+            with self._staged(part.repartition(self.num_buckets,
+                                               F.col("bucket"))) as stage:
+                stats = self._bucket_stats(df.sparkSession, stage)
+                os.makedirs(self.data_dir, exist_ok=True)
+                for b in todo:
+                    # racing resumers may both stage the same bucket: each
+                    # CLAIMS it with an atomic directory rename, so exactly
+                    # one writer's file becomes the bucket and the loser's
+                    # copy goes with its staging dir. The marker is
+                    # published right after each winning rename to keep
+                    # the unmarked window minimal.
+                    if b in stats:
+                        dst = os.path.join(self.data_dir, f"bucket={b}")
+                        try:
+                            os.rename(os.path.join(stage, f"bucket={b}"), dst)
+                        except OSError:
+                            if os.path.isdir(dst):
+                                continue    # lost the claim race; winner marks
+                            raise
+                    self._commit_bucket(self._marker(b, stats))
+            return self.commit_snapshot()
 
     def _snapshot_meta(self, snapshot: int | None = None) -> dict | None:
         """Snapshot dict (current one when ``snapshot`` is None), or None
@@ -306,20 +340,13 @@ class IcebergLiteTable:
             "manifest": [done[b] for b in sorted(done)],
             "data_rel": data_rel,
         }
-        os.makedirs(self.meta_dir, exist_ok=True)
         # rename-based commit: a reader never observes a torn snapshot or
-        # pointer file (os.replace is atomic on POSIX; racing resumers
-        # derive identical content from the same committed-bucket set, so
-        # last-replace-wins is idempotent)
-        for name, payload in ((f"snapshot-{snap_n}.json", snapshot),
-                              ("current.json", {"snapshot": snap_n})):
-            final = os.path.join(self.meta_dir, name)
-            tmp = final + f".tmp-{os.getpid()}"
-            with open(tmp, "w") as f:
-                f.write(json.dumps(payload))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, final)
+        # pointer file (racing resumers derive identical content from the
+        # same committed-bucket set, so last-replace-wins is idempotent)
+        _write_json(os.path.join(self.meta_dir, f"snapshot-{snap_n}.json"),
+                    snapshot)
+        _write_json(os.path.join(self.meta_dir, "current.json"),
+                    {"snapshot": snap_n})
         return snapshot
 
     # -- streaming append (exactly-once micro-batch sink) --------------------
@@ -344,74 +371,39 @@ class IcebergLiteTable:
         is what turns at-least-once replay into exactly-once table
         state). Otherwise any unmarked ``data-stream/batch=<id>`` dir is
         crash debris from a half-appended attempt and is deleted, the
-        batch stages into a private dir, ONE atomic directory rename
-        publishes all its files, and the batch marker (per-bucket rows /
-        cell ranges / additive crc checksum) lands last with an atomic
-        replace. The marker is the single mutation readers trust:
-        :meth:`read` shows only marked batches, so a half-appended batch
-        is invisible, and :meth:`stat_pruned_buckets` derives per-bucket
-        stats from bulk markers + batch markers (nothing is widened in
-        place, so a crash between rename and marker cannot double-count).
+        batch stages into a private dir without a shuffle, ONE atomic
+        directory rename publishes all its files, and the batch marker
+        (per-bucket rows / cell ranges / additive crc checksum) lands last
+        with an atomic replace. The marker is the single mutation readers
+        trust: :meth:`read` shows only marked batches, so a half-appended
+        batch is invisible, and :meth:`stat_pruned_buckets` derives
+        per-bucket stats from bulk markers + batch markers (nothing is
+        widened in place, so a crash between rename and marker cannot
+        double-count).
         """
-        import fcntl
-        import shutil
-        import uuid
-
-        os.makedirs(self.meta_dir, exist_ok=True)
-        with open(os.path.join(self.meta_dir, "write.lock"), "w") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                existing = self.committed_batches().get(int(batch_id))
-                if existing is not None:
-                    return existing
-                bdir = os.path.join(self.stream_dir, f"batch={int(batch_id)}")
-                if os.path.isdir(bdir):     # rename landed, marker did not
-                    shutil.rmtree(bdir)
-                stage = os.path.join(self.path,
-                                     f".stage-batch-{uuid.uuid4().hex}")
-                part = df.withColumn("bucket", self.bucket_expr())
-                (part.sortWithinPartitions("bucket", self.cell_col)
-                     .write.mode("overwrite").partitionBy("bucket")
-                     .parquet(stage))
-                spark = df.sparkSession
-                staged = [d for d in os.listdir(stage)
-                          if d.startswith("bucket=")]
-                stats = []
-                if staged:
-                    for r in (spark.read.parquet(stage).groupBy("bucket")
-                              .agg(F.count(F.lit(1)).alias("row_count"),
-                                   F.min(self.cell_col).alias("cell_min"),
-                                   F.max(self.cell_col).alias("cell_max"),
-                                   F.sum(F.crc32(F.col(self.cell_col)
-                                                 .cast("string")))
-                                   .alias("checksum"))
-                              .collect()):
-                        stats.append({
-                            "bucket": int(r["bucket"]),
-                            "row_count": int(r["row_count"]),
-                            "cell_min": int(r["cell_min"]),
-                            "cell_max": int(r["cell_max"]),
-                            "checksum": int(r["checksum"])})
+        self._check_columns(df)
+        batch_id = int(batch_id)
+        with self._locked():
+            existing = self.committed_batches().get(batch_id)
+            if existing is not None:
+                return existing
+            bdir = os.path.join(self.stream_dir, f"batch={batch_id}")
+            if os.path.isdir(bdir):     # rename landed, marker did not
+                shutil.rmtree(bdir)
+            with self._staged(df.withColumn("bucket", self.bucket_expr())) \
+                    as stage:
+                stats = self._bucket_stats(df.sparkSession, stage)
+                if stats:
                     os.makedirs(self.stream_dir, exist_ok=True)
                     os.rename(stage, bdir)  # one rename publishes the batch
-                else:
-                    shutil.rmtree(stage, ignore_errors=True)
-                marker = {"batch_id": int(batch_id),
-                          "row_count": sum(s["row_count"] for s in stats),
-                          "buckets": stats, "ts": time.time()}
-                os.makedirs(self.batches_dir, exist_ok=True)
-                final = os.path.join(self.batches_dir,
-                                     f"batch-{int(batch_id)}.json")
-                tmp = final + f".tmp-{os.getpid()}"
-                with open(tmp, "w") as f:
-                    f.write(json.dumps(marker))
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, final)
-                self.commit_snapshot()
-                return marker
-            finally:
-                fcntl.flock(lockf, fcntl.LOCK_UN)
+            marker = {"batch_id": batch_id,
+                      "row_count": sum(s["row_count"] for s in stats.values()),
+                      "buckets": [stats[b] for b in sorted(stats)],
+                      "ts": time.time()}
+            _write_json(os.path.join(self.batches_dir,
+                                     f"batch-{batch_id}.json"), marker)
+            self.commit_snapshot()
+            return marker
 
     def stream_write(self, stream_df: DataFrame, checkpoint: str,
                      trigger: dict | None = None):
@@ -448,105 +440,64 @@ class IcebergLiteTable:
         compaction racing a half-finished write would freeze a partial
         bucket set into the new generation. Serialized against writers by
         the same write lock."""
-        import fcntl
-        import shutil
-        import uuid
-
-        os.makedirs(self.meta_dir, exist_ok=True)
-        with open(os.path.join(self.meta_dir, "write.lock"), "w") as lockf:
-            fcntl.flock(lockf, fcntl.LOCK_EX)
-            try:
-                done = self.committed_buckets()
-                if done and sorted(done) != list(range(self.num_buckets)):
-                    raise RuntimeError(
-                        f"compact: table has {len(done)}/{self.num_buckets} "
-                        "committed buckets; finish (or resume) the write "
-                        "first")
-                cur = self._snapshot_meta()
-                src_rel = cur.get("data_rel", "data") if cur else "data"
-                src = os.path.join(self.path, src_rel)
-                # empty commit log + a non-empty generation dir is crash
-                # debris from a write that renamed buckets but never
-                # marked them (markers persist across compactions, so a
-                # legitimately-written table always has them). Freezing
-                # that debris into a new generation would serve
-                # uncommitted rows — and a later resumed write() lands
-                # in data/ while the snapshot pins this generation.
-                if not done and os.path.isdir(src) and os.listdir(src):
-                    raise RuntimeError(
-                        "compact: data generation dir has content but the "
-                        "commit log is empty — an uncommitted (crashed) "
-                        "write; resume the write before compacting")
-                df = None
-                if os.path.isdir(src):      # absent for stream-only tables
-                    df = spark.read.option("basePath", src).parquet(src)
-                # FOLD streaming batches: every batch visible at this
-                # moment joins the new generation; the snapshot's
-                # folded_through watermark stops them re-unioning on read
-                # (batch markers stay forever, so append idempotence is
-                # unaffected). Pre-fold snapshots still union their own
-                # batch lists against their own generation dirs.
-                folded = cur.get("folded_through", -1) if cur else -1
-                vis = [i for i in sorted(self.committed_batches())
-                       if i > folded]
-                if vis and os.path.isdir(self.stream_dir):
-                    sdf = (spark.read.option("basePath", self.stream_dir)
-                           .parquet(self.stream_dir)
-                           .filter(F.col("batch").isin(vis)).drop("batch"))
-                    df = sdf if df is None else df.unionByName(sdf)
-                if df is None:
-                    raise RuntimeError("compact: table has no data")
-                new_folded = max(vis) if vis else folded
-                stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
-                # sort by (bucket, cell): the dynamic-partition writer
-                # requires a bucket ordering and would otherwise re-sort
-                # by bucket alone, destroying the cell clustering
-                (df.repartition(self.num_buckets, F.col("bucket"))
-                   .sortWithinPartitions("bucket", self.cell_col)
-                   .write.mode("overwrite").partitionBy("bucket")
-                   .parquet(stage))
-                snap_n = (cur["snapshot"] + 1) if cur else 0
-                new_rel = f"data-g{snap_n}"
-                dst = os.path.join(self.path, new_rel)
+        with self._locked():
+            done = self.committed_buckets()
+            if done and sorted(done) != list(range(self.num_buckets)):
+                raise RuntimeError(
+                    f"compact: table has {len(done)}/{self.num_buckets} "
+                    "committed buckets; finish (or resume) the write first")
+            cur = self._snapshot_meta()
+            src_rel = cur.get("data_rel", "data") if cur else "data"
+            src = os.path.join(self.path, src_rel)
+            # empty commit log + a non-empty generation dir is crash
+            # debris from a write that renamed buckets but never marked
+            # them (markers persist across compactions, so a
+            # legitimately-written table always has them). Freezing that
+            # debris into a new generation would serve uncommitted rows —
+            # and a later resumed write() lands in data/ while the
+            # snapshot pins this generation.
+            if not done and os.path.isdir(src) and os.listdir(src):
+                raise RuntimeError(
+                    "compact: data generation dir has content but the "
+                    "commit log is empty — an uncommitted (crashed) write; "
+                    "resume the write before compacting")
+            df = None
+            if os.path.isdir(src):      # absent for stream-only tables
+                df = spark.read.option("basePath", src).parquet(src)
+            # FOLD streaming batches: every batch visible at this moment
+            # joins the new generation; the snapshot's folded_through
+            # watermark stops them re-unioning on read (batch markers stay
+            # forever, so append idempotence is unaffected). Pre-fold
+            # snapshots still union their own batch lists against their
+            # own generation dirs.
+            folded = cur.get("folded_through", -1) if cur else -1
+            vis = [i for i in sorted(self.committed_batches()) if i > folded]
+            if vis and os.path.isdir(self.stream_dir):
+                sdf = (spark.read.option("basePath", self.stream_dir)
+                       .parquet(self.stream_dir)
+                       .filter(F.col("batch").isin(vis)).drop("batch"))
+                df = sdf if df is None else df.unionByName(sdf)
+            if df is None:
+                raise RuntimeError("compact: table has no data")
+            snap_n = (cur["snapshot"] + 1) if cur else 0
+            new_rel = f"data-g{snap_n}"
+            dst = os.path.join(self.path, new_rel)
+            with self._staged(df.repartition(self.num_buckets,
+                                             F.col("bucket"))) as stage:
+                stats = self._bucket_stats(spark, stage) if vis else None
                 if os.path.isdir(dst):      # crashed previous compaction
                     shutil.rmtree(dst)
                 os.rename(stage, dst)       # atomic claim, like write()
-                if vis:
-                    # folded rows change bucket CONTENT: recompute the
-                    # bucket lineage from the new generation. A crash
-                    # here leaves markers wider than the still-current
-                    # old snapshot — pruning stays sound (wider = keep
-                    # more) and the re-run recomputes identical content.
-                    stats = (spark.read.option("basePath", dst).parquet(dst)
-                             .groupBy("bucket")
-                             .agg(F.count(F.lit(1)).alias("row_count"),
-                                  F.min(self.cell_col).alias("cell_min"),
-                                  F.max(self.cell_col).alias("cell_max"),
-                                  F.sum(F.crc32(F.col(self.cell_col)
-                                                .cast("string")))
-                                  .alias("checksum"))
-                             .collect())
-                    seen = set()
-                    for r in stats:
-                        seen.add(int(r["bucket"]))
-                        self._commit_bucket({
-                            "bucket": int(r["bucket"]),
-                            "row_count": int(r["row_count"]),
-                            "cell_min": int(r["cell_min"]),
-                            "cell_max": int(r["cell_max"]),
-                            "checksum": int(r["checksum"]),
-                            "status": "committed", "ts": time.time()})
-                    for b in range(self.num_buckets):
-                        if b not in seen:
-                            self._commit_bucket({
-                                "bucket": b, "row_count": 0,
-                                "cell_min": None, "cell_max": None,
-                                "checksum": 0, "status": "committed",
-                                "ts": time.time()})
-                return self.commit_snapshot(data_rel=new_rel,
-                                            folded_through=new_folded)
-            finally:
-                fcntl.flock(lockf, fcntl.LOCK_UN)
+            if vis:
+                # folded rows change bucket CONTENT: recompute the bucket
+                # lineage from the new generation. A crash here leaves
+                # markers wider than the still-current old snapshot —
+                # pruning stays sound (wider = keep more) and the re-run
+                # recomputes identical content.
+                for b in range(self.num_buckets):
+                    self._commit_bucket(self._marker(b, stats))
+            return self.commit_snapshot(data_rel=new_rel,
+                                        folded_through=max(vis, default=folded))
 
     # -- read ----------------------------------------------------------------
     def read(self, spark: SparkSession, ranges: list[list[int]] | None = None,

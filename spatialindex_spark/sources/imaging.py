@@ -43,11 +43,6 @@ def _blockify(img: np.ndarray) -> np.ndarray:
     return img.reshape(H // 8, 8, W // 8, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8), H, W
 
 
-def _unblockify(blocks: np.ndarray, H: int, W: int, h: int, w: int) -> np.ndarray:
-    img = blocks.reshape(H // 8, W // 8, 8, 8).transpose(0, 2, 1, 3).reshape(H, W)
-    return img[:h, :w]
-
-
 def encode(img: np.ndarray, fmt: str) -> bytes:
     """uint8 (h, w, 3) -> payload bytes."""
     if img.dtype != np.uint8 or img.ndim != 3 or img.shape[2] != 3:
@@ -70,92 +65,68 @@ def encode(img: np.ndarray, fmt: str) -> bytes:
 
 
 def decode(data: bytes, w: int, h: int, fmt: str) -> np.ndarray:
-    """payload bytes -> uint8 (h, w, 3)."""
-    if fmt == "raw":
-        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3).copy()
-    if fmt == "z":
-        return np.frombuffer(zlib.decompress(data), dtype=np.uint8).reshape(h, w, 3).copy()
-    if fmt == "dct":
-        H, W = h + ((-h) % 8), w + ((-w) % 8)
-        nb = (H // 8) * (W // 8)
-        q = np.frombuffer(zlib.decompress(data), dtype="<i2").astype(np.float64)
-        q = q.reshape(3, nb, 8, 8)
-        out = np.empty((h, w, 3), dtype=np.uint8)
-        for c in range(3):
-            f = q[c] * _Q
-            blocks = _D8.T @ f @ _D8
-            img = _unblockify(blocks, H, W, h, w) + 128.0
-            out[:, :, c] = np.clip(np.rint(img), 0, 255).astype(np.uint8)
-        return out
-    raise ValueError(f"unknown fmt {fmt!r}")
+    """payload bytes -> writable uint8 (h, w, 3): the one full-image window
+    of :func:`decode_windows`."""
+    return decode_windows(data, w, h, fmt, [(0, w, 0, h)], channel=None)[0].copy()
 
 
 def decode_windows(data: bytes, w: int, h: int, fmt: str,
                    windows, channel: int | None = 0) -> list:
     """Decode SEVERAL windows of one payload with the per-payload work
-    (zlib decompress, dct dequantization) done ONCE. Each returned array
-    is exactly ``decode(data, w, h, fmt)[y0:y1, x0:x1, channel]`` (or
-    ``[y0:y1, x0:x1]`` for ``channel=None``), without decoding pixels
+    (zlib decompress) done ONCE. Each returned array is the crop
+    ``[y0:y1, x0:x1, channel]`` (or ``[y0:y1, x0:x1]`` for
+    ``channel=None``) of the decoded image, without decoding pixels
     outside the windows: for "dct" ONLY the 8x8 blocks intersecting a
-    window run the IDCT, and block decodes are independent and
-    element-wise identical to the full decode (same per-block matmul,
-    +128, rint, clip), so the pixels are bit-identical. This is the batch
-    entry the pixel operators use after grouping their (target, image)
-    windows per image: a survey target list averages several windows per
-    matched image, and per-window full decompression was the readback
-    stage's dominant Python cost (guide §4.2 / §1.2 per-task work).
+    window are dequantized and run the IDCT, and block decodes are
+    independent (same per-block matmul, +128, rint, clip), so any window
+    is bit-identical to the same crop of a full-image decode. This is the
+    batch entry the pixel operators use after grouping their (target,
+    image) windows per image: a survey target list averages several
+    windows per matched image, and per-window full decompression was the
+    readback stage's dominant Python cost (guide §4.2 / §1.2 per-task
+    work). :func:`decode` is its one full-image window.
 
     ``windows``: iterable of (x0, x1, y0, y1), pre-clipped to the image
     like cutout_windows guarantees. Empty windows yield empty arrays.
+    Raw and z windows are read-only views of the payload buffer.
     """
-    ch = slice(None) if channel is None else channel
-    out: list = []
     if fmt in ("raw", "z"):
         buf = data if fmt == "raw" else zlib.decompress(data)
         img = np.frombuffer(buf, dtype=np.uint8).reshape(h, w, 3)
-        for x0, x1, y0, y1 in windows:
-            if x0 >= x1 or y0 >= y1:
-                shape = (max(y1 - y0, 0), max(x1 - x0, 0))
-                out.append(np.empty(
-                    shape + (3,) if channel is None else shape,
-                    dtype=np.uint8))
-            else:
-                out.append(img[y0:y1, x0:x1, ch])
-        return out
-    if fmt == "dct":
-        H, W = h + ((-h) % 8), w + ((-w) % 8)
-        nb = (H // 8) * (W // 8)
-        wb = W // 8
-        q = np.frombuffer(zlib.decompress(data), dtype="<i2")
-        q = q.astype(np.float64).reshape(3, nb, 8, 8)
+        ch = slice(None) if channel is None else channel
+
+        def crop(x0, x1, y0, y1):
+            return img[y0:y1, x0:x1, ch]
+    elif fmt == "dct":
+        # (channel, block row, block col, 8, 8) int16 coefficients; a
+        # window's blocks are one basic slice of it
+        q = np.frombuffer(zlib.decompress(data), dtype="<i2").reshape(
+            3, (h + 7) // 8, (w + 7) // 8, 8, 8)
         chans = range(3) if channel is None else (channel,)
-        for x0, x1, y0, y1 in windows:
-            if x0 >= x1 or y0 >= y1:
-                shape = (max(y1 - y0, 0), max(x1 - x0, 0))
-                out.append(np.empty(
-                    shape + (3,) if channel is None else shape,
-                    dtype=np.uint8))
-                continue
-            by0, by1 = y0 // 8, (y1 - 1) // 8
-            bx0, bx1 = x0 // 8, (x1 - 1) // 8
-            sel = [by * wb + bx
-                   for by in range(by0, by1 + 1)
-                   for bx in range(bx0, bx1 + 1)]
-            nby, nbx = by1 - by0 + 1, bx1 - bx0 + 1
-            ys, xs = y0 - 8 * by0, x0 - 8 * bx0
+
+        def crop(x0, x1, y0, y1):
+            by0, by1, bx0, bx1 = y0 // 8, (y1 + 7) // 8, x0 // 8, (x1 + 7) // 8
             planes = []
             for c in chans:
-                f = q[c, sel] * _Q
-                blocks = _D8.T @ f @ _D8
-                rect = (blocks.reshape(nby, nbx, 8, 8)
-                        .transpose(0, 2, 1, 3)
-                        .reshape(nby * 8, nbx * 8)) + 128.0
+                blocks = _D8.T @ (q[c, by0:by1, bx0:bx1] * _Q) @ _D8
+                rect = (blocks.transpose(0, 2, 1, 3)
+                        .reshape(8 * (by1 - by0), 8 * (bx1 - bx0))) + 128.0
                 o = np.clip(np.rint(rect), 0, 255).astype(np.uint8)
-                planes.append(o[ys:y1 - 8 * by0, xs:x1 - 8 * bx0])
-            out.append(planes[0] if channel is not None
-                       else np.stack(planes, axis=-1))
-        return out
-    raise ValueError(f"unknown fmt {fmt!r}")
+                planes.append(o[y0 - 8 * by0:y1 - 8 * by0,
+                                x0 - 8 * bx0:x1 - 8 * bx0])
+            return planes[0] if channel is not None \
+                else np.stack(planes, axis=-1)
+    else:
+        raise ValueError(f"unknown fmt {fmt!r}")
+    out: list = []
+    for x0, x1, y0, y1 in windows:
+        if x0 >= x1 or y0 >= y1:
+            shape = (max(y1 - y0, 0), max(x1 - x0, 0))
+            out.append(np.empty(shape + (3,) if channel is None else shape,
+                                dtype=np.uint8))
+        else:
+            out.append(crop(x0, x1, y0, y1))
+    return out
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

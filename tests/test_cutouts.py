@@ -711,16 +711,37 @@ def test_cutout_empty_targets_skip_readback_scan(spark, tmp_path):
     assert out.collect() == []
 
 
+def _reference_decode(data, w, h, fmt):
+    """Full-image decode, written independently of decode_windows: the
+    whole payload dequantized and inverse-transformed at once, blocks
+    reassembled in raster order and cropped to (h, w)."""
+    import zlib
+
+    if fmt == "raw":
+        return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
+    if fmt == "z":
+        return np.frombuffer(zlib.decompress(data),
+                             dtype=np.uint8).reshape(h, w, 3)
+    H, W = h + ((-h) % 8), w + ((-w) % 8)
+    q = np.frombuffer(zlib.decompress(data), dtype="<i2").astype(np.float64)
+    q = q.reshape(3, (H // 8) * (W // 8), 8, 8)
+    d8 = imaging._D8
+    out = np.empty((h, w, 3), dtype=np.uint8)
+    for c in range(3):
+        blocks = d8.T @ (q[c] * imaging._Q) @ d8
+        img = blocks.reshape(H // 8, W // 8, 8, 8).transpose(0, 2, 1, 3) \
+            .reshape(H, W)[:h, :w] + 128.0
+        out[:, :, c] = np.clip(np.rint(img), 0, 255).astype(np.uint8)
+    return out
+
+
 def test_decode_windows_matches_full_decode_crops():
-    """decode_windows must be bit-identical to crops of the full decode
-    for every codec, single- and all-channel, including empty windows."""
-    import numpy as np
-
-    from spatialindex_spark.sources import imaging
-
+    """decode_windows must be bit-identical to crops of an independent
+    full-image decode for every codec, single- and all-channel, including
+    empty windows; decode (its full-image window) returns a writable copy."""
     rng = np.random.default_rng(77)
     for fmt in ("raw", "z", "dct"):
-        for w, h in ((16, 16), (32, 24), (64, 64)):
+        for w, h in ((16, 16), (32, 24), (64, 64), (37, 21)):
             img = imaging.synth_image(int(rng.integers(0, 1000)), w, h)
             data = imaging.encode(img, fmt)
             wins = []
@@ -731,7 +752,9 @@ def test_decode_windows_matches_full_decode_crops():
                 y1 = int(rng.integers(y0 + 1, h + 1))
                 wins.append((x0, x1, y0, y1))
             wins.append((3, 3, 0, 5))  # empty window
-            full = imaging.decode(data, w, h, fmt)
+            full = _reference_decode(data, w, h, fmt)
+            dec = imaging.decode(data, w, h, fmt)
+            assert np.array_equal(dec, full) and dec.flags.writeable
             for ch in (0, 2, None):
                 batch = imaging.decode_windows(data, w, h, fmt, wins, ch)
                 for (x0, x1, y0, y1), got in zip(wins, batch):

@@ -329,16 +329,41 @@ def test_ann_lsh_recall(spark):
     assert hits >= 8  # >= 53% recall across 15 slots
 
 
-def test_iceberg_resume(spark, tmp_path):
+def _crash_after_markers(monkeypatch, n):
+    """Make the (n+1)-th bucket marker raise, as a driver crash in the
+    claim loop would: that bucket, when it has rows, is already renamed
+    into data/ but stays unmarked. ``monkeypatch.undo()`` restores the
+    real marker write."""
+    from spatialindex_spark.sources.iceberg_lite import IcebergLiteTable
+
+    real, marked = IcebergLiteTable._commit_bucket, []
+
+    def crashing(self, row):
+        if len(marked) >= n:
+            raise RuntimeError("simulated crash in the claim loop")
+        marked.append(row["bucket"])
+        real(self, row)
+
+    monkeypatch.setattr(IcebergLiteTable, "_commit_bucket", crashing)
+
+
+def test_iceberg_resume(spark, tmp_path, monkeypatch):
+    import os
+
     from spatialindex_spark.sources.iceberg_lite import IcebergLiteTable
     from spatialindex_spark.sources.images import synth_images_indexed
 
     df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
     t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
+    _crash_after_markers(monkeypatch, 3)
     with pytest.raises(RuntimeError):
-        t.write(df, group_size=2, fail_after_groups=1)
+        t.write(df)
+    monkeypatch.undo()
     assert 0 < len(t.committed_buckets()) < 8
-    snap = t.write(df, group_size=2)
+    # the crash left a claimed-but-unmarked bucket for the resume to redo
+    claimed = {int(d.split("=")[1]) for d in os.listdir(t.data_dir)}
+    assert claimed - set(t.committed_buckets())
+    snap = t.write(df)
     assert snap["total_rows"] == 600
     assert len(snap["buckets"]) == 8
     # resumed table content equals a one-shot write
@@ -556,9 +581,12 @@ def test_iceberg_compaction_snapshot(spark, tmp_path):
 
     df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
     t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
-    # group_size=3 stages 3 range-partitions per group: bucket boundaries
-    # need not align, so buckets end up with multiple files
-    snap0 = t.write(df, group_size=3)
+    # a bulk write leaves one file per bucket; an appended micro-batch adds
+    # more files to the same buckets
+    t.write(df.filter(F.substring("image_id", 4, 15).cast("long") < 450))
+    t.append_batch(df.filter(F.substring("image_id", 4, 15).cast("long")
+                             >= 450), 0)
+    snap0 = t._snapshot_meta()
     before = {r["image_id"]: r["spt_ind"] for r in t.read(spark).collect()}
     files_before = {f for f in t.read(spark).inputFiles()}
     assert len(before) == 600
@@ -568,7 +596,11 @@ def test_iceberg_compaction_snapshot(spark, tmp_path):
     assert snap1["total_rows"] == snap0["total_rows"]
     after = {r["image_id"]: r["spt_ind"] for r in t.read(spark).collect()}
     assert after == before
-    files_after = {f for f in t.read(spark).inputFiles()}
+    assert t.read(spark).count() == 600     # the folded batch reads once
+    # the batch's own files stay on disk for time travel; inputFiles lists
+    # them although the read's partition filter skips them
+    files_after = {f for f in t.read(spark).inputFiles()
+                   if "data-stream" not in f}
     assert len(files_after) <= len(files_before)
     assert all(f"data-g{snap1['snapshot']}" in f for f in files_after)
     # one file per non-empty bucket
@@ -596,7 +628,7 @@ def test_iceberg_compaction_snapshot(spark, tmp_path):
     assert {r["image_id"] for r in sub.collect()} == want
 
 
-def test_iceberg_concurrent_resume_race(spark, tmp_path):
+def test_iceberg_concurrent_resume_race(spark, tmp_path, monkeypatch):
     """Two resumers racing the same crashed write must recover without
     duplicate rows, missing rows, or torn metadata (r2 verdict item: the
     commit protocol is stage -> claim-by-rename -> atomic marker, so
@@ -610,8 +642,10 @@ def test_iceberg_concurrent_resume_race(spark, tmp_path):
 
     df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
     t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
+    _crash_after_markers(monkeypatch, 2)
     with pytest.raises(RuntimeError):
-        t.write(df, group_size=2, fail_after_groups=1)
+        t.write(df)
+    monkeypatch.undo()
     n_before = len(t.committed_buckets())
     assert 0 < n_before < 8
 
@@ -620,8 +654,7 @@ def test_iceberg_concurrent_resume_race(spark, tmp_path):
     def resume():
         try:
             # separate handle: no shared python state between racers
-            IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8) \
-                .write(df, group_size=2)
+            IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8).write(df)
         except Exception as ex:  # pragma: no cover - diagnostic
             errs.append(ex)
 
@@ -694,7 +727,8 @@ def test_cell_equijoin(spark, small_images):
     assert n_self == small_images.count()
 
 
-def test_resumable_tile_assignment(spark, small_images, tmp_path):
+def test_resumable_tile_assignment(spark, small_images, tmp_path,
+                                   monkeypatch):
     """North rule: tile assignment resumes from checkpoint after a crash and
     the resumed output equals a one-shot run (no duplicates, no gaps)."""
     from spatialindex_spark.operators.tiles import resumable_tile_assignment
@@ -704,20 +738,21 @@ def test_resumable_tile_assignment(spark, small_images, tmp_path):
              {"tile_id": 2, "center_ra": 34.0, "center_dec": 45.0,
               "width_deg": 6.0, "height_deg": 6.0}]
     p1 = str(tmp_path / "resumed")
+    _crash_after_markers(monkeypatch, 4)
     with pytest.raises(RuntimeError):
-        resumable_tile_assignment(small_images, tiles, p1, group_size=4,
-                                  fail_after_groups=1)
-    snap1 = resumable_tile_assignment(small_images, tiles, p1, group_size=4)
+        resumable_tile_assignment(small_images, tiles, p1)
+    monkeypatch.undo()
+    snap1 = resumable_tile_assignment(small_images, tiles, p1)
 
     p2 = str(tmp_path / "oneshot")
-    snap2 = resumable_tile_assignment(small_images, tiles, p2, group_size=4)
+    snap2 = resumable_tile_assignment(small_images, tiles, p2)
     assert snap1["total_rows"] == snap2["total_rows"] > 0
 
     a = spark.read.parquet(p1 + "/data").select("tile_id", "image_id").toPandas()
     b = spark.read.parquet(p2 + "/data").select("tile_id", "image_id").toPandas()
     assert sorted(map(tuple, a.values.tolist())) == sorted(map(tuple, b.values.tolist()))
     # re-running a completed job is a no-op (all buckets committed)
-    snap3 = resumable_tile_assignment(small_images, tiles, p1, group_size=4)
+    snap3 = resumable_tile_assignment(small_images, tiles, p1)
     assert snap3["total_rows"] == snap1["total_rows"]
 
 
@@ -814,7 +849,7 @@ def test_region_count_fast_matches_exact(spark):
         assert fast == brute, (ra, dec, r, fast, brute)
 
 
-def test_iceberg_snapshot_time_travel(spark, tmp_path):
+def test_iceberg_snapshot_time_travel(spark, tmp_path, monkeypatch):
     """Snapshot N = the buckets its manifest recorded; reading an older
     snapshot excludes later-committed buckets."""
     from spatialindex_spark.sources.iceberg_lite import IcebergLiteTable
@@ -822,10 +857,12 @@ def test_iceberg_snapshot_time_travel(spark, tmp_path):
 
     df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
     t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
+    _crash_after_markers(monkeypatch, 4)
     with pytest.raises(RuntimeError):
-        t.write(df, group_size=2, fail_after_groups=2)
+        t.write(df)
+    monkeypatch.undo()
     snap0 = t.commit_snapshot()
-    t.write(df, group_size=2)  # resume to completion -> snapshot 1
+    t.write(df)  # resume to completion -> snapshot 1
     full = t.read(spark).count()
     old = t.read(spark, snapshot=snap0["snapshot"]).count()
     assert full == 600
@@ -1748,7 +1785,7 @@ def test_iceberg_stat_pruned_buckets(spark, tmp_path):
 
     df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
     t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
-    t.write(df, group_size=4)
+    t.write(df)
     done = t.committed_buckets()
     # craft ranges inside one bucket's nominal span but OUTSIDE its actual
     # data: the gap just above a bucket's cell_max, within its hash span
@@ -2205,3 +2242,91 @@ def test_iceberg_guards_overflow_and_crash_debris(spark, tmp_path):
         f.write(b"not really parquet")
     with pytest.raises(RuntimeError, match="commit log is empty"):
         t.compact(spark)
+
+
+@pytest.mark.parametrize("entry", ["write", "append_batch"])
+@pytest.mark.parametrize("col", ["bucket", "batch"])
+def test_iceberg_refuses_reserved_columns(spark, tmp_path, entry, col):
+    """``bucket`` and ``batch`` are the layout's partition columns: a user
+    column of either name is refused before anything is written (a user
+    ``bucket`` was silently overwritten by the bucket ids, a ``batch``
+    broke every later read)."""
+    import os
+
+    from spatialindex_spark.sources.iceberg_lite import IcebergLiteTable
+    from spatialindex_spark.sources.images import synth_images_indexed
+
+    df = synth_images_indexed(spark, 50, level=7, systems=("htm",)) \
+        .withColumn(col, F.lit(7))
+    t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=4)
+    call = t.write if entry == "write" else (lambda d: t.append_batch(d, 0))
+    with pytest.raises(ValueError, match=col):
+        call(df)
+    assert not os.path.exists(t.path)
+
+
+def test_iceberg_one_pass_write_markers_match_files(spark, tmp_path):
+    """The bulk write stages every bucket in one pass: one parquet file per
+    non-empty bucket. Every lineage marker — from write, append_batch and a
+    folding compact — equals a recount of its own files (row count, cell
+    range, crc32 checksum of the cell ids as strings), and re-running a
+    finished write starts no Spark job."""
+    import os
+    import zlib
+
+    import pyarrow.parquet as pq
+
+    from spatialindex_spark.sources.iceberg_lite import IcebergLiteTable
+    from spatialindex_spark.sources.images import synth_images_indexed
+
+    def recount(bucket_dir):
+        cells = [int(v) for f in sorted(os.listdir(bucket_dir))
+                 if f.endswith(".parquet")
+                 for v in pq.read_table(os.path.join(bucket_dir, f),
+                                        columns=["spt_ind"])["spt_ind"]
+                 .to_pylist()]
+        return (len(cells), min(cells), max(cells),
+                sum(zlib.crc32(str(c).encode()) for c in cells))
+
+    def stat(m):
+        return m["row_count"], m["cell_min"], m["cell_max"], m["checksum"]
+
+    def check_markers(gen_dir, markers):
+        for b, m in markers.items():
+            d = os.path.join(gen_dir, f"bucket={b}")
+            if m["row_count"]:
+                assert recount(d) == stat(m), b
+            else:
+                assert not os.path.exists(d), b
+
+    idn = F.substring("image_id", 4, 15).cast("long")
+    df = synth_images_indexed(spark, 600, level=7, systems=("htm",))
+    t = IcebergLiteTable(str(tmp_path / "tab"), num_buckets=8)
+    t.write(df.filter(idn < 500))
+    done = t.committed_buckets()
+    assert sorted(done) == list(range(8))
+    for b, m in done.items():
+        d = os.path.join(t.data_dir, f"bucket={b}")
+        if m["row_count"]:
+            assert len([f for f in os.listdir(d)
+                        if f.endswith(".parquet")]) == 1, b
+    check_markers(t.data_dir, done)
+
+    marker = t.append_batch(df.filter(idn >= 500), 0)
+    assert marker["row_count"] == 100
+    bdir = os.path.join(t.stream_dir, "batch=0")
+    check_markers(bdir, {s["bucket"]: s for s in marker["buckets"]})
+
+    snap = t.compact(spark)
+    assert snap["total_rows"] == 600
+    check_markers(os.path.join(t.path, snap["data_rel"]),
+                  t.committed_buckets())
+
+    sc = spark.sparkContext
+    sc.setJobGroup("iceberg-rerun", "re-run a finished write")
+    try:
+        again = IcebergLiteTable(t.path, num_buckets=8).write(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again["buckets"] == list(range(8))
+    assert list(sc.statusTracker().getJobIdsForGroup("iceberg-rerun")) == []
