@@ -27,7 +27,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
-from .joins import crossmatch
+from .joins import _dot_sql, crossmatch
 
 
 def _bin_expr(dot, cos_edges):
@@ -61,10 +61,7 @@ def pair_counts(left: DataFrame, right: DataFrame, edges_deg,
     sl, sr = suffixes
     lr, ld = lcols
     rr_, rd = rcols
-    rad = F.radians
-    dot = (F.cos(rad(F.col(ld + sl))) * F.cos(rad(F.col(rd + sr)))
-           * F.cos(rad(F.col(lr + sl)) - rad(F.col(rr_ + sr)))
-           + F.sin(rad(F.col(ld + sl))) * F.sin(rad(F.col(rd + sr))))
+    dot = F.expr(_dot_sql(lr + sl, ld + sl, rr_ + sr, rd + sr))
     if exclude_self:
         cm = cm.filter(F.col(left_id + sl) != F.col(right_id + sr))
     binned = cm.select(_bin_expr(dot, cos_edges).alias("bin"))
@@ -184,10 +181,7 @@ def pair_counts_by_region(left: DataFrame, right: DataFrame, edges_deg,
     sl, sr = suffixes
     lr, ld = lcols
     rr_, rd = rcols
-    rad = F.radians
-    dot = (F.cos(rad(F.col(ld + sl))) * F.cos(rad(F.col(rd + sr)))
-           * F.cos(rad(F.col(lr + sl)) - rad(F.col(rr_ + sr)))
-           + F.sin(rad(F.col(ld + sl))) * F.sin(rad(F.col(rd + sr))))
+    dot = F.expr(_dot_sql(lr + sl, ld + sl, rr_ + sr, rd + sr))
     if exclude_self:
         cm = cm.filter(F.col(left_id + sl) != F.col(right_id + sr))
     binned = cm.select(

@@ -42,13 +42,14 @@ Scale shape (100 TB)
   the ingest-time cell column; the window math is JVM trig (SQL
   expressions) on the matched pairs.  Nothing about the image table's size appears on
   the driver.
-- ``cutout_pixels``: only MATCHED image rows are re-read — the per-image
-  window lists are read once (bounded, with a guard: a cutout request is
-  a human-sized target list), their ids become an IN-set pushed into the
-  scan so parquet row-group stats skip unmatched stripes, and bytes
-  decode in Arrow batches via mapInPandas with the windows in the
-  closure.  Above IN_SET_MAX images the read-back is a broadcast
-  left-semi join instead.
+- ``pixel_readback`` (behind ``cutout_pixels`` and the photometry
+  operators of operators/detect.py): only MATCHED image rows are re-read
+  — the per-image window lists are read once (bounded, with a guard: a
+  cutout request is a human-sized target list), their ids become an
+  IN-set pushed into the scan so parquet row-group stats skip unmatched
+  stripes, and bytes decode in Arrow batches via mapInPandas with the
+  windows in the closure, each payload once for all its windows.  Above
+  IN_SET_MAX images the read-back is a broadcast left-semi join instead.
 - ``coadd_mosaic``: images shuffle ONCE keyed by output tile cell
   (ring-1 duplication is pruned by a center-distance bound before the
   exchange, so the dup factor stays ~1 except at tile corners); the
@@ -69,8 +70,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.geometry import RAD_PER_DEG
 from ..functions.healpix import disc, max_pix_rad, pix2vec
 from ..functions.cover import in_predicate
-from .joins import (hpx_cell_key, match_level_rings, radec_disc_udf,
-                    ring_explode)
+from .joins import (_dot_sql, hpx_cell_key, match_level_rings,
+                    radec_disc_udf, ring_explode)
 
 _log = logging.getLogger(__name__)
 
@@ -148,7 +149,8 @@ def pair_windows(pairs: DataFrame, scale_deg_px: float, size_px: int,
 
 def pairing_radius_deg(scale_deg_px: float, max_dim_px: float) -> float:
     """Center-to-corner pairing radius shared by :func:`cutout_windows`
-    (the pairing join) and :func:`readback_images` (the scan pushdown).
+    (the pairing join) and the photometry read-back's
+    :func:`target_cell_ranges` scan pushdown (operators/detect.py).
     ONE definition on purpose: the pushdown is sound only while its
     radius >= the pairing's — diverging copies would silently drop
     matched rows from the bytes scan.  The +1 px margin absorbs the
@@ -308,42 +310,11 @@ def target_cell_ranges(targets: DataFrame, radius_deg: float,
     return preds[0]
 
 
-def matched_image_filter(images_sel: DataFrame, ids_src: DataFrame,
-                         image_id: str, max_images: int,
-                         what: str) -> DataFrame:
-    """Restrict ``images_sel`` to the distinct ``image_id`` values in
-    ``ids_src`` — the shared read-back pruning step of every pixel
-    operator (cutouts, forced photometry, moments, annulus photometry).
-
-    Two physical strategies, picked by one bounded driver read:
-
-    - <= IN_SET_MAX matched ids: a literal IN-set (:func:`_in_set_filter`).
-      It is pushed into the parquet scan, so row-group statistics prune
-      unmatched stripes — at 100 TB the image table is READ only where
-      it matched.
-    - above: a broadcast LEFT-SEMI join (:func:`_semi_join_filter`).
-    """
-    wid = ids_src.select(image_id).distinct()
-    head = wid.limit(IN_SET_MAX + 1).collect()
-    if len(head) <= IN_SET_MAX:
-        return _in_set_filter(images_sel, [r[0] for r in head], image_id,
-                              max_images, what)
-    return _semi_join_filter(images_sel, wid, image_id, max_images, what)
-
-
 def _check_max_images(n: int, max_images: int, what: str) -> None:
     if n > max_images:
         raise ValueError(
             f"{what} matched > {max_images} distinct images; "
             "raise max_images or partition the target list")
-
-
-def _in_set_filter(images_sel: DataFrame, ids: list, image_id: str,
-                   max_images: int, what: str) -> DataFrame:
-    """``images_sel`` where ``image_id`` is in the driver-side ``ids``
-    (at most IN_SET_MAX of them), as ONE SQL IN expression."""
-    _check_max_images(len(ids), max_images, what)
-    return images_sel.filter(in_predicate(image_id, ids))
 
 
 def _semi_join_filter(images_sel: DataFrame, wid: DataFrame, image_id: str,
@@ -365,67 +336,49 @@ def _semi_join_filter(images_sel: DataFrame, wid: DataFrame, image_id: str,
     return images_sel.join(F.broadcast(wid), image_id, "left_semi")
 
 
-def readback_images(images: DataFrame, targets: DataFrame,
-                    scale_deg_px: float, window_kwargs: dict,
-                    image_id: str, bytes_col: str, wsel: DataFrame,
-                    max_images: int, what: str) -> DataFrame:
-    """Shared pixel-read-back selection of the target-driven pixel
-    operators (forced photometry / moments / annulus photometry): the
-    target-cell range pushdown of :func:`target_cell_ranges` (when the
-    ingest cell column and max_dim_px are declared — the same inputs
-    the pairing join used) stacked under :func:`matched_image_filter`'s
-    exact-id filter. Above IN_SET_MAX matched ids the id filter is a
-    semi-join that cannot prune the scan by itself; the range pushdown
-    keeps the bytes column READ only in matched neighborhoods at any
-    match count (measured at 1M images / 22k matched: the unpruned
-    semi-join scan read every bytes row)."""
-    cell_col = window_kwargs.get("cell_col")
-    cell_level = window_kwargs.get("cell_level")
-    mdp = window_kwargs.get("max_dim_px")
-    sel = images
-    if (cell_col and cell_level is not None and mdp is not None
-            and cell_col in images.columns):
-        radius = pairing_radius_deg(scale_deg_px, mdp)
-        pred = target_cell_ranges(targets, radius, cell_col, cell_level)
-        if pred is not None:
-            sel = sel.filter(pred)
-    return matched_image_filter(
-        sel.select(image_id, bytes_col, "w", "h", "fmt"),
-        wsel, image_id, max_images, what)
+def pixel_readback(images: DataFrame, windows: DataFrame,
+                   channel: int | None, measure, measured: str,
+                   image_id: str, bytes_col: str, max_images: int,
+                   what: str) -> DataFrame:
+    """The one pixel read-back of the target-driven image operators
+    (cutouts, forced, moment and annulus photometry): every window of
+    ``windows`` measured on its decoded pixels.
 
+    ``windows`` carries image_id and the clipped window x0/x1/y0/y1 plus
+    any payload columns; ``images`` must carry (image_id, bytes, w, h,
+    fmt).  ``measure(win, cut)`` gets one window as a dict of its columns
+    and its crop ``[y0:y1, x0:x1, channel]`` (all channels for
+    ``channel=None``) and returns the values of the ``measured`` DDL
+    fields, in order.  Output: the window columns, then those fields.
 
-def cutout_pixels(images: DataFrame, windows: DataFrame,
-                  image_id: str = "image_id",
-                  bytes_col: str = "bytes",
-                  max_images: int = 1_000_000) -> DataFrame:
-    """Extract the pixel windows computed by :func:`cutout_windows`.
-
-    ``images`` must carry (image_id, bytes, w, h, fmt).  The windows are
-    grouped per image and read ONCE by a bounded driver read
-    (IN_SET_MAX + 1 images).  Up to IN_SET_MAX images, the read gives the
-    IN-set pushed into the scan (row-group stats skip unmatched stripes)
-    and the decode carries the window lists in its closure: the request
-    is that read plus one scan-and-decode pass.  Above it, the windows
-    are checkpointed and the read-back is matched_image_filter's
-    broadcast left-semi join plus a broadcast join of the window lists.
-    ``max_images`` guards both.  Decoding runs in Arrow batches
-    (mapInPandas); output pixels are re-encoded as raw uint8.
-
-    Output: window columns + cut_w, cut_h, data (raw bytes), mean_val.
+    The windows are grouped per image and read ONCE by a bounded driver
+    read (IN_SET_MAX + 1 images).  Up to IN_SET_MAX images, the read
+    gives the IN-set pushed into the scan (row-group stats skip unmatched
+    stripes) and the decode carries the window lists in its closure: the
+    read-back is that read plus one scan-and-decode pass.  Above it, the
+    windows are checkpointed and the read-back is a bounded broadcast
+    left-semi join plus a broadcast join of the window lists.
+    ``max_images`` guards both.  Either way one mapInPandas decodes each
+    matched payload once for all its windows
+    (:func:`~spatialindex_spark.sources.imaging.decode_windows`), so bytes
+    cross the Arrow boundary once per image, not once per window.
     """
+    cols = windows.columns
+    names = cols + [f.split()[0] for f in measured.split(",")]
+    schema = ", ".join(f"`{c}` {t}" for c, t in windows.dtypes) \
+        + ", " + measured
+
     def grouped(w: DataFrame) -> DataFrame:
-        # windows PER IMAGE (see forced_photometry): bytes cross the Arrow
-        # boundary once per image, not once per window, and decode_windows
-        # shares the decompress / dequant across the image's windows
         return w.groupBy(image_id).agg(F.expr(
-            "collect_list(struct(target_id AS _t, x0, x1, y0, y1)) AS _wins"))
+            f"collect_list(struct({', '.join(f'`{c}`' for c in cols)}))"
+            " AS _wins"))
 
     isel = images.select(image_id, bytes_col, "w", "h", "fmt")
     head = grouped(windows).limit(IN_SET_MAX + 1).collect()
     if len(head) <= IN_SET_MAX:
-        wins_by_id = {r[0]: [tuple(w) for w in r[1]] for r in head}
-        matched = _in_set_filter(isel, list(wins_by_id), image_id,
-                                 max_images, "cutout_pixels")
+        _check_max_images(len(head), max_images, what)
+        wins_by_id = {r[0]: [w.asDict() for w in r[1]] for r in head}
+        matched = isel.filter(in_predicate(image_id, list(wins_by_id)))
 
         def wins_of(b: pd.DataFrame):
             return [wins_by_id[i] for i in b[image_id]]
@@ -435,61 +388,51 @@ def cutout_pixels(images: DataFrame, windows: DataFrame,
         windows = windows.localCheckpoint(eager=True)
         matched = (_semi_join_filter(
                        isel, windows.select(image_id).distinct(), image_id,
-                       max_images, "cutout_pixels")
+                       max_images, what)
                    .join(F.broadcast(grouped(windows)), image_id))
 
         def wins_of(b: pd.DataFrame):
-            return [[(d["_t"], d["x0"], d["x1"], d["y0"], d["y1"])
-                     for d in ws] for ws in b["_wins"]]
-
-    schema = (f"{image_id} string, target_id long, x0 int, x1 int, "
-              "y0 int, y1 int, cut_w int, cut_h int, data binary, "
-              "mean_val double")
-    id_dtype = dict(windows.dtypes).get(image_id, "string")
-    if id_dtype != "string":
-        schema = schema.replace(f"{image_id} string",
-                                f"{image_id} {id_dtype}", 1)
-    tid_dtype = dict(windows.dtypes).get("target_id", "bigint")
-    if tid_dtype != "bigint":
-        schema = schema.replace("target_id long", f"target_id {tid_dtype}", 1)
+            return b["_wins"]
 
     from ..sources import imaging
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # window-only decode (see forced_photometry.run): bit-identical
-        # pixels, but raw/z skip the full-image copy, dct runs the IDCT
-        # only on blocks under each window, and each payload is
-        # decompressed once for ALL its windows
         for b in batches:
-            wa, ha = b["w"].to_numpy(), b["h"].to_numpy()
-            fmta, bytesa = b["fmt"].to_numpy(), b[bytes_col].to_numpy()
-            ids = b[image_id].to_numpy()
-            out = {image_id: [], "target_id": [], "x0": [], "x1": [],
-                   "y0": [], "y1": [], "cut_w": [], "cut_h": [],
-                   "data": [], "mean_val": []}
-            for i, wins in enumerate(wins_of(b)):
-                coords = [(int(x0), int(x1), int(y0), int(y1))
-                          for _, x0, x1, y0, y1 in wins]
+            rows = []
+            for data, w, h, fmt, wins in zip(b[bytes_col], b["w"], b["h"],
+                                             b["fmt"], wins_of(b)):
                 cuts = imaging.decode_windows(
-                    bytesa[i], int(wa[i]), int(ha[i]), str(fmta[i]),
-                    coords, channel=None)
-                for (t, *_), (x0, x1, y0, y1), cut in zip(wins, coords,
-                                                          cuts):
-                    out[image_id].append(ids[i])
-                    out["target_id"].append(t)
-                    out["x0"].append(x0)
-                    out["x1"].append(x1)
-                    out["y0"].append(y0)
-                    out["y1"].append(y1)
-                    out["cut_w"].append(np.int32(cut.shape[1]))
-                    out["cut_h"].append(np.int32(cut.shape[0]))
-                    out["data"].append(cut.astype(np.uint8).tobytes())
-                    out["mean_val"].append(float(cut.mean()) if cut.size
-                                           else float("nan"))
-            if out[image_id]:  # empty object-dtype frames break the
-                yield pd.DataFrame(out)  # Arrow cast to the int schema
+                    data, int(w), int(h), str(fmt),
+                    [(d["x0"], d["x1"], d["y0"], d["y1"]) for d in wins],
+                    channel)
+                rows += [[*d.values(), *measure(d, cut)]
+                         for d, cut in zip(wins, cuts)]
+            if rows:  # empty object-dtype frames break the Arrow cast
+                yield pd.DataFrame(rows, columns=names)
 
     return matched.mapInPandas(run, schema)
+
+
+def cutout_pixels(images: DataFrame, windows: DataFrame,
+                  image_id: str = "image_id",
+                  bytes_col: str = "bytes",
+                  max_images: int = 1_000_000) -> DataFrame:
+    """Extract the pixel windows computed by :func:`cutout_windows`
+    through :func:`pixel_readback` (one bounded driver read, then one
+    scan-and-decode pass with the IN-set pushed into the scan).
+
+    ``images`` must carry (image_id, bytes, w, h, fmt).  Output pixels
+    are re-encoded as raw uint8: image_id, target_id, x0/x1/y0/y1,
+    cut_w, cut_h, data (raw bytes), mean_val.
+    """
+    def cut(win, c):
+        return (c.shape[1], c.shape[0], c.astype(np.uint8).tobytes(),
+                float(c.mean()) if c.size else float("nan"))
+
+    return pixel_readback(
+        images, windows.select(image_id, "target_id", "x0", "x1", "y0", "y1"),
+        None, cut, "cut_w int, cut_h int, data binary, mean_val double",
+        image_id, bytes_col, max_images, "cutout_pixels")
 
 
 def tile_grid_radec(tra: float, tdec: float, tile_px: int,
@@ -749,10 +692,7 @@ def coadd_mosaic(images: DataFrame, level: int, tile_px: int,
     # half-diagonal disc can reach the tile grid's bounding disc
     half_diag = (F.sqrt(F.col("w") * F.col("w") + F.col("h") * F.col("h"))
                  * F.lit(math.radians(scale_deg_px) / 2.0))
-    rad = F.radians
-    dot = (F.cos(rad("dec")) * F.cos(rad(F.col("_tdec")))
-           * F.cos(rad("ra") - rad(F.col("_tra")))
-           + F.sin(rad("dec")) * F.sin(rad(F.col("_tdec"))))
+    dot = F.expr(_dot_sql("ra", "dec", "_tra", "_tdec"))
     bound = F.cos(F.least(F.lit(math.pi),
                           half_diag + F.lit(tile_rad * math.sqrt(2.0))))
     cand = cand.filter(dot >= bound)

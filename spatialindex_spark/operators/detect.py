@@ -99,6 +99,37 @@ def detect_sources(images: DataFrame, scale_deg_px: float,
         F.round(ra, 6).alias("src_ra"), F.round(dec, 6).alias("src_dec"))
 
 
+def _target_windows(targets: DataFrame, images: DataFrame,
+                    scale_deg_px: float, size_px: int, target_id: str,
+                    image_id: str, window_kwargs: dict):
+    """The ``size_px`` cutout windows of every (target, image) pair
+    (:func:`~spatialindex_spark.operators.cutouts.cutout_windows`), and
+    ``images`` narrowed for the pixel read-back by
+    :func:`~spatialindex_spark.operators.cutouts.target_cell_ranges` when
+    the ingest cell column, its level and max_dim_px are declared (the
+    inputs the pairing used).  Above IN_SET_MAX matched ids the
+    read-back's id filter is a semi-join that cannot prune the scan by
+    itself; the ranges keep the bytes column READ only in matched
+    neighborhoods at any match count (measured at 1M images / 22k
+    matched: the unpruned semi-join scan read every bytes row)."""
+    from .cutouts import (cutout_windows, pairing_radius_deg,
+                          target_cell_ranges)
+
+    win = cutout_windows(targets, images, scale_deg_px, size_px,
+                         target_id=target_id, image_id=image_id,
+                         **window_kwargs)
+    cell_col = window_kwargs.get("cell_col")
+    cell_level = window_kwargs.get("cell_level")
+    mdp = window_kwargs.get("max_dim_px")
+    if cell_col in images.columns and cell_level is not None \
+            and mdp is not None:
+        pred = target_cell_ranges(targets, pairing_radius_deg(
+            scale_deg_px, mdp), cell_col, cell_level)
+        if pred is not None:
+            images = images.filter(pred)
+    return win, images
+
+
 def forced_photometry(targets: DataFrame, images: DataFrame,
                       scale_deg_px: float, aperture_px: int,
                       channel: int = 0,
@@ -117,92 +148,28 @@ def forced_photometry(targets: DataFrame, images: DataFrame,
     Scale shape (100 TB): the (target, image) pairing is
     :func:`~spatialindex_spark.operators.cutouts.cutout_windows` — the
     image side is metadata-only (bytes never enter the window plan) and
-    rides crossmatch's broadcast ring map when an ingest-time cell
-    column is supplied. Pixels are read back ONLY for matched images
-    (distinct-id IN-set pushed into the parquet scan, same pattern as
-    cutout_pixels) and each flux is produced inside one Arrow batch —
-    the shuffle carries window coordinates and 8-byte sums, never
-    pixels.
+    the targets get their ring-1 disc cells from one pandas UDF. Pixels
+    are read back ONLY for matched images through
+    :func:`~spatialindex_spark.operators.cutouts.pixel_readback`, the
+    read-back of cutout_pixels (one bounded driver read, the distinct-id
+    IN-set pushed into the parquet scan, one decode per image for all
+    its windows); each flux is produced inside one Arrow batch, so no
+    shuffle ever carries pixels.
 
     Output: target_id, image_id, x0/x1/y0/y1, complete, npix,
     flux (sum over ``channel``, exact int64).
     """
-    from .cutouts import cutout_windows
-    from ..sources import imaging
+    from .cutouts import pixel_readback
 
-    win = cutout_windows(targets, images, scale_deg_px,
-                         2 * aperture_px + 1, target_id=target_id,
-                         image_id=image_id, **window_kwargs)
-    # materialize the pairing ONCE: wsel feeds the matched-id driver
-    # reads, the semi-join/IN-set build AND the broadcast join below —
-    # without this the crossmatch recomputes ~5x per call (measured
-    # ~3 s each at 1M images). Size = the pairing itself (targets x
-    # overlapping images — the operator's own working set, which every
-    # path must compute at least once to count matched ids; stored
-    # MEMORY_AND_DISK). The max_images guard bounds DISTINCT matched
-    # images downstream, not these pairing rows.
-    wsel = win.select(target_id, image_id, "x0", "x1", "y0", "y1",
-                      "complete").localCheckpoint(eager=True)
-    from .cutouts import readback_images
-    # group the windows PER IMAGE before they meet the payload (guide
-    # §4.2 / §2.3): a target list averages several windows per matched
-    # image, and the old per-(target, image) broadcast join duplicated
-    # every image's bytes once per window into the Arrow boundary and
-    # re-decompressed the payload per window. One row per image ships
-    # the bytes once and decode_windows shares the decompress/dequant
-    # across its windows; flux/npix are bit-identical (same per-window
-    # block math).
-    wgrp = (wsel.groupBy(image_id)
-            .agg(F.collect_list(F.struct(
-                F.col(target_id).alias("_t"), "x0", "x1", "y0", "y1",
-                "complete")).alias("_wins")))
-    matched = (readback_images(images, targets, scale_deg_px,
-                               window_kwargs, image_id, bytes_col,
-                               wsel, max_images, "forced_photometry")
-               .join(F.broadcast(wgrp), image_id))
-
-    id_dtype = dict(matched.dtypes)[image_id]
-    tid_dtype = dict(wsel.dtypes)[target_id]
-    schema = (f"{target_id} {tid_dtype}, {image_id} {id_dtype}, "
-              "x0 int, x1 int, y0 int, y1 int, complete boolean, "
-              "npix long, flux long")
-
-    def run(batches):
-        # window-only decode (guide §4.2 / §1.2 per-task work): the flux
-        # needs a (2a+1)^2 slice, so full-image decode — per-row python
-        # dict packing included — was pure overhead. decode_windows skips
-        # the copy/reshape for raw/z and runs the IDCT only on the 8x8
-        # blocks under each window for dct (bit-identical pixels, parity-
-        # tested), decompressing each payload once for ALL its windows.
-        for b in batches:
-            wa, ha = b["w"].to_numpy(), b["h"].to_numpy()
-            fmta, bytesa = b["fmt"].to_numpy(), b[bytes_col].to_numpy()
-            winsa = b["_wins"].to_numpy()
-            ids = b[image_id].to_numpy()
-            out = {target_id: [], image_id: [], "x0": [], "x1": [],
-                   "y0": [], "y1": [], "complete": [], "npix": [],
-                   "flux": []}
-            for i in range(len(b)):
-                wins = winsa[i]
-                coords = [(int(d["x0"]), int(d["x1"]),
-                           int(d["y0"]), int(d["y1"])) for d in wins]
-                cuts = imaging.decode_windows(
-                    bytesa[i], int(wa[i]), int(ha[i]), str(fmta[i]),
-                    coords, channel)
-                for d, (x0, x1, y0, y1), cut in zip(wins, coords, cuts):
-                    out[target_id].append(d["_t"])
-                    out[image_id].append(ids[i])
-                    out["x0"].append(x0)
-                    out["x1"].append(x1)
-                    out["y0"].append(y0)
-                    out["y1"].append(y1)
-                    out["complete"].append(bool(d["complete"]))
-                    out["npix"].append(cut.size)
-                    out["flux"].append(int(cut.astype(np.int64).sum()))
-            if out[image_id]:  # empty object-dtype frames break the
-                yield pd.DataFrame(out)  # Arrow cast to the int schema
-
-    return matched.mapInPandas(run, schema)
+    win, imgs = _target_windows(targets, images, scale_deg_px,
+                                2 * aperture_px + 1, target_id, image_id,
+                                window_kwargs)
+    return pixel_readback(
+        imgs, win.select(target_id, image_id, "x0", "x1", "y0", "y1",
+                         "complete"),
+        channel, lambda w, cut: (cut.size, int(cut.astype(np.int64).sum())),
+        "npix long, flux long", image_id, bytes_col, max_images,
+        "forced_photometry")
 
 
 def diff_image(epoch_a: DataFrame, epoch_b: DataFrame,
@@ -371,9 +338,9 @@ def source_moments(targets: DataFrame, images: DataFrame,
     stage of a detection pipeline (ellipticity/size from cxx/cyy/cxy).
 
     Scale shape: identical to :func:`forced_photometry` (metadata-only
-    window pairing via cutout_windows, IN-set pushdown for the pixel
-    read-back, one Arrow batch per measurement) — the shuffle carries
-    six 8-byte sums per (target, image), never pixels.
+    window pairing via cutout_windows, the pixel read-back of
+    cutout_pixels with one decode per image) — no shuffle carries
+    pixels.
 
     Output: the six EXACT int64 sufficient statistics (s_v, s_vx, s_vy,
     s_vxx, s_vxy, s_vyy over absolute pixel indices) plus the derived
@@ -381,59 +348,25 @@ def source_moments(targets: DataFrame, images: DataFrame,
     zero — so the whole measurement is SQL-replayable over a
     formula-pixel payload (imaging.synth_image_photometric).
     """
-    from .cutouts import cutout_windows
-    from ..sources import imaging
+    from .cutouts import pixel_readback
 
-    win = cutout_windows(targets, images, scale_deg_px,
-                         2 * aperture_px + 1, target_id=target_id,
-                         image_id=image_id, **window_kwargs)
-    # materialize the pairing ONCE: wsel feeds the matched-id driver
-    # reads, the semi-join/IN-set build AND the broadcast join below —
-    # without this the crossmatch recomputes ~5x per call (measured
-    # ~3 s each at 1M images). Size = the pairing itself (targets x
-    # overlapping images — the operator's own working set, which every
-    # path must compute at least once to count matched ids; stored
-    # MEMORY_AND_DISK). The max_images guard bounds DISTINCT matched
-    # images downstream, not these pairing rows.
-    wsel = win.select(target_id, image_id, "x0", "x1", "y0", "y1",
-                      "complete").localCheckpoint(eager=True)
-    from .cutouts import readback_images
-    matched = (readback_images(images, targets, scale_deg_px,
-                               window_kwargs, image_id, bytes_col,
-                               wsel, max_images, "source_moments")
-               .join(F.broadcast(wsel), image_id))
-
-    id_dtype = dict(matched.dtypes)[image_id]
-    tid_dtype = dict(matched.dtypes)[target_id]
+    win, imgs = _target_windows(targets, images, scale_deg_px,
+                                2 * aperture_px + 1, target_id, image_id,
+                                window_kwargs)
     sums = ("s_v", "s_vx", "s_vy", "s_vxx", "s_vxy", "s_vyy")
-    schema = (f"{target_id} {tid_dtype}, {image_id} {id_dtype}, "
-              "complete boolean, " + ", ".join(f"{s} long" for s in sums))
 
-    def run(batches):
-        for b in batches:
-            out = {k: [] for k in (target_id, image_id, "complete",
-                                   *sums)}
-            for r in b.itertuples(index=False):
-                d = r._asdict()
-                img = imaging.decode(d[bytes_col], int(d["w"]),
-                                     int(d["h"]), str(d["fmt"]))
-                x0, x1 = int(d["x0"]), int(d["x1"])
-                y0, y1 = int(d["y0"]), int(d["y1"])
-                v = img[y0:y1, x0:x1, channel].astype(np.int64)
-                xs = np.arange(x0, x1, dtype=np.int64)[None, :]
-                ys = np.arange(y0, y1, dtype=np.int64)[:, None]
-                out[target_id].append(d[target_id])
-                out[image_id].append(d[image_id])
-                out["complete"].append(bool(d["complete"]))
-                out["s_v"].append(int(v.sum()))
-                out["s_vx"].append(int((v * xs).sum()))
-                out["s_vy"].append(int((v * ys).sum()))
-                out["s_vxx"].append(int((v * xs * xs).sum()))
-                out["s_vxy"].append(int((v * xs * ys).sum()))
-                out["s_vyy"].append(int((v * ys * ys).sum()))
-            yield pd.DataFrame(out)
+    def moments(w, cut):
+        v = cut.astype(np.int64)
+        xs = np.arange(w["x0"], w["x1"], dtype=np.int64)[None, :]
+        ys = np.arange(w["y0"], w["y1"], dtype=np.int64)[:, None]
+        return [int(t.sum()) for t in (v, v * xs, v * ys, v * xs * xs,
+                                       v * xs * ys, v * ys * ys)]
 
-    m = matched.mapInPandas(run, schema)
+    m = pixel_readback(
+        imgs, win.select(target_id, image_id, "x0", "x1", "y0", "y1",
+                         "complete"),
+        channel, moments, ", ".join(f"{s} long" for s in sums), image_id,
+        bytes_col, max_images, "source_moments")
     sv = F.col("s_v")
     xb = F.col("s_vx") / sv
     yb = F.col("s_vy") / sv
@@ -469,61 +402,46 @@ def annulus_photometry(targets: DataFrame, images: DataFrame,
         bkg_mean = (flux_out - flux_in) / (n_out - n_in)
         net_flux = flux_ap - n_ap * bkg_mean       (NULL if annulus empty)
 
-    One cutout_windows pairing at the OUTER size and ONE decode per
-    (target, image): all three nested windows are sliced from the same
-    frame inside a single Arrow batch, so the scale shape is exactly
-    forced_photometry's with three 8-byte sums instead of one. All
-    windows derive from floor(round(px, 6)) — the 1e-6-rounded pixel
-    coordinate both engines share — so the oracle replays the window
-    arithmetic, the three integer sums, and the subtraction tree in SQL.
+    One cutout_windows pairing at the OUTER size plus a 1-px margin, read
+    back like forced_photometry (one decode per image for all its
+    windows): all three nested windows are sliced from the same margin
+    window, so the scale shape is exactly forced_photometry's with three
+    pairs of sums instead of one. All windows derive from
+    floor(round(px, 6)) — the 1e-6-rounded pixel coordinate both engines
+    share — so the oracle replays the window arithmetic, the three
+    integer sums, and the subtraction tree in SQL.
     """
     if not (0 <= aperture_px <= annulus_in_px < annulus_out_px):
         raise ValueError("need 0 <= aperture <= annulus_in < annulus_out")
-    from .cutouts import cutout_windows
-    from ..sources import imaging
+    from .cutouts import pixel_readback
 
-    win = cutout_windows(targets, images, scale_deg_px,
-                         2 * annulus_out_px + 1, target_id=target_id,
-                         image_id=image_id, **window_kwargs)
-    # one materialization for the same reason as forced_photometry
-    wsel = win.select(target_id, image_id, "px", "py") \
-              .localCheckpoint(eager=True)
-    from .cutouts import readback_images
-    matched = (readback_images(images, targets, scale_deg_px,
-                               window_kwargs, image_id, bytes_col,
-                               wsel, max_images, "annulus_photometry")
-               .join(F.broadcast(wsel), image_id))
-
-    id_dtype = dict(matched.dtypes)[image_id]
-    tid_dtype = dict(matched.dtypes)[target_id]
+    # the outer window plus a 1-px margin: floor(round(px, 6)) exceeds
+    # the floor(px) cutout_windows centers on by at most 1, so the
+    # margin holds all three windows
+    win, imgs = _target_windows(targets, images, scale_deg_px,
+                                2 * annulus_out_px + 3, target_id, image_id,
+                                window_kwargs)
     cols = ("n_ap", "flux_ap", "n_in", "flux_in", "n_out", "flux_out")
-    schema = (f"{target_id} {tid_dtype}, {image_id} {id_dtype}, "
-              + ", ".join(f"{c} long" for c in cols))
     radii = (aperture_px, annulus_in_px, annulus_out_px)
 
-    def run(batches):
-        for b in batches:
-            out = {k: [] for k in (target_id, image_id, *cols)}
-            for r in b.itertuples(index=False):
-                d = r._asdict()
-                img = imaging.decode(d[bytes_col], int(d["w"]),
-                                     int(d["h"]), str(d["fmt"]))
-                w, h = int(d["w"]), int(d["h"])
-                fx = int(np.floor(float(d["px"])))
-                fy = int(np.floor(float(d["py"])))
-                out[target_id].append(d[target_id])
-                out[image_id].append(d[image_id])
-                for rad, nk, fk in zip(radii, cols[::2], cols[1::2]):
-                    x0 = max(0, fx - rad)
-                    x1 = min(w, fx - rad + 2 * rad + 1)
-                    y0 = max(0, fy - rad)
-                    y1 = min(h, fy - rad + 2 * rad + 1)
-                    cut = img[y0:y1, x0:x1, channel].astype(np.int64)
-                    out[nk].append(int(cut.size))
-                    out[fk].append(int(cut.sum()))
-            yield pd.DataFrame(out)
+    def rings(w, cut):
+        # absolute windows clipped to the cut, which is the margin window
+        # clipped to the image: the same as clipping them to the image
+        fx, fy = math.floor(w["px"]), math.floor(w["py"])
+        out = []
+        for r in radii:
+            c = cut[max(fy - r, w["y0"]) - w["y0"]:
+                    min(fy + r + 1, w["y1"]) - w["y0"],
+                    max(fx - r, w["x0"]) - w["x0"]:
+                    min(fx + r + 1, w["x1"]) - w["x0"]]
+            out += [c.size, int(c.astype(np.int64).sum())]
+        return out
 
-    m = matched.mapInPandas(run, schema)
+    m = pixel_readback(
+        imgs, win.select(target_id, image_id, "x0", "x1", "y0", "y1", "px",
+                         "py"),
+        channel, rings, ", ".join(f"{c} long" for c in cols), image_id,
+        bytes_col, max_images, "annulus_photometry")
     n_bkg = F.col("n_out") - F.col("n_in")
     s_bkg = F.col("flux_out") - F.col("flux_in")
     bkg = s_bkg / n_bkg

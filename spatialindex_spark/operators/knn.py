@@ -33,7 +33,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..functions.geometry import RAD_PER_DEG
 from ..functions.healpix import disc_lists, hpx_id, safe_ring1_rad
-from .joins import hpx_cell_key, ring_explode
+from .joins import _dot_sql, hpx_cell_key, ring_explode
 
 #: per-rung row counts of the last knn_join call (introspection only)
 _DECISIONS: dict = {}
@@ -124,12 +124,7 @@ def knn(queries: DataFrame, data: DataFrame, k: int,
 
         dk = data.withColumn("_mc", hpx_udf(lvl)(F.col(dr), F.col(dd)))
 
-    rad = F.radians
-    dot = (
-        F.cos(rad(F.col("_qdec"))) * F.cos(rad(F.col(dd)))
-        * F.cos(rad(F.col("_qra")) - rad(F.col(dr)))
-        + F.sin(rad(F.col("_qdec"))) * F.sin(rad(F.col(dd)))
-    )
+    dot = F.expr(_dot_sql("_qra", "_qdec", dr, dd))
 
     def probe(qdf: DataFrame, r_lo: int, r_hi: int,
               at_level: int) -> DataFrame:

@@ -98,8 +98,7 @@ def fingerprint_udf(k: int = 8):
     return _udf
 
 
-def with_repetition(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def with_repetition(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Repetition quality metrics (the public Gopher-rule family, Rae et
     al. 2021 §A1.1; count-fraction variants):
 
@@ -125,7 +124,18 @@ def with_repetition(df: DataFrame, text_col: str = "text",
       alone.
 
     Same strings, same counts — output identical (sf0.1 oracle green);
-    the sf0.1 gate query dropped 14.0 -> ~1 s."""
+    the sf0.1 gate query dropped 14.0 -> ~1 s.
+
+    Every row is scored on its own text: rows that share a document id
+    are not combined, so duplicate ids are scored row by row. The
+    working columns ``_rep_words``, ``_rep_g5`` and ``_rep_g2s`` are
+    reserved; an input column of one of those names (case-insensitive)
+    raises ``ValueError``."""
+    work = ("_rep_words", "_rep_g5", "_rep_g2s")
+    clash = sorted({c.lower() for c in df.columns} & set(work))
+    if clash:
+        raise ValueError(f"with_repetition: input columns {clash} collide "
+                         "with its reserved working columns")
     t = F.col(text_col)
     lines = F.split(t, "\n")
     nl = F.size(lines)
@@ -174,7 +184,7 @@ def with_repetition(df: DataFrame, text_col: str = "text",
                "top_2gram_frac": F.when(n2 > 0,
                                         top2_cnt / n2).otherwise(0.0),
            })
-           .drop("_rep_words", "_rep_g5", "_rep_g2s"))
+           .drop(*work))
     ok = ((F.col("dup_line_frac") <= 0.30)
           & (F.col("dup_5gram_frac") <= 0.30)
           & (F.col("top_2gram_frac") <= 0.20))

@@ -21,14 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .joins import crossmatch
-
-
-def _dot(lrc, ldc, rrc, rdc):
-    rad = F.radians
-    return (F.cos(rad(F.col(ldc))) * F.cos(rad(F.col(rdc)))
-            * F.cos(rad(F.col(lrc)) - rad(F.col(rrc)))
-            + F.sin(rad(F.col(ldc))) * F.sin(rad(F.col(rdc))))
+from .joins import _dot_sql, crossmatch
 
 
 def tracklets(det: DataFrame, max_speed_deg_day: float, dt_max_days: float,
@@ -62,7 +55,7 @@ def tracklets(det: DataFrame, max_speed_deg_day: float, dt_max_days: float,
     pairs = crossmatch(det, det, reach, **kwargs)
     sl, sr = suffixes
     dt = F.col(time_col + sr) - F.col(time_col + sl)
-    dot = _dot(lr + sl, ld + sl, lr + sr, ld + sr)
+    dot = F.expr(_dot_sql(lr + sl, ld + sl, lr + sr, ld + sr))
     # dot >= cos(speed * dt)  <=>  sep <= speed * dt  (both sides <= 180)
     speed_ok = dot >= F.cos(F.radians(
         F.least(F.lit(180.0), F.lit(max_speed_deg_day) * dt)))

@@ -159,8 +159,10 @@ class IcebergLiteTable:
         ordering and would otherwise re-sort by bucket alone, destroying
         the cell clustering that row-group pruning needs. Yields the dir;
         whatever the caller did not rename out of it is removed on exit,
-        also when the caller raises."""
-        stage = os.path.join(self.path, f".stage-{uuid.uuid4().hex}")
+        also when the caller raises. The name has no leading dot or
+        underscore: Spark's path filter hides such names, so the stats
+        read of a ``.stage-`` dir logged "All paths were ignored"."""
+        stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
         try:
             (df.sortWithinPartitions("bucket", self.cell_col)
                .write.mode("overwrite").partitionBy("bucket").parquet(stage))
@@ -266,7 +268,7 @@ class IcebergLiteTable:
             if os.path.isdir(self.path):
                 for d in os.listdir(self.path):
                     p = os.path.join(self.path, d)
-                    if d.startswith(".stage-") and time.time() \
+                    if d.startswith("stage-") and time.time() \
                             - os.path.getmtime(p) > self.STALE_STAGE_SECS:
                         shutil.rmtree(p, ignore_errors=True)
             todo = [b for b in range(self.num_buckets) if b not in done]

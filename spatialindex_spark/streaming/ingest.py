@@ -228,7 +228,7 @@ def stream_crossmatch(stream: DataFrame, catalog: DataFrame,
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (hpx_cell_key, ring_cover_level,
+    from ..operators.joins import (_dot_sql, hpx_cell_key, ring_cover_level,
                                    ring_explode)
 
     # Cap at JVM_RING_MAX_LEVEL like batch crossmatch, so the stream side
@@ -247,10 +247,7 @@ def stream_crossmatch(stream: DataFrame, catalog: DataFrame,
            .drop(cell_col))   # both sides carry it; avoid ambiguous output
     pairs = ring_explode(stream, key, lvl, rings).join(cat, "_mc").drop("_mc")
     cosr = math.cos(radius_deg * RAD_PER_DEG)
-    rad = F.radians
-    dot = (F.cos(rad(F.col(dec_col))) * F.cos(rad(F.col("cat_dec")))
-           * F.cos(rad(F.col(ra_col)) - rad(F.col("cat_ra")))
-           + F.sin(rad(F.col(dec_col))) * F.sin(rad(F.col("cat_dec"))))
+    dot = F.expr(_dot_sql(ra_col, dec_col, "cat_ra", "cat_dec"))
     return pairs.filter(dot >= F.lit(cosr))
 
 
@@ -276,7 +273,7 @@ def stream_transients(stream: DataFrame, catalog: DataFrame,
     import math
 
     from ..functions.geometry import RAD_PER_DEG
-    from ..operators.joins import (hpx_cell_key, ring_cover_level,
+    from ..operators.joins import (_dot_sql, hpx_cell_key, ring_cover_level,
                                    ring_explode)
 
     lvl, rings = ring_cover_level(radius_deg, cell_level)
@@ -285,10 +282,7 @@ def stream_transients(stream: DataFrame, catalog: DataFrame,
                                     F.col(dec_col).alias("_cdec")])
     s = stream.withColumn("_smc", hpx_cell_key(cell_col, cell_level, lvl))
     cosr = math.cos(radius_deg * RAD_PER_DEG)
-    rad = F.radians
-    dot = (F.cos(rad(s[dec_col])) * F.cos(rad(cat["_cdec"]))
-           * F.cos(rad(s[ra_col]) - rad(cat["_cra"]))
-           + F.sin(rad(s[dec_col])) * F.sin(rad(cat["_cdec"])))
+    dot = F.expr(_dot_sql(ra_col, dec_col, "_cra", "_cdec"))
     cond = (s["_smc"] == cat["_mc"]) & (dot >= F.lit(cosr))
     return s.join(cat, cond, "left_anti").drop("_smc")
 

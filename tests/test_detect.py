@@ -6,6 +6,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spatialindex_spark.operators.cutouts import tan_pix_np
@@ -341,6 +342,230 @@ def test_annulus_photometry_background_subtraction(spark):
             sums[nk], sums[fk] = cut.size, int(cut.sum())
         for k, v in sums.items():
             assert getattr(g, k) == v, (t_id, i_id, k)
-    import pytest
     with pytest.raises(ValueError):
         annulus_photometry(targets, images, SCALE, 3, 2, 4)
+
+
+# ---------------------------------------------------------------------------
+# the shared pixel read-back: cutouts and the three photometry operators
+
+AP = 2
+RADII = (1, 2, 4)
+READBACK_FIELDS = {
+    "cutout": ("x0", "x1", "y0", "y1", "data"),
+    "forced": ("x0", "x1", "y0", "y1", "npix", "flux"),
+    "moments": ("s_v", "s_vx", "s_vy", "s_vxx", "s_vxy", "s_vyy"),
+    "annulus": ("n_ap", "flux_ap", "n_in", "flux_in", "n_out", "flux_out"),
+}
+
+
+def _readback_op(op, targets, images, **kw):
+    from spatialindex_spark.operators.cutouts import (cutout_pixels,
+                                                      cutout_windows)
+    from spatialindex_spark.operators.detect import (annulus_photometry,
+                                                     forced_photometry,
+                                                     source_moments)
+
+    if op == "cutout":
+        cap = kw.pop("max_images", 1_000_000)
+        return cutout_pixels(images, cutout_windows(
+            targets, images.drop("bytes", "fmt"), SCALE, 2 * AP + 1, **kw),
+            max_images=cap)
+    if op == "forced":
+        return forced_photometry(targets, images, SCALE, AP, **kw)
+    if op == "moments":
+        return source_moments(targets, images, SCALE, AP, **kw)
+    return annulus_photometry(targets, images, SCALE, *RADII, **kw)
+
+
+def _ra_at_px(r, px_goal):
+    """RA of the point at the image's own dec whose px is ``px_goal``
+    (px falls as RA grows), by bisection to double precision."""
+    span = r.w * SCALE / math.cos(math.radians(r.dec))
+    lo, hi = r.ra - span, r.ra + span
+    for _ in range(200):
+        mid = (lo + hi) / 2
+        px = tan_pix_np(mid, r.dec, r.ra, r.dec, r.w, r.h, SCALE)[0]
+        lo, hi = (mid, hi) if px > px_goal else (lo, mid)
+    return lo
+
+
+def _readback_tables(spark, n_img=24, seed=41):
+    """Photometric raw/z/dct payloads and targets per image: its center,
+    a near-corner point (clipped windows), a point whose px rounds UP to
+    the next integer at 1e-6 (floor(round(px, 6)) = floor(px) + 1, the
+    annulus margin case), a second target under the center's id
+    (duplicate ids) and a miss."""
+    rng = np.random.default_rng(seed)
+    meta = pd.DataFrame({
+        "image_id": np.arange(n_img, dtype=np.int64),
+        "ra": rng.uniform(10, 350, n_img),
+        "dec": rng.uniform(-60, 60, n_img),
+        "w": rng.choice([16, 32], n_img).astype(np.int32),
+        "h": rng.choice([16, 32], n_img).astype(np.int32),
+    })
+    rows, pixels, tg = [], {}, []
+    for r in meta.itertuples(index=False):
+        i = int(r.image_id)
+        fmt = ("raw", "z", "dct")[i % 3]
+        data = imaging.encode(imaging.synth_image_photometric(
+            i, int(r.w), int(r.h)), fmt)
+        pixels[i] = imaging.decode(data, int(r.w), int(r.h), fmt)
+        rows.append((i, float(r.ra), float(r.dec), int(r.w), int(r.h), fmt,
+                     data))
+        tg += [(10 * i, float(r.ra), float(r.dec)),
+               (10 * i + 1, float(r.ra + (r.w / 2 - 0.6) * SCALE),
+                float(r.dec + (r.h / 2 - 0.6) * SCALE)),
+               (10 * i + 2, _ra_at_px(r, r.w // 2 + 3 - 2e-7), float(r.dec)),
+               (10 * i, float(r.ra - 1.3 * SCALE), float(r.dec)),
+               (10 * i + 3, float((r.ra + 90) % 360), float(-r.dec))]
+    images = spark.createDataFrame(
+        rows, "image_id long, ra double, dec double, w int, h int, "
+              "fmt string, bytes binary")
+    return images, meta, pixels, tg
+
+
+def _readback_twin(op, tg, meta, pixels):
+    """Numpy twin of every operator's measured values per (target,
+    image) pair, from tan_pix_np and a full decode."""
+    out = []
+    for t, tra, tdec in tg:
+        for r in meta.itertuples(index=False):
+            w, h = int(r.w), int(r.h)
+            px, py, ok = tan_pix_np(tra, tdec, r.ra, r.dec, w, h, SCALE)
+            if not ok or not (0 <= px < w and 0 <= py < h):
+                continue
+            img = pixels[int(r.image_id)]
+
+            def crop(fx, fy, rad):
+                x0, x1 = max(0, fx - rad), min(w, fx + rad + 1)
+                y0, y1 = max(0, fy - rad), min(h, fy + rad + 1)
+                return (x0, x1, y0, y1), img[y0:y1, x0:x1]
+
+            if op == "annulus":
+                vals = []
+                for rad in RADII:
+                    _, c = crop(math.floor(round(px, 6)),
+                                math.floor(round(py, 6)), rad)
+                    v = c[:, :, 0].astype(np.int64)
+                    vals += [v.size, int(v.sum())]
+            else:
+                box, c = crop(math.floor(px), math.floor(py), AP)
+                v = c[:, :, 0].astype(np.int64)
+                if op == "cutout":
+                    vals = [*box, c.tobytes()]
+                elif op == "forced":
+                    vals = [*box, v.size, int(v.sum())]
+                else:
+                    xs = np.arange(box[0], box[1], dtype=np.int64)[None, :]
+                    ys = np.arange(box[2], box[3], dtype=np.int64)[:, None]
+                    vals = [int(m.sum()) for m in (
+                        v, v * xs, v * ys, v * xs * xs, v * xs * ys,
+                        v * ys * ys)]
+            out.append((t, int(r.image_id), *vals))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("op", ["cutout", "forced", "moments", "annulus"])
+def test_pixel_readback_branches_match_numpy_twins(spark, monkeypatch, op):
+    """Every pixel operator reads back through cutouts.pixel_readback:
+    the IN-set branch and the semi-join branch (IN_SET_MAX = 2) return
+    the same rows, row for row, and both equal the numpy twin over raw,
+    z and dct payloads — clipped windows, duplicate target ids (each
+    measured on its own) and the annulus rounding case included."""
+    import spatialindex_spark.operators.cutouts as C
+
+    images, meta, pixels, tg = _readback_tables(spark)
+    targets = spark.createDataFrame(
+        tg, "target_id long, ra double, dec double")
+    want = _readback_twin(op, tg, meta, pixels)
+    assert len({(t, i) for t, i, *_ in want}) < len(want)  # dup ids
+    assert any(math.floor(round(px, 6)) != math.floor(px)
+               for px in (tan_pix_np(ra, dec, r.ra, r.dec, r.w, r.h,
+                                     SCALE)[0]
+                          for (t, ra, dec), r in zip(tg[2::5],
+                                                     meta.itertuples())))
+
+    def snap(df):
+        rows = df.collect()
+        got = sorted((r.target_id, r.image_id,
+                      *(r[f] for f in READBACK_FIELDS[op])) for r in rows)
+        return sorted(tuple(r) for r in rows), got
+
+    inset = _readback_op(op, targets, images, max_dim_px=32)
+    assert "LeftSemi" not in inset._jdf.queryExecution().executedPlan() \
+        .toString()
+    base, got = snap(inset)
+    assert got == want and len(want) >= 3 * len(meta)
+
+    monkeypatch.setattr(C, "IN_SET_MAX", 2)
+    semi = _readback_op(op, targets, images, max_dim_px=32)
+    assert "LeftSemi" in semi._jdf.queryExecution().executedPlan().toString()
+    assert snap(semi)[0] == base
+    with pytest.raises(ValueError, match="matched >"):
+        _readback_op(op, targets, images, max_dim_px=32, max_images=3)
+
+
+@pytest.mark.parametrize("op", ["forced", "moments", "annulus"])
+def test_photometry_empty_targets_skip_readback_scan(spark, tmp_path, op):
+    """An empty target frame gives zero rows, and the read-back plans no
+    scan of the image table, with and without the cell-range pushdown."""
+    from spatialindex_spark.functions.udfs import hpx_udf
+
+    images, *_ = _readback_tables(spark, n_img=6)
+    p = str(tmp_path / "imgs")
+    images.withColumn("hpx7", hpx_udf(7)("ra", "dec")).write.parquet(p)
+    indexed = spark.read.parquet(p)
+    none = spark.createDataFrame([], "target_id long, ra double, dec double")
+    for kw in ({}, {"cell_col": "hpx7", "cell_level": 7}):
+        out = _readback_op(op, none, indexed, max_dim_px=32, **kw)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan and "Scan parquet" not in plan, plan
+        assert out.collect() == []
+
+
+def test_photometry_runs_no_more_jobs_than_cutout_pixels(spark):
+    """On the same targets, each photometry operator runs no more Spark
+    jobs than a cutout request (cutout_windows + cutout_pixels): they
+    share its one bounded driver read and one scan-and-decode pass.
+    With the ingest cell column declared they add only the jobs of
+    target_cell_ranges, their scan pre-filter."""
+    from spatialindex_spark.functions.udfs import hpx_udf
+    from spatialindex_spark.operators.cutouts import (pairing_radius_deg,
+                                                      target_cell_ranges)
+
+    rng = np.random.default_rng(5)
+    n = 300
+    ra, dec = rng.uniform(0, 30, n), rng.uniform(-15, 15, n)
+    fmts = [("raw", "z", "dct")[i % 3] for i in range(n)]
+    rows = [(i, float(ra[i]), float(dec[i]), 64, 64, fmts[i],
+             imaging.encode(imaging.synth_image_photometric(i, 64, 64),
+                            fmts[i])) for i in range(n)]
+    images = spark.createDataFrame(
+        rows, "image_id long, ra double, dec double, w int, h int, "
+              "fmt string, bytes binary") \
+        .withColumn("hpx7", hpx_udf(7)("ra", "dec")).localCheckpoint()
+    j = rng.integers(0, n, 900)
+    targets = spark.createDataFrame(pd.DataFrame({
+        "target_id": np.arange(900, dtype=np.int64),
+        "ra": ra[j] + rng.uniform(-0.5, 0.5, 900),
+        "dec": dec[j] + rng.uniform(-0.5, 0.5, 900)})).localCheckpoint()
+    sc = spark.sparkContext
+
+    def jobs(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cell = {"cell_col": "hpx7", "cell_level": 7}
+    ranges = jobs(lambda: target_cell_ranges(
+        targets, pairing_radius_deg(SCALE, 64), "hpx7", 7), "ranges")
+    for kw, extra in (({}, 0), (cell, ranges)):
+        counts = {op: jobs(lambda: _readback_op(
+            op, targets, images, max_dim_px=64, **kw).collect(),
+            f"{op}-{bool(kw)}") for op in READBACK_FIELDS}
+        for op in ("forced", "moments", "annulus"):
+            assert counts[op] <= counts["cutout"] + extra, (kw, counts)

@@ -17,7 +17,7 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 
 SUBSET = ["cone_htm", "cone_hpx", "polygon_htm", "region_join", "knn",
           "knn_join", "knn_join_auto", "exact_dedup", "token_count",
-          "events_window"]
+          "events_window", "cutout", "photometry"]
 
 
 @pytest.fixture(scope="module")

@@ -683,7 +683,7 @@ def test_iceberg_concurrent_resume_race(spark, tmp_path, monkeypatch):
             assert disk[b] == (row["row_count"], row["checksum"])
     # no stray staging dirs left behind
     assert not [d for d in os.listdir(str(tmp_path / "tab"))
-                if d.startswith(".stage-")]
+                if d.startswith("stage-")]
 
 
 def test_salting(spark, small_images):
@@ -1453,6 +1453,24 @@ def test_repetition_metrics(spark):
     assert out[2].top_2gram_frac > 0.4 and out[2].repetition_ok == 0
     assert out[3].repetition_ok == 1
     assert out[4].dup_line_frac == 0.0 and out[4].repetition_ok == 1
+
+
+def test_repetition_refuses_reserved_columns(spark):
+    """An input column named like one of with_repetition's working
+    columns (any case) raises instead of being overwritten and dropped;
+    duplicate ids are scored row by row."""
+    import pytest as _pytest
+
+    from spatialindex_spark.operators.text import with_repetition
+
+    df = spark.createDataFrame([(1, "a b a b"), (1, "x\nx")],
+                               "doc_id long, text string")
+    for name in ("_rep_words", "_rep_g5", "_REP_G2S"):
+        with _pytest.raises(ValueError, match="reserved"):
+            with_repetition(df.withColumn(name, F.lit(1)))
+    got = sorted((r.dup_line_frac, r.top_2gram_frac)
+                 for r in with_repetition(df).collect())
+    assert got == [(0.0, 2 / 3), (0.5, 1.0)]
 
 
 def test_region_join_s2_mode(spark, small_images):
